@@ -10,8 +10,11 @@ import org.apache.spark.sql.SparkSession
   * must key on the LAST total line (or the presence of `queries`),
   * not sum over all of them. The full line is ALSO written to
   * `SPARK_GRAFT_BENCH_OUT` (default `BENCH_full_latest.json` in the
-  * working dir) so the complete per-query medians/mins/samples maps
-  * survive the capture's tail truncation. A warm-up pass (table counts + one tiny query)
+  * working dir, `BENCH_floor_latest.json` for a floor run, so an
+  * ordinary run never overwrites the committed floor) so the complete
+  * per-query medians/mins/samples maps survive the capture's tail
+  * truncation; the file copy also carries `commit` (`git rev-parse
+  * HEAD`, null outside a checkout). A warm-up pass (table counts + one tiny query)
   * runs first so per-query numbers measure steady-state execution,
   * not JVM/codegen/file-index warm-up — whichever query ran first was
   * otherwise charged ~4 s of session startup. Each query is then timed
@@ -34,6 +37,24 @@ import org.apache.spark.sql.SparkSession
   * carries only `outliers_confirmed` (0 = every spike refuted).
   */
 object Bench {
+
+  /** Where the full line is persisted: floor runs get their own file. */
+  private[graft] def artifactFile(floorRun: Boolean): String =
+    sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
+      if (floorRun) "BENCH_floor_latest.json" else "BENCH_full_latest.json")
+
+  /** `git rev-parse HEAD` of the working dir; None outside a checkout. */
+  private[graft] def headCommit(): Option[String] =
+    scala.util.Try(scala.sys.process.Process(Seq("git", "rev-parse", "HEAD"))
+      .!!(scala.sys.process.ProcessLogger(_ => ())).trim).toOption
+      .filter(_.matches("[0-9a-f]{40}"))
+
+  /** The persisted copy of the full line: the same object plus the
+    * `commit` it measured (the stdout lines stay unstamped). */
+  private[graft] def stamped(fullLine: String, commit: Option[String]): String =
+    fullLine.stripSuffix("}") + ",\"commit\":" +
+      commit.fold("null")("\"" + _ + "\"") + "}"
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -275,12 +296,11 @@ object Bench {
     // truncation, so every run persists the complete medians/mins/
     // samples map where the next round can read it. Best-effort: a
     // read-only working dir must not fail the bench itself.
-    val outFile = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
-      "BENCH_full_latest.json")
+    val outFile = artifactFile(floorRun)
     // NonFatal only: an OutOfMemoryError mid-write must propagate, not
     // downgrade to a stderr warning (r15 ADVICE)
     try java.nio.file.Files.write(java.nio.file.Paths.get(outFile),
-      (fullLine + "\n").getBytes("UTF-8"))
+      (stamped(fullLine, headCommit()) + "\n").getBytes("UTF-8"))
     catch { case scala.util.control.NonFatal(e) =>
       System.err.println(s"[bench] cannot persist $outFile: ${e.getMessage}")
     }

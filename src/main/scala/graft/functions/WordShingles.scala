@@ -3,7 +3,9 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.UnaryExpression
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode,
+  FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -190,7 +192,9 @@ object WindowHashes {
   * `ceil(tokens/n) ≥ 1` hashes; an all-whitespace doc emits the one
   * hash of `""` (chunk 0 = the single empty token) exactly as
   * `transform(sequence(0, nChunks-1), i => xxhash64(array_join(
-  * slice(toks, i*n+1, n), " ")))` did.
+  * slice(toks, i*n+1, n), " ")))` did. A null doc emits `[]`, the
+  * composable form's `when(nChunks > 0, ..).otherwise(array())`
+  * value — never null.
   *
   * Exists for the same reason its siblings do: the composable form
   * runs as interpreted higher-order functions with a fresh array copy
@@ -201,15 +205,19 @@ case class ChunkHashes(child: Expression, n: Int) extends UnaryExpression {
 
   override def dataType: DataType =
     ArrayType(org.apache.spark.sql.types.LongType, containsNull = false)
-  override def nullIntolerant: Boolean = true
+  override def nullable: Boolean = false
   override def prettyName: String = "chunk_hashes"
 
-  override def nullSafeEval(input: Any): Any =
-    ChunkHashes.compute(input.asInstanceOf[UTF8String], n)
+  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any =
+    ChunkHashes.compute(child.eval(input).asInstanceOf[UTF8String], n)
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.ChunkHashes$$.MODULE$$.compute($c, $n);")
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val c = child.genCode(ctx)
+    ev.copy(code = code"""
+      ${c.code}
+      ArrayData ${ev.value} = graft.functions.ChunkHashes$$.MODULE$$.compute(
+        ${c.isNull} ? null : ${c.value}, $n);""", isNull = FalseLiteral)
+  }
 
   override protected def withNewChildInternal(newChild: Expression): ChunkHashes =
     copy(child = newChild)
@@ -221,8 +229,9 @@ object ChunkHashes {
     * `XXH64.hashUnsafeBytes(utf8(chunk), seed = 42)` — bit-identical
     * to the composable form (byte-diffed at both SFs through the
     * q70/q83/q143/q147/q151 oracles and the ChunkKernelSpec
-    * equivalence sweep). */
+    * equivalence sweep). Null text → `[]`. */
   def compute(text: UTF8String, n: Int): ArrayData = {
+    if (text == null) return new GenericArrayData(Array.empty[Any])
     val toks = CanonicalTokens.tokenize(text.toString)
     val nChunks = (toks.length + n - 1) / n
     val out = new Array[Any](nChunks)

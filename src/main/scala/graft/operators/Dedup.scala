@@ -252,13 +252,23 @@ object Dedup {
       idCol: String = "doc_id", textCol: String = "text",
       shingleSize: Int = 3, k: Int = -1, bands: Int = -1,
       maxBucket: Int = HotBuckets.DefaultCap,
-      strict: Boolean = false): DataFrame = {
+      strict: Boolean = false): DataFrame =
+    minHashDupPairsWithPin(docs, threshold, idCol, textCol, shingleSize,
+      k, bands, maxBucket, strict)._1
+
+  /** [[minHashDupPairs]] plus its hydration-persisted shingle pin, so
+    * an EAGER caller can unpersist it once the result is materialized
+    * ([[leakageSafeSplit]]; the [[ingestBatch]] discipline). */
+  private def minHashDupPairsWithPin(docs: DataFrame, threshold: Double,
+      idCol: String, textCol: String, shingleSize: Int, k: Int,
+      bands: Int, maxBucket: Int,
+      strict: Boolean): (DataFrame, DataFrame) = {
     val (kk, bb) = resolveLsh(threshold, k, bands)
     val (pairs, shingled) = lshCandidatePairs(docs, idCol, textCol,
       shingleSize, kk, bb, maxBucket, strict)
-    hashedGramJaccard(pairs, "id_a", "id_b", shingled, shingled)
+    (hashedGramJaccard(pairs, "id_a", "id_b", shingled, shingled)
       .filter(col("jaccard") >= threshold)
-      .select(col("id_a"), col("id_b"), col("jaccard"))
+      .select(col("id_a"), col("id_b"), col("jaccard")), shingled)
   }
 
   /** SimHash-64 signatures over shingle hashes — native single-pass
@@ -1387,7 +1397,12 @@ object Dedup {
     * would silently drop them from BOTH sides — silent row loss in
     * a train/eval splitter, the library's silent-wrong class. The
     * null group contributes no near-dup edges (no shingles to hash),
-    * so its rep never merges with a content cluster. */
+    * so its rep never merges with a content cluster.
+    *
+    * EAGER: the result is local-checkpointed before returning, so the
+    * fingerprint and shingle pins are released inside the call (the
+    * [[ingestBatch]] discipline); the only storage left behind is the
+    * result's own checkpoint blocks. */
   def leakageSafeSplit(docs: DataFrame, trainPct: Int,
       jaccardThreshold: Double = 0.8, idCol: String = "doc_id",
       textCol: String = "text", shingleSize: Int = 3,
@@ -1414,17 +1429,24 @@ object Dedup {
     val exactReps = joinRep(withFp)
       .filter(col(idCol) === col("__rep0"))
       .drop("__fp", "__rep0")
-    val pairs = minHashDupPairs(exactReps, jaccardThreshold, idCol,
-      textCol, shingleSize, -1, -1, maxBucket, strict)
+    val (pairs, shingled) = minHashDupPairsWithPin(exactReps,
+      jaccardThreshold, idCol, textCol, shingleSize, -1, -1, maxBucket,
+      strict)
     val comps = connectedComponents(pairs)
       .withColumnRenamed("id", "__rep0")
-    joinRep(withFp)
+    val out = joinRep(withFp)
       .join(comps, Seq("__rep0"), "left")
       .withColumn("split_rep", coalesce(col("comp"), col("__rep0")))
       .withColumn("split",
         when(Sampling.portableBucket(col("split_rep"), 100) < trainPct,
           lit("train")).otherwise(lit("eval")))
       .drop("__fp", "__rep0", "comp")
+      .localCheckpoint()
+    // the checkpoint materialized everything the pins feed; holding
+    // them past this call would leak corpus-scale frames per call
+    withFp.unpersist()
+    shingled.unpersist()
+    out
   }
 
   /** Contamination FRACTION per document — the tolerance-threshold

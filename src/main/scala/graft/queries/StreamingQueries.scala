@@ -242,8 +242,7 @@ object StreamingQueries {
       val ev = eventsStream(s, dir)
         .filter($"ts" < lit(Analytics.FunnelEnd).cast("timestamp"))
         .filter($"event_type".isin(steps: _*))
-        .select($"user_id", expr("unix_micros(ts)").as("ts_us"),
-          stepIdx.as("step"))
+        .select($"user_id", $"ts", stepIdx.as("step"))
       val snaps = graft.streaming.FunnelStream.funnel(ev, steps.size)
       val latest = drain(s, snaps.toDF(), "q97_stream_out", lastSink97,
           "append")
@@ -488,18 +487,19 @@ object StreamingQueries {
 
   private val lastSink149 = new java.util.concurrent.atomic.AtomicReference[String](null)
 
-  /** q149: the BOUNDED-STATE twin of q144 (the TTL-twin discipline,
-    * q97/q112/q118, pointed at the decon monitor): q144's complete-
-    * mode leak counter holds one state row per flagged doc FOREVER —
-    * fine over a benchmark, unbounded on a live feed. This twin gives
-    * each doc an ingestion timestamp, counts leaks per (1-day window,
-    * doc) under a watermark in APPEND mode, and lets the ENGINE evict
+  /** q149: the BOUNDED-STATE twin of q144 (the bounded-monitor
+    * discipline of q97/q112/q118, pointed at the decon monitor):
+    * q144's complete-mode leak counter holds one state row per
+    * flagged doc FOREVER — fine over a benchmark, unbounded on a live
+    * feed. This twin gives each doc an ingestion timestamp, counts
+    * leaks per (1-day window, doc) under a watermark in APPEND mode,
+    * and lets the ENGINE evict
     * each day's groups when the watermark passes — state is O(docs in
     * open windows), not O(flagged docs ever).
     *
-    * SHAPE CHOICE, stated: the fMGWS tombstone contract
-    * ([[graft.streaming.AnomalyStreamTtl]]) exists for entities a
-    * stream REVISITS across batches (a funnel user, a rate key) —
+    * SHAPE CHOICE, stated: the fMGWS tombstone contract (the bounded
+    * [[graft.streaming.AnomalyStream]]) exists for entities a stream
+    * REVISITS across batches (a funnel user, a rate key) —
     * a document is one-shot (its grams explode from one row), so the
     * idiomatic bounded form is the built-in watermarked window
     * aggregation: closed windows EMIT exactly once then EVICT (engine

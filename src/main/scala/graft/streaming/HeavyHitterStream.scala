@@ -11,9 +11,9 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout,
   * prune-then-verify (q115/q122), and the first streaming family
   * whose EXACT deployment variant needs no TTL twin — the state IS
   * the sketch, O(capacity) per shard BY CONSTRUCTION, so unbounded
-  * key cardinality can never grow it (contrast
-  * [[AnomalyStreamTtl]]/[[FunnelStreamTtl]], where boundedness had
-  * to be added to an exact-state twin).
+  * key cardinality can never grow it (contrast the bounded modes of
+  * [[AnomalyStream]]/[[FunnelStream]], where boundedness had to be
+  * added to an exact-state monitor).
   *
   * SHARDING: the caller keys each event by a deterministic hash
   * shard (`pmod(xxhash64(key), nShards)`). A key lives in EXACTLY

@@ -315,7 +315,8 @@ class AnalyticsSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[(Long, Long, Int)]
     val snaps = graft.streaming.FunnelStream.funnel(
-      input.toDF().toDF("user_id", "ts_us", "step"), nSteps = 3)
+      input.toDF().toDF("user_id", "ts_us", "step")
+        .withColumn("ts", timestamp_micros($"ts_us")), nSteps = 3)
     val q = snaps.toDF().writeStream.format("memory")
       .queryName("funnel_stream_spec").outputMode("append").start()
     try {
@@ -341,7 +342,8 @@ class AnalyticsSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[(Long, Long, Int)]
     val snaps = graft.streaming.FunnelStream.funnel(
-      input.toDF().toDF("user_id", "ts_us", "step"), nSteps = 3, cap = 3)
+      input.toDF().toDF("user_id", "ts_us", "step")
+        .withColumn("ts", timestamp_micros($"ts_us")), nSteps = 3, cap = 3)
     val q = snaps.toDF().writeStream.format("memory")
       .queryName("funnel_cap_spec").outputMode("append").start()
     try {

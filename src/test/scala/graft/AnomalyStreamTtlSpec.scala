@@ -1,8 +1,7 @@
 package graft
 
-import graft.streaming.{AnomalyStream, AnomalyStreamTtl}
-import graft.streaming.AnomalyStream.MinuteEvent
-import graft.streaming.AnomalyStreamTtl.TtlState
+import graft.streaming.AnomalyStream
+import graft.streaming.AnomalyStream.{MinuteEvent, State}
 import org.apache.spark.api.java.Optional
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
@@ -40,8 +39,8 @@ class AnomalyStreamTtlSpec extends SparkSpec {
     val exact = run("ttl_eq_exact",
       ev => AnomalyStream.zScores(ev, trailing = 3))
     val ttl = run("ttl_eq_ttl",
-      ev => AnomalyStreamTtl.zScores(ev, trailing = 3,
-        keepMinutes = 10000L))
+      ev => AnomalyStream.zScores(ev, trailing = 3,
+        keepMinutes = Some(10000L)))
     assert(ttl === exact, s"ttl=$ttl\nexact=$exact")
     assert(ttl.nonEmpty)
   }
@@ -51,8 +50,8 @@ class AnomalyStreamTtlSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[(String, Long)]
     // keepMinutes=6, trailing=3: a span reaching minute 9 trusts [4, 9]
-    val out = AnomalyStreamTtl.zScores(input.toDF().toDF("key", "m"),
-      trailing = 3, keepMinutes = 6L)
+    val out = AnomalyStream.zScores(input.toDF().toDF("key", "m"),
+      trailing = 3, keepMinutes = Some(6L))
     val q = out.toDF().writeStream.format("memory")
       .queryName("ttl_prune_out").outputMode("append").start()
     try {
@@ -102,13 +101,13 @@ class AnomalyStreamTtlSpec extends SparkSpec {
       "tombstone; a late event past TTL re-opens NOTHING; a fresh " +
       "event re-warms from scratch") {
     val ttl = Some(java.time.Duration.ofMinutes(5))
-    val f = AnomalyStreamTtl.fn(trailing = 3, keepMinutes = 100L, ttl) _
+    val f = AnomalyStream.fn(trailing = 3, keepMinutes = Some(100L), ttl) _
 
     // live state: key A with minutes 0..5 (two events each), horizon 0
-    val live = TtlState((0L to 5L).map(_ -> 2L).toMap, 0L, 12L)
+    val live = State((0L to 5L).map(_ -> 2L).toMap, 0L, 12L)
 
     // 1. the timeout invocation: state decays to the tombstone
-    val tState = TestGroupState.create[TtlState](
+    val tState = TestGroupState.create[State](
       Optional.of(live), GroupStateTimeout.ProcessingTimeTimeout,
       1000L, Optional.empty[Long], true)
     assert(f("A", Iterator.empty, tState).isEmpty)
@@ -119,7 +118,7 @@ class AnomalyStreamTtlSpec extends SparkSpec {
 
     // 2. a late event for the dead span (minute 4 < horizon 6): dropped,
     // state untouched except the re-armed TTL, zero emissions
-    val s2 = TestGroupState.create[TtlState](
+    val s2 = TestGroupState.create[State](
       Optional.of(tomb), GroupStateTimeout.ProcessingTimeTimeout,
       1000L, Optional.empty[Long], false)
     assert(f("A", Iterator(MinuteEvent("A", 4L)), s2).isEmpty)
@@ -128,7 +127,7 @@ class AnomalyStreamTtlSpec extends SparkSpec {
 
     // 3. fresh events start a NEW span that warms up from scratch:
     // minutes 10..12 (span 3 = trailing) score nothing yet...
-    val s3 = TestGroupState.create[TtlState](
+    val s3 = TestGroupState.create[State](
       Optional.of(tomb), GroupStateTimeout.ProcessingTimeTimeout,
       1000L, Optional.empty[Long], false)
     val warm = f("A", (10L to 12L).iterator.map(MinuteEvent("A", _)), s3)
@@ -136,7 +135,7 @@ class AnomalyStreamTtlSpec extends SparkSpec {
     val s3v = s3.get
     assert(s3v.horizon === 10L && s3v.seen === 15L)
     // ...and minute 13 completes the first full window → exactly one row
-    val s4 = TestGroupState.create[TtlState](
+    val s4 = TestGroupState.create[State](
       Optional.of(s3v), GroupStateTimeout.ProcessingTimeTimeout,
       1000L, Optional.empty[Long], false)
     val scored = f("A", Iterator(MinuteEvent("A", 13L)), s4).toSeq
@@ -147,10 +146,10 @@ class AnomalyStreamTtlSpec extends SparkSpec {
       "key: the next genuine event dies LOUDLY instead of dropping " +
       "as 'late' forever") {
     val ttl = Option.empty[java.time.Duration]
-    val f = AnomalyStreamTtl.fn(trailing = 3, keepMinutes = 100L, ttl) _
+    val f = AnomalyStream.fn(trailing = 3, keepMinutes = Some(100L), ttl) _
     // a corrupt year-9999 minute poisons the horizon...
-    val s1 = TestGroupState.create[TtlState](
-      Optional.of(TtlState(Map(1000L -> 2L), 1000L, 2L)),
+    val s1 = TestGroupState.create[State](
+      Optional.of(State(Map(1000L -> 2L), 1000L, 2L)),
       GroupStateTimeout.NoTimeout, 1000L, Optional.empty[Long], false)
     // (the corrupt event itself scores its own pruned span — the
     // emissions are a symptom; the poisoned HORIZON is the issue)
@@ -159,7 +158,7 @@ class AnomalyStreamTtlSpec extends SparkSpec {
     assert(poisoned.horizon === 5000000000L - 99L)
     // ...and the next REAL event (minute ~1001, billions below the
     // horizon) must fail loudly, not vanish
-    val s2 = TestGroupState.create[TtlState](
+    val s2 = TestGroupState.create[State](
       Optional.of(poisoned), GroupStateTimeout.NoTimeout, 1000L,
       Optional.empty[Long], false)
     val e = intercept[IllegalArgumentException] {
@@ -168,8 +167,8 @@ class AnomalyStreamTtlSpec extends SparkSpec {
     assert(e.getMessage.contains("corrupt timestamp"), e.getMessage)
     // merely-late events (within keepMinutes of the horizon) still
     // drop SILENTLY — the documented under-report class
-    val s3 = TestGroupState.create[TtlState](
-      Optional.of(TtlState(Map(500L -> 1L), 450L, 1L)),
+    val s3 = TestGroupState.create[State](
+      Optional.of(State(Map(500L -> 1L), 450L, 1L)),
       GroupStateTimeout.NoTimeout, 1000L, Optional.empty[Long], false)
     assert(f("A", Iterator(MinuteEvent("A", 400L)), s3).isEmpty)
     assert(!s3.isUpdated)
@@ -179,14 +178,14 @@ class AnomalyStreamTtlSpec extends SparkSpec {
       "offline past keepMinutes flushing its buffer drops silently " +
       "(counted), never crash-loops the query") {
     val acc = spark.sparkContext.longAccumulator("ttl_dropped")
-    val f = AnomalyStreamTtl.fn(trailing = 3, keepMinutes = 100L,
+    val f = AnomalyStream.fn(trailing = 3, keepMinutes = Some(100L),
       Option.empty[java.time.Duration], Some(acc)) _
     // idle decay left a tombstone at horizon 100000 (decayed = true);
     // the producer's flushed buffer is WEEKS below it — under the
     // live-data rule (100000 - 1000 ≫ keepMinutes=100) this would
     // require-fail and, on checkpoint replay, fail again forever
-    val tomb = TtlState(Map.empty, 100000L, 50L, decayed = true)
-    val s1 = TestGroupState.create[TtlState](
+    val tomb = State(Map.empty, 100000L, 50L, decayed = true)
+    val s1 = TestGroupState.create[State](
       Optional.of(tomb), GroupStateTimeout.NoTimeout, 1000L,
       Optional.empty[Long], false)
     assert(f("A", (1000L to 1002L).iterator.map(MinuteEvent("A", _)),
@@ -196,8 +195,8 @@ class AnomalyStreamTtlSpec extends SparkSpec {
     assert(acc.value === 3L, "each dropped event must be counted")
     // but the SAME distance below a LIVE horizon still dies loudly —
     // the decay flag narrows the require, it does not remove it
-    val live = TtlState(Map(100000L -> 1L), 100000L, 1L)
-    val s2 = TestGroupState.create[TtlState](
+    val live = State(Map(100000L -> 1L), 100000L, 1L)
+    val s2 = TestGroupState.create[State](
       Optional.of(live), GroupStateTimeout.NoTimeout, 1000L,
       Optional.empty[Long], false)
     val e = intercept[IllegalArgumentException] {
@@ -206,7 +205,7 @@ class AnomalyStreamTtlSpec extends SparkSpec {
     assert(e.getMessage.contains("corrupt timestamp"), e.getMessage)
     // and an accepted batch on top of a tombstone resets the flag:
     // the new span's horizon is live-set again
-    val s3 = TestGroupState.create[TtlState](
+    val s3 = TestGroupState.create[State](
       Optional.of(tomb), GroupStateTimeout.NoTimeout, 1000L,
       Optional.empty[Long], false)
     f("A", Iterator(MinuteEvent("A", 100005L)), s3).toList
@@ -215,8 +214,9 @@ class AnomalyStreamTtlSpec extends SparkSpec {
 
   test("guards: keepMinutes must exceed trailing") {
     intercept[IllegalArgumentException] {
-      AnomalyStreamTtl.zScores(
-        Seq(("A", 1L)).toDF("key", "m"), trailing = 30, keepMinutes = 30L)
+      AnomalyStream.zScores(
+        Seq(("A", 1L)).toDF("key", "m"), trailing = 30,
+        keepMinutes = Some(30L))
     }
   }
 }

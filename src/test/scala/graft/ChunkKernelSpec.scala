@@ -78,13 +78,17 @@ class ChunkKernelSpec extends SparkSpec {
       both.foreach { r =>
         val k = if (r.isNullAt(1)) null else r.getSeq[Long](1)
         val c = if (r.isNullAt(2)) null else r.getSeq[Long](2)
-        // composable null-text yields [] (the when-guard's otherwise);
-        // the kernel is nullIntolerant and yields null — identical
-        // through posexplode (no rows either way), the only consumer
-        val kNorm = if (k == null) Seq.empty[Long] else k
-        val cNorm = if (c == null) Seq.empty[Long] else c
-        assert(kNorm == cNorm, s"n=$n doc=${r.getLong(0)}: $k vs $c")
+        // null text included: the composable form's when-guard yields
+        // [], and so must the kernel (not NULL)
+        assert(k == c, s"n=$n doc=${r.getLong(0)}: $k vs $c")
       }
+      // ...interpreted (local relation) and generated code alike
+      val nullRows = both.filter(_.getLong(0) == 11L) ++
+        edgeDocs.repartition(2).filter(col("doc_id") === 11L)
+          .select(col("doc_id"), ChunkHashes.chunkHashesNative(
+            col("text"), n)).collect()
+      assert(nullRows.length === 2 && nullRows.forall(r =>
+        !r.isNullAt(1) && r.getSeq[Long](1).isEmpty))
     }
   }
 

@@ -1,7 +1,8 @@
 package graft
 
-import graft.streaming.{FunnelStream, FunnelStreamTtl}
-import graft.streaming.FunnelStreamTtl.{FTtlState, TsStepEvent}
+import graft.streaming.{EventTimeClose, FunnelStream}
+import graft.streaming.FunnelStream.{State, StepEvent}
+import java.time.Duration
 import org.apache.spark.api.java.Optional
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
@@ -30,14 +31,16 @@ class FunnelStreamTtlSpec extends SparkSpec {
 
     val exactIn = MemoryStream[(Long, Long, Int)]
     val exact = FunnelStream.funnel(
-      exactIn.toDF().toDF("user_id", "ts_us", "step"), nSteps = 3)
+      exactIn.toDF().toDF("user_id", "ts_us", "step")
+        .withColumn("ts", timestamp_micros($"ts_us")), nSteps = 3)
     val qe = exact.toDF().writeStream.format("memory")
       .queryName("fttl_eq_exact").outputMode("append").start()
     val ttlIn = MemoryStream[(Long, Long, Int)]
-    val ttl = FunnelStreamTtl.funnel(
+    // 7-day window, 10-min lateness: nothing closes
+    val ttl = FunnelStream.funnel(
       ttlIn.toDF().toDF("user_id", "ts_us", "step")
         .withColumn("ts", timestamp_micros($"ts_us")),
-      nSteps = 3) // 7-day window, 10-min lateness: nothing closes
+      nSteps = 3, close = Some(EventTimeClose(Duration.ofDays(7))))
     val qt = ttl.toDF().writeStream.format("memory")
       .queryName("fttl_eq_ttl").outputMode("append").start()
     try {
@@ -62,11 +65,10 @@ class FunnelStreamTtlSpec extends SparkSpec {
     // 60-second observation window, zero lateness, zero watermark
     // delay: a user closes as soon as the watermark passes
     // first event + 60 s
-    val out = FunnelStreamTtl.funnel(
+    val out = FunnelStream.funnel(
       input.toDF().toDF("user_id", "ts_us", "step", "ts"), nSteps = 3,
-      window = java.time.Duration.ofSeconds(60),
-      allowedLateness = java.time.Duration.ZERO,
-      watermarkDelay = "0 seconds")
+      close = Some(EventTimeClose(Duration.ofSeconds(60), Duration.ZERO,
+        "0 seconds")))
     val q = out.toDF().writeStream.format("memory")
       .queryName("fttl_close_out").outputMode("append").start()
     try {
@@ -96,11 +98,11 @@ class FunnelStreamTtlSpec extends SparkSpec {
       "the funnel — under-reported depth, never a phantom completion") {
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[(Long, Long, Int, java.sql.Timestamp)]
-    val out = FunnelStreamTtl.funnel(
+    // nothing closes; only the window acts
+    val out = FunnelStream.funnel(
       input.toDF().toDF("user_id", "ts_us", "step", "ts"), nSteps = 2,
-      window = java.time.Duration.ofSeconds(60),
-      allowedLateness = java.time.Duration.ofDays(30),
-      watermarkDelay = "30 days") // nothing closes; only the window acts
+      close = Some(EventTimeClose(Duration.ofSeconds(60),
+        Duration.ofDays(30), "30 days")))
     val q = out.toDF().writeStream.format("memory")
       .queryName("fttl_window_out").outputMode("append").start()
     try {
@@ -125,14 +127,13 @@ class FunnelStreamTtlSpec extends SparkSpec {
   test("state machine via TestGroupState: tombstone drops; a stale-" +
       "window/fresh-watermark event finalizes instead of arming a " +
       "behind-watermark timeout; an origin rewrite re-anchors") {
-    val f = FunnelStreamTtl.fn(nSteps = 2, cap = 100,
-      windowMicros = 60000000L, latenessMillis = 0L) _
-    def ev(tsUs: Long, step: Int) =
-      TsStepEvent(1L, tsUs, step, new java.sql.Timestamp(tsUs / 1000L))
+    val f = FunnelStream.fn(nSteps = 2, cap = 100,
+      Some(EventTimeClose(Duration.ofSeconds(60), Duration.ZERO))) _
+    def ev(tsUs: Long, step: Int) = StepEvent(1L, tsUs, step)
     // 1. a CLOSED tombstone drops an arriving step — in-function, not
     // just the engine's late filter (which only vets ts)
-    val closed = FTtlState(Nil, 7L, closed = true)
-    val s1 = TestGroupState.create[FTtlState](
+    val closed = State(Nil, 7L, closed = true)
+    val s1 = TestGroupState.create[State](
       Optional.of(closed), GroupStateTimeout.EventTimeTimeout,
       1000L, Optional.of(500000L), false)
     assert(f(1L, Iterator(ev(5000000L, 0)), s1).isEmpty)
@@ -140,8 +141,8 @@ class FunnelStreamTtlSpec extends SparkSpec {
     // 2. poison pair: no prior state, watermark 500 s already past the
     // event's close (5 s + 60 s) — arming the timeout would throw and
     // crash-loop; the user must finalize silently
-    val s2 = TestGroupState.create[FTtlState](
-      Optional.empty[FTtlState], GroupStateTimeout.EventTimeTimeout,
+    val s2 = TestGroupState.create[State](
+      Optional.empty[State], GroupStateTimeout.EventTimeTimeout,
       1000L, Optional.of(500000L), false)
     assert(f(1L, Iterator(ev(5000000L, 0)), s2).isEmpty)
     assert(s2.get.closed && s2.get.evs.isEmpty, s2.get.toString)
@@ -149,17 +150,17 @@ class FunnelStreamTtlSpec extends SparkSpec {
       "no timeout may be armed behind the watermark")
     // 3. the timeout path: open state collapses to the tombstone,
     // n_seen pinned so the pre-close snapshot stays the winner
-    val open = FTtlState(List((5000000L, 0)), 3L, closed = false)
-    val s3 = TestGroupState.create[FTtlState](
+    val open = State(List((5000000L, 0)), 3L, closed = false)
+    val s3 = TestGroupState.create[State](
       Optional.of(open), GroupStateTimeout.EventTimeTimeout,
       1000L, Optional.of(500000L), true)
     assert(f(1L, Iterator.empty, s3).isEmpty)
-    assert(s3.get === FTtlState(Nil, 3L, closed = true))
+    assert(s3.get === State(Nil, 3L, closed = true))
     // 4. origin rewrite: a late EARLIER event re-anchors the window
     // to [50 s, 110 s]; the buffered step 1 at 100 s stays inside it
     // and the funnel completes from the rewritten origin
-    val anchored = FTtlState(List((100000000L, 1)), 1L, closed = false)
-    val s4 = TestGroupState.create[FTtlState](
+    val anchored = State(List((100000000L, 1)), 1L, closed = false)
+    val s4 = TestGroupState.create[State](
       Optional.of(anchored), GroupStateTimeout.EventTimeTimeout,
       1000L, Optional.of(0L), false)
     val snap = f(1L, Iterator(ev(50000000L, 0)), s4).toList
@@ -167,8 +168,8 @@ class FunnelStreamTtlSpec extends SparkSpec {
       List((Seq(50000000L, 100000000L), 2L)), snap.toString)
     // ...and a buffered step NOW outside the rewritten window drops
     // from the buffer: anchor 50 s, window 60 s → 120 s is out
-    val anchored2 = FTtlState(List((120000000L, 1)), 1L, closed = false)
-    val s5 = TestGroupState.create[FTtlState](
+    val anchored2 = State(List((120000000L, 1)), 1L, closed = false)
+    val s5 = TestGroupState.create[State](
       Optional.of(anchored2), GroupStateTimeout.EventTimeTimeout,
       1000L, Optional.of(0L), false)
     val snap2 = f(1L, Iterator(ev(50000000L, 0)), s5).toList
@@ -177,24 +178,23 @@ class FunnelStreamTtlSpec extends SparkSpec {
     assert(s5.get.evs === List((50000000L, 0)))
     // 5. an origin rewrite whose window is ALREADY past the watermark
     // finalizes now — prior emissions stand
-    val s6 = TestGroupState.create[FTtlState](
+    val s6 = TestGroupState.create[State](
       Optional.of(anchored), GroupStateTimeout.EventTimeTimeout,
       1000L, Optional.of(500000L), false)
     assert(f(1L, Iterator(ev(5000000L, 0)), s6).isEmpty)
-    assert(s6.get === FTtlState(Nil, 1L, closed = true))
+    assert(s6.get === State(Nil, 1L, closed = true))
   }
 
   test("n_seen counts only ACCEPTED events: an all-out-of-window batch " +
       "emits nothing, leaves state untouched, and re-arms the close") {
-    val f = FunnelStreamTtl.fn(nSteps = 2, cap = 100,
-      windowMicros = 60000000L, latenessMillis = 0L) _
-    def ev(tsUs: Long, step: Int) =
-      TsStepEvent(1L, tsUs, step, new java.sql.Timestamp(tsUs / 1000L))
+    val f = FunnelStream.fn(nSteps = 2, cap = 100,
+      Some(EventTimeClose(Duration.ofSeconds(60), Duration.ZERO))) _
+    def ev(tsUs: Long, step: Int) = StepEvent(1L, tsUs, step)
     // open funnel anchored at 10 s (window [10 s, 70 s]); an event at
     // 100 s is outside it — previously it bumped n_seen while being
     // dropped, silently diverging the twins' tags
-    val open = FTtlState(List((10000000L, 0)), 1L, closed = false)
-    val s = TestGroupState.create[FTtlState](
+    val open = State(List((10000000L, 0)), 1L, closed = false)
+    val s = TestGroupState.create[State](
       Optional.of(open), GroupStateTimeout.EventTimeTimeout,
       1000L, Optional.of(0L), false)
     assert(f(1L, Iterator(ev(100000000L, 1)), s).isEmpty,
@@ -203,7 +203,7 @@ class FunnelStreamTtlSpec extends SparkSpec {
     assert(s.getTimeoutTimestampMs.isPresent,
       "the close must be re-armed (the engine clears it per invocation)")
     // ...and a subsequent IN-window event counts exactly itself
-    val s2 = TestGroupState.create[FTtlState](
+    val s2 = TestGroupState.create[State](
       Optional.of(open), GroupStateTimeout.EventTimeTimeout,
       1000L, Optional.of(0L), false)
     val snap = f(1L, Iterator(ev(100000000L, 1), ev(20000000L, 1)), s2)
@@ -216,13 +216,12 @@ class FunnelStreamTtlSpec extends SparkSpec {
       "millisecond — a watermark at floor(close) must not finalize") {
     // window end 5 s + 60.0005 s = 65.0005 s → 65001 ms ceil; flooring
     // to 65000 ms would close up to 999 µs before the window's end
-    val f = FunnelStreamTtl.fn(nSteps = 2, cap = 100,
-      windowMicros = 60000500L, latenessMillis = 0L) _
-    val s = TestGroupState.create[FTtlState](
-      Optional.empty[FTtlState], GroupStateTimeout.EventTimeTimeout,
+    val f = FunnelStream.fn(nSteps = 2, cap = 100,
+      Some(EventTimeClose(Duration.ofNanos(60000500000L), Duration.ZERO))) _
+    val s = TestGroupState.create[State](
+      Optional.empty[State], GroupStateTimeout.EventTimeTimeout,
       1000L, Optional.of(65000L), false)
-    val snap = f(1L, Iterator(
-      TsStepEvent(1L, 5000000L, 0, new java.sql.Timestamp(5000L))), s)
+    val snap = f(1L, Iterator(StepEvent(1L, 5000000L, 0)), s)
       .toList
     assert(snap.map(_.depth) === List(1L),
       "watermark 65000 ms is inside the 65000.5 ms window — must emit")
@@ -237,11 +236,10 @@ class FunnelStreamTtlSpec extends SparkSpec {
     val input = MemoryStream[(Long, Long, Int, java.sql.Timestamp)]
     // caller supplies a GARBAGE ts_us (raw seconds, not micros); the
     // operator must overwrite it with unix_micros(ts)
-    val out = FunnelStreamTtl.funnel(
+    val out = FunnelStream.funnel(
       input.toDF().toDF("user_id", "ts_us", "step", "ts"), nSteps = 2,
-      window = java.time.Duration.ofSeconds(60),
-      allowedLateness = java.time.Duration.ofDays(30),
-      watermarkDelay = "30 days")
+      close = Some(EventTimeClose(Duration.ofSeconds(60),
+        Duration.ofDays(30), "30 days")))
     val q = out.toDF().writeStream.format("memory")
       .queryName("fttl_derive_out").outputMode("append").start()
     try {
@@ -256,12 +254,12 @@ class FunnelStreamTtlSpec extends SparkSpec {
   test("guards: cap below nSteps, zero window, negative lateness") {
     val df = Seq((1L, 0L, 0, ts(0))).toDF("user_id", "ts_us", "step", "ts")
     intercept[IllegalArgumentException] {
-      FunnelStreamTtl.funnel(df, nSteps = 3, cap = 2) }
+      FunnelStream.funnel(df, nSteps = 3, cap = 2) }
     intercept[IllegalArgumentException] {
-      FunnelStreamTtl.funnel(df, nSteps = 3,
-        window = java.time.Duration.ZERO) }
+      FunnelStream.funnel(df, nSteps = 3,
+        close = Some(EventTimeClose(Duration.ZERO))) }
     intercept[IllegalArgumentException] {
-      FunnelStreamTtl.funnel(df, nSteps = 3,
-        allowedLateness = java.time.Duration.ofMinutes(-1)) }
+      FunnelStream.funnel(df, nSteps = 3, close = Some(EventTimeClose(
+        Duration.ofDays(7), Duration.ofMinutes(-1)))) }
   }
 }

@@ -95,6 +95,38 @@ class PlanQualitySpec extends SparkSpec {
     assert(exchanges.size <= 1, s"expected ≤1 exchange: $exchanges")
   }
 
+  test("unbounded streaming monitors (q97/q112/q118) run " +
+      "flatMapGroupsWithState with NoTimeout and no event-time watermark") {
+    // a micro-batch's executed plan reaches the listener bus with its
+    // SQL execution start event; the drain inside the query hides the
+    // StreamingQuery itself
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onOtherEvent(
+          e: org.apache.spark.scheduler.SparkListenerEvent): Unit = e match {
+        case s: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart =>
+          plans.add(s.physicalPlanDescription)
+        case _ =>
+      }
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try for (q <- Seq("q97_stream_funnel", "q112_stream_anomaly",
+        "q118_stream_quantiles")) {
+      plans.clear()
+      SparkEntry.queries(q)(spark, sf).collect()
+      def fmgws = plans.toArray(Array.empty[String])
+        .find(_.contains("FlatMapGroupsWithState"))
+      val deadline = System.currentTimeMillis + 30000
+      while (fmgws.isEmpty && System.currentTimeMillis < deadline)
+        Thread.sleep(50)
+      val plan = fmgws.getOrElse(fail(s"$q: no FlatMapGroupsWithState plan"))
+      assert(plan.contains("NoTimeout") && !plan.contains("EventTimeTimeout"),
+        s"$q:\n$plan")
+      assert(!plan.contains("EventTimeWatermark"), s"$q:\n$plan")
+      info(q + ": " + plan.linesIterator.find(_.contains("NoTimeout")).get.trim)
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
   test("q70 span dedup decides first-occurrence with a partial aggregate, not a window sort") {
     // the "first (id, idx) per chunk" decision must be min(struct(..))
     // — partial-aggregatable, so a corpus-boilerplate span repeated

@@ -1,6 +1,7 @@
 package graft
 
-import graft.streaming.QuantileStream
+import graft.streaming.{EventTimeClose, QuantileStream}
+import java.time.Duration
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
@@ -81,17 +82,15 @@ class QuantileStreamSpec extends SparkSpec {
   test("TTL variant: the watermark CLOSES a window to a tombstone; a " +
       "post-close straggler re-opens nothing and the pre-close answer " +
       "stays the max-seen winner") {
-    import graft.streaming.QuantileStreamTtl
     implicit val sqlCtx = spark.sqlContext
     def ts(sec: Long) = new java.sql.Timestamp(sec * 1000L)
     val input = MemoryStream[(String, Long, Long, java.sql.Timestamp)]
     // 60-second windows, zero lateness, 0-second watermark delay: the
     // close fires as soon as the watermark passes the window end
-    val out = QuantileStreamTtl.quantiles(
+    val out = QuantileStream.quantiles(
       input.toDF().toDF("key", "w", "qv", "ts"), pcts = Seq(50),
-      windowSeconds = 60L,
-      allowedLateness = java.time.Duration.ZERO,
-      watermarkDelay = "0 seconds")
+      close = Some(EventTimeClose(Duration.ofSeconds(60), Duration.ZERO,
+        "0 seconds")))
     val q = out.toDF().writeStream.format("memory")
       .queryName("qttl_out").outputMode("append").start()
     try {
@@ -130,19 +129,17 @@ class QuantileStreamSpec extends SparkSpec {
       "actually drops (the engine's late filter can't be the only " +
       "defense), and a stale-window/fresh-ts poison event finalizes " +
       "instead of arming a behind-watermark timeout") {
-    import graft.streaming.QuantileStreamTtl
-    import graft.streaming.QuantileStreamTtl.{QTtlState, TsQEvent}
+    import graft.streaming.QuantileStream.{QEvent, State}
     import org.apache.spark.api.java.Optional
     import org.apache.spark.sql.streaming.{GroupStateTimeout, TestGroupState}
-    val f = QuantileStreamTtl.fn(Seq(50), 1000L, windowSeconds = 60L,
-      latenessMillis = 0L) _
-    def ev(w: Long, qv: Long) =
-      TsQEvent("A", w, qv, new java.sql.Timestamp(0L))
+    val f = QuantileStream.fn(Seq(50), 1000L,
+      Some(EventTimeClose(Duration.ofSeconds(60), Duration.ZERO))) _
+    def ev(w: Long, qv: Long) = QEvent("A", w, qv)
     // 1. a CLOSED tombstone drops an arriving twin — this is the
     // in-function guarantee, independent of Spark's event-time filter
     // (which only vets ts, not w)
-    val closed = QTtlState(Map.empty, 7L, closed = true)
-    val s1 = TestGroupState.create[QTtlState](
+    val closed = State(Map.empty, 7L, closed = true)
+    val s1 = TestGroupState.create[State](
       Optional.of(closed), GroupStateTimeout.EventTimeTimeout,
       1000L, Optional.of(500000L), false)
     assert(f(("A", 0L), Iterator(ev(0L, 5L)), s1).isEmpty)
@@ -151,8 +148,8 @@ class QuantileStreamSpec extends SparkSpec {
     // stale its close time is behind the watermark, NO prior state —
     // arming the timeout would throw and crash-loop the query; the
     // group must finalize to a tombstone and emit nothing
-    val s2 = TestGroupState.create[QTtlState](
-      Optional.empty[QTtlState], GroupStateTimeout.EventTimeTimeout,
+    val s2 = TestGroupState.create[State](
+      Optional.empty[State], GroupStateTimeout.EventTimeTimeout,
       1000L, Optional.of(500000L), false) // watermark 500 s >> close 60 s
     assert(f(("A", 0L), Iterator(ev(0L, 5L)), s2).isEmpty)
     val tomb = s2.get
@@ -161,18 +158,19 @@ class QuantileStreamSpec extends SparkSpec {
     assert(!s2.getTimeoutTimestampMs.isPresent,
       "no timeout may be armed behind the watermark")
     // 3. the timeout path itself: open state collapses to the tombstone
-    val open = QTtlState(Map(10L -> 2L), 2L, closed = false)
-    val s3 = TestGroupState.create[QTtlState](
+    val open = State(Map(10L -> 2L), 2L, closed = false)
+    val s3 = TestGroupState.create[State](
       Optional.of(open), GroupStateTimeout.EventTimeTimeout,
       1000L, Optional.of(500000L), true)
     assert(f(("A", 0L), Iterator.empty, s3).isEmpty)
-    assert(s3.get === QTtlState(Map.empty, 2L, closed = true))
+    assert(s3.get === State(Map.empty, 2L, closed = true))
     // 4. negative lateness is rejected up front
     intercept[IllegalArgumentException] {
-      QuantileStreamTtl.quantiles(
+      QuantileStream.quantiles(
         Seq(("A", 0L, 1L, new java.sql.Timestamp(0L)))
           .toDF("key", "w", "qv", "ts"),
-        allowedLateness = java.time.Duration.ofMinutes(-1))
+        close = Some(EventTimeClose(Duration.ofHours(1),
+          Duration.ofMinutes(-1))))
     }
   }
 

@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Dataset, Encoder, Row, SparkSession}
+import org.apache.spark.sql.functions.{col, max_by, struct}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session (one per suite, SURVEY §5).
@@ -12,6 +13,49 @@ import org.scalatest.funsuite.AnyFunSuite
   * `sparkContext.getCheckpointDir.isEmpty` rather than assume order. */
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
+
+  /** Restart gate for a stateful streaming query (SessionizeSpec's
+    * checkpoint-recovery pattern): feeds `batches` through
+    * `query(input)` twice — once uninterrupted, once stopped after
+    * batch `stopAfter` and restarted from the same checkpoint — into a
+    * parquet sink, and requires equal drained output: per `keys`
+    * group, the row with the max `tag` (the progress-stream consumer
+    * rule of the `seen`/`n_seen` monitors). */
+  def assertRestartInvariant[A: Encoder](batches: Seq[Seq[A]],
+      stopAfter: Int, keys: Seq[String], tag: String)(
+      query: org.apache.spark.sql.DataFrame => Dataset[_]): Unit = {
+    require(stopAfter >= 1 && stopAfter < batches.size,
+      s"stopAfter=$stopAfter must leave batches on both sides")
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    def drained(restartAfter: Option[Int]): Set[Row] = {
+      val dir = java.nio.file.Files.createTempDirectory("restart-gate")
+      val out = dir.resolve("out").toString
+      val input = org.apache.spark.sql.execution.streaming.runtime
+        .MemoryStream[A]
+      def start() = query(input.toDF()).toDF().writeStream
+        .format("parquet").option("path", out)
+        .option("checkpointLocation", dir.resolve("cp").toString)
+        .outputMode("append").start()
+      var q = start()
+      try batches.zipWithIndex.foreach { case (b, i) =>
+        input.addData(b)
+        q.processAllAvailable()
+        if (restartAfter.contains(i + 1)) { q.stop(); q = start() }
+      } finally q.stop()
+      val df = spark.read.parquet(out)
+      val rest = df.columns.filterNot(c => c == tag || keys.contains(c))
+      df.groupBy(keys.map(col): _*)
+        .agg(max_by(struct(rest.map(col): _*), col(tag)).as("f"))
+        .select(keys.map(col) :+ col("f.*"): _*)
+        .collect().toSet
+    }
+    val straight = drained(None)
+    assert(straight.nonEmpty, "the gate's input drained to nothing")
+    val restarted = drained(Some(stopAfter))
+    assert(restarted === straight,
+      s"restart changed the drained output:\nrestarted=$restarted\n" +
+        s"straight=$straight")
+  }
 }
 
 object SparkSpec {

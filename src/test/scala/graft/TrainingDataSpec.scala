@@ -1026,6 +1026,27 @@ class DedupSpec extends SparkSpec {
       Dedup.leakageSafeSplit(docs, trainPct = 100) }
   }
 
+  test("leakageSafeSplit releases its pins: after the call " +
+      "the persistent-RDD registry holds nothing new but the result's " +
+      "own checkpoint") {
+    val docs = Seq(
+      (1L, "the quick brown fox jumps over the lazy dog tonight"),
+      (2L, "the quick brown fox jumps over the lazy dog tonight"),
+      (3L, null.asInstanceOf[String]),
+      (4L, "another unrelated document on parquet row group pruning"))
+      .toDF("doc_id", "text")
+    // ID sets, not sizes: the ContextCleaner may release OTHER tests'
+    // unreferenced blocks mid-call
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val out = Dedup.leakageSafeSplit(docs, trainPct = 90,
+      jaccardThreshold = 0.5, shingleSize = 3)
+    val own = out.queryExecution.logical.collect {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.id }.toSet
+    val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before -- own
+    assert(leaked.isEmpty, s"leaked persistent RDD ids: $leaked")
+    assert(out.count() === 4L)
+  }
+
   test("contaminationFraction: hand-checked per-doc leak shares; " +
       "zero-hit docs emit; Bloom prune provably invisible") {
     val bench = Seq(

@@ -1,11 +1,14 @@
 package graft
 
-import graft.streaming.{AnomalyStreamTtl, FunnelStreamTtl, QuantileStreamTtl}
+import graft.streaming.{AnomalyStream, EventTimeClose, FunnelStream,
+  QuantileStream}
+import java.time.Duration
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.StreamingQuery
 
-/** State-store METRICS gate for the bounded-state twins (the three
-  * fMGWS TTL twins + the windowed decon monitor): the boundedness
+/** State-store METRICS gate for the bounded-state monitors (the three
+  * fMGWS monitors with their bound set + the windowed decon monitor;
+  * test names keep the former `*Ttl` operator names): the boundedness
   * contracts ("an open key costs one state row; a closed key costs
   * EXACTLY one tombstone row, forever") asserted through the engine's
   * own `lastProgress.stateOperators` accounting, not just through
@@ -41,11 +44,10 @@ class TtlStateMetricsSpec extends SparkSpec {
       "post-close straggler re-creates nothing") {
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[(Long, Long, Int, java.sql.Timestamp)]
-    val out = FunnelStreamTtl.funnel(
+    val out = FunnelStream.funnel(
       input.toDF().toDF("user_id", "ts_us", "step", "ts"), nSteps = 3,
-      window = java.time.Duration.ofSeconds(60),
-      allowedLateness = java.time.Duration.ZERO,
-      watermarkDelay = "0 seconds")
+      close = Some(EventTimeClose(Duration.ofSeconds(60), Duration.ZERO,
+        "0 seconds")))
     val q = out.toDF().writeStream.format("memory")
       .queryName("fttl_metrics_out").outputMode("append").start()
     try {
@@ -78,11 +80,10 @@ class TtlStateMetricsSpec extends SparkSpec {
       "event-time close keeps exactly one tombstone row per group") {
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[(String, Long, Long, java.sql.Timestamp)]
-    val out = QuantileStreamTtl.quantiles(
+    val out = QuantileStream.quantiles(
       input.toDF().toDF("key", "w", "qv", "ts"), pcts = Seq(50),
-      windowSeconds = 60L,
-      allowedLateness = java.time.Duration.ZERO,
-      watermarkDelay = "0 seconds")
+      close = Some(EventTimeClose(Duration.ofSeconds(60), Duration.ZERO,
+        "0 seconds")))
     val q = out.toDF().writeStream.format("memory")
       .queryName("qttl_metrics_out").outputMode("append").start()
     try {
@@ -113,9 +114,9 @@ class TtlStateMetricsSpec extends SparkSpec {
       "numRowsUpdated), and fresh keys add rows on top") {
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[(String, Long)]
-    val out = AnomalyStreamTtl.zScores(
-      input.toDF().toDF("key", "m"), trailing = 2, keepMinutes = 10L,
-      stateTtl = Some(java.time.Duration.ofSeconds(2)))
+    val out = AnomalyStream.zScores(
+      input.toDF().toDF("key", "m"), trailing = 2, keepMinutes = Some(10L),
+      stateTtl = Some(Duration.ofSeconds(2)))
     // processing-time timeouts spin a batch every trigger forever, so
     // processAllAvailable never settles — the NearDup TTL pattern:
     // real trigger interval + polled progress

@@ -8,6 +8,19 @@ import org.apache.spark.sql.functions._
 class UtilitySpec extends SparkSpec {
   import spark.implicits._
 
+  test("Bench artifact: floor runs persist to their own file; the file " +
+      "copy is the stdout line plus the commit it measured") {
+    assume(!sys.env.contains("SPARK_GRAFT_BENCH_OUT"))
+    assert(Bench.artifactFile(floorRun = true) === "BENCH_floor_latest.json")
+    assert(Bench.artifactFile(floorRun = false) === "BENCH_full_latest.json")
+    val line = """{"metric":"total","value":1.5,"queries":{"q01":1.5}}"""
+    assert(Bench.stamped(line, Some("ab" * 20)) ===
+      """{"metric":"total","value":1.5,"queries":{"q01":1.5},""" +
+        "\"commit\":\"" + "ab" * 20 + "\"}")
+    assert(Bench.stamped(line, None).endsWith("""},"commit":null}"""))
+    assert(Bench.headCommit().forall(_.length == 40))
+  }
+
   test("ivfTopK: reasonable recall of brute-force neighbors on real embeddings") {
     val emb = Tables.embeddings(spark, "/root/testdata/sf0.01")
     val queries = emb.filter($"vec_id" < 5)
