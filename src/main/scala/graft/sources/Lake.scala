@@ -206,9 +206,14 @@ object Lake {
     *
     * Winner per key = highest `versionCol`; a same-version collision
     * prefers the incoming update (deterministic via a source-priority
-    * tie-break). The merged slice is staged to a scratch path before
-    * the overwrite so the target is never read and clobbered in the
-    * same job. This is the principled form of the reference's
+    * tie-break). The merged slice is staged by an eager local
+    * checkpoint (executor block storage, memory then disk) before the
+    * overwrite, so the target is never read and clobbered in the same
+    * job; the blocks are released once the overwrite returns. The
+    * overwrite still commits only at job end: a staged block lost to
+    * an executor failure fails the job BEFORE its commit, leaving the
+    * lake as it was, and the replay below re-stages. This is the
+    * principled form of the reference's
     * "updated events resolved by whole-row distinct"
     * (sparktoELKstream.py:94-99): updates REPLACE, not accumulate.
     * Idempotent — replaying the same batch (foreachBatch retry
@@ -216,8 +221,8 @@ object Lake {
     *
     * `tsCol` must be non-null: a null event date can neither address a
     * partition nor be matched by the affected-dates filter, so such
-    * rows are rejected up front rather than silently skipping the
-    * merge.
+    * rows are rejected up front, before the lake is read or written,
+    * rather than silently skipping the merge.
     *
     * COMMIT GRANULARITY — the `atomicDays` dial: the default commit is
     * Spark's dynamic partition overwrite, which commits each touched
@@ -257,8 +262,12 @@ object Lake {
     *
     * DRIVER BOUND — the affected-dates collect: the update batch's
     * DISTINCT event dates are collected to the driver to scope the
-    * read filter and the dynamic overwrite. The bound is O(distinct
-    * days in the batch), not O(batch) or O(lake) — a century of daily
+    * read filter and the dynamic overwrite. Each batch partition ships
+    * its set of `to_date(tsCol)` values (a per-partition
+    * `collect_set`, in the same one-pass aggregate that counts the
+    * null-`tsCol` rows) and the driver unions them. The bound is
+    * O(distinct days in the batch) per partition, not O(batch) or
+    * O(lake) — a century of daily
     * partitions is ~36k date values (a few hundred KB), fine at any
     * corpus scale. The failure mode past it is a batch whose `tsCol`
     * is corrupt (e.g. millions of distinct microsecond-precision
@@ -287,7 +296,21 @@ object Lake {
       updates: DataFrame, keyCol: String, versionCol: String,
       tsCol: String, atomicDays: Boolean,
       seam: (String, String) => Unit): Unit = {
-    require(updates.filter(col(tsCol).isNull).isEmpty,
+    // ONE probe pass over the batch: the null-tsCol count and the set
+    // of affected dates come out of a single per-partition aggregate,
+    // merged on the driver — one job and one stage, where a SQL
+    // count/collect_set aggregate adds an exchange (and, under AQE, a
+    // second job). It runs before the heal and before any lake read or
+    // write, so a rejected batch touches nothing
+    val updDated = updates.withColumn("event_date", to_date(col(tsCol)))
+    val (nullTs, dates) = updDated
+      .select(col(tsCol).isNull, col("event_date")).rdd
+      .aggregate((0L, Set.empty[Any]))(
+        (acc, r) =>
+          if (r.getBoolean(0)) (acc._1 + 1L, acc._2)
+          else (acc._1, acc._2 + r.get(1)),
+        (a, b) => (a._1 + b._1, a._2 ++ b._2))
+    require(nullTs == 0L,
       s"upsertLatest: null $tsCol rows cannot be partition-merged")
     // a previous atomic-day writer may have crashed mid-commit: heal
     // BEFORE reading the existing slice, or a day sitting in trash
@@ -301,9 +324,6 @@ object Lake {
     // existence probes.
     recoverUpsertDays(spark, path)
     import org.apache.spark.sql.expressions.Window
-    val updDated = updates.withColumn("event_date", to_date(col(tsCol)))
-    val dates = updDated.select("event_date").distinct().collect()
-      .map(_.get(0))
     // SCHEMA EVOLUTION (the day-2 reality: the stream gains a column):
     // the existing slice reads with mergeSchema so files already
     // spanning schema versions surface every column, and the union
@@ -325,7 +345,7 @@ object Lake {
     val hasData = probeHasData(spark, path)
     val existingSlice =
       if (hasData) readEvolving(spark, path)
-        .filter(col("event_date").isin(dates: _*))
+        .filter(col("event_date").isin(dates.toSeq: _*))
         .withColumn("__src", lit(0))
       else updDated.limit(0).withColumn("__src", lit(0))
     val updTypes = updDated.schema.map(f => f.name -> f.dataType).toMap
@@ -356,19 +376,20 @@ object Lake {
       .filter(col("__rn") === 1)
       .drop("__src", "__rn")
     if (!atomicDays) {
-      val scratch = path.stripSuffix("/") + "__upsert_stage"
-      merged.write.mode("overwrite").parquet(scratch)
-      spark.read.parquet(scratch)
-        .write.mode("overwrite")
+      // EAGER: the merged slice is materialized and its lineage to the
+      // lake files cut before the overwrite job starts, so that job
+      // never reads the partitions it replaces
+      val staged = merged.localCheckpoint(eager = true,
+        storageLevel = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      try staged.write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy("event_date")
         .parquet(path)
-      // resolve the filesystem FROM the scratch path (not the default
-      // FS): with an s3a:///hdfs:// lake the default-FS delete would
-      // throw 'Wrong FS' or aim at the wrong store
-      val scratchPath = new org.apache.hadoop.fs.Path(scratch)
-      scratchPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        .delete(scratchPath, true)
+      finally staged.queryExecution.logical match {
+        case r: org.apache.spark.sql.execution.LogicalRDD =>
+          r.rdd.unpersist(blocking = false)
+        case _ =>
+      }
     } else {
       // ATOMIC-DAY COMMIT: the closed form of the dynamic-overwrite
       // residual above. The merged slice is staged PARTITIONED (one

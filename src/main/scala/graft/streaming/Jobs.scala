@@ -102,7 +102,12 @@ object Jobs {
     * foreachBatch retries replay the same batch — the upsert is
     * idempotent, so exactly-once lake state falls out. This closes the
     * reference's update-handling gap: `isEventUpdate` rows REPLACE the
-    * stale event in the archive instead of accumulating beside it. */
+    * stale event in the archive instead of accumulating beside it.
+    *
+    * The batch is persisted for the call: the upsert reads it twice
+    * (probe, then merge), and an unpersisted foreachBatch frame
+    * re-runs its source on every pass — a Kafka batch would be fetched
+    * once per read. Released in `finally`, so no batch stays pinned. */
   def upsertStream(updates: DataFrame, path: String, checkpoint: String,
       keyCol: String, versionCol: String, tsCol: String,
       trigger: Trigger = Trigger.ProcessingTime(0)): DataStreamWriter[Row] =
@@ -111,7 +116,9 @@ object Jobs {
       .option("checkpointLocation", checkpoint)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        graft.sources.Lake.upsertLatest(
+        batch.persist()
+        try graft.sources.Lake.upsertLatest(
           batch.sparkSession, path, batch, keyCol, versionCol, tsCol)
+        finally batch.unpersist()
       }
 }

@@ -5,6 +5,7 @@ import graft.streaming.Jobs
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import java.nio.file.Files
+import scala.jdk.CollectionConverters._
 
 /** Latest-wins lake MERGE: partition-scoped rewrite, version
   * resolution, idempotent replay, and the streaming foreachBatch
@@ -277,8 +278,102 @@ class LakeUpsertSpec extends SparkSpec {
       e.getMessage.contains("payload"), e.getMessage)
   }
 
+  /** Every regular file under `path` (relative name → mtime). */
+  private def files(path: String): Map[String, Long] = {
+    val root = java.nio.file.Paths.get(path)
+    val s = Files.walk(root)
+    try s.iterator().asScala.filter(Files.isRegularFile(_))
+      .map(f => root.relativize(f).toString ->
+        Files.getLastModifiedTime(f).toMillis).toMap
+    finally s.close()
+  }
+
+  private def persistentIds(): Set[Int] =
+    spark.sparkContext.getPersistentRDDs.keySet.toSet
+
+  /** Jobs `body` starts, counted by a listener (the PlanQualitySpec
+    * pattern) over the jobs tagged with a local property. A sentinel
+    * job run afterwards drains the listener queue: events reach one
+    * listener in order, so once the sentinel's start arrives every
+    * job of `body` has been counted. */
+  private def jobsOf(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val tag = "graft.spec.gate"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val drained = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty(tag)) match {
+          case Some("body") => jobs.incrementAndGet()
+          case Some("sentinel") => drained.countDown()
+          case _ =>
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty(tag, "body")
+      try body finally sc.setLocalProperty(tag, "sentinel")
+      sc.parallelize(Seq(1), 1).count()
+      assert(drained.await(30, java.util.concurrent.TimeUnit.SECONDS),
+        "the listener never saw the sentinel job")
+      jobs.get()
+    } finally {
+      sc.setLocalProperty(tag, null)
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  test("a batch with a null ts row fails before the lake is read or " +
+      "written: files, mtimes and rows unchanged") {
+    val path = tmp()
+    seed(path)
+    val filesBefore = files(path)
+    val stateBefore = state(path)
+    val e = intercept[IllegalArgumentException] {
+      Lake.upsertLatest(spark, path,
+        Seq((1L, 2L, Some("2024-01-01 10:00:00"), "a-v2"),
+            (5L, 1L, None, "e-v1"))
+          .toDF("id", "version", "ts", "payload")
+          .withColumn("ts", col("ts").cast("timestamp")),
+        "id", "version", "ts")
+    }
+    assert(e.getMessage.contains("cannot be partition-merged"),
+      e.getMessage)
+    assert(files(path) === filesBefore)
+    assert(state(path) === stateBefore)
+  }
+
+  test("default-mode upsert into an existing lake: at most 5 jobs, no " +
+      "pinned blocks and no staging directories left behind") {
+    val path = tmp()
+    seed(path)
+    val pinned = persistentIds()
+    val batch = Seq(
+      (1L, 2L, "2024-01-01 10:00:00", "a-v2"),
+      (4L, 1L, "2024-01-02 12:00:00", "d-v1"))
+      .toDF("id", "version", "ts", "payload")
+      .withColumn("ts", col("ts").cast("timestamp"))
+    val jobs = jobsOf {
+      Lake.upsertLatest(spark, path, batch, "id", "version", "ts")
+    }
+    info(s"jobs per upsert: $jobs")
+    assert(jobs <= 5, s"$jobs jobs for one upsert")
+    assert((persistentIds() -- pinned).isEmpty, persistentIds() -- pinned)
+    val parent = new java.io.File(path).getParentFile
+    val base = new java.io.File(path).getName
+    assert(!new java.io.File(parent, base + "__upsert_stage").exists())
+    val entries = new java.io.File(path).list().toSeq
+    assert(!entries.exists(_.startsWith(".spark-staging-")),
+      entries.mkString(", "))
+    assert(state(path) === Map(
+      1L -> (2L, "a-v2"), 2L -> (1L, "b-v1"),
+      3L -> (1L, "c-v1"), 4L -> (1L, "d-v1")))
+  }
+
   test("streaming upsert via foreachBatch reaches latest-wins state") {
     implicit val sqlCtx = spark.sqlContext
+    val pinned = persistentIds()
     val path = tmp()
     val input = MemoryStream[(Long, Long, String, String)]
     val updates = input.toDF()
@@ -296,5 +391,9 @@ class LakeUpsertSpec extends SparkSpec {
       query.processAllAvailable()
       assert(state(path) === Map(1L -> (2L, "a-v2"), 2L -> (1L, "b-v1")))
     } finally query.stop()
+    // every micro-batch's pin (and the upsert's staging blocks) is
+    // gone; earlier suites' pins may only have been GC-released since
+    assert((persistentIds() -- pinned).isEmpty,
+      persistentIds() -- pinned)
   }
 }

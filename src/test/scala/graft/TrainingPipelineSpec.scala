@@ -401,6 +401,46 @@ class TrainingPipelineSpec extends SparkSpec {
     assert(e2.getMessage.contains("Reweighted"), e2.getMessage)
   }
 
+  test("shared held-out scoring (band + reweight on ONE reference) is " +
+      "bit-identical to the unshared composition") {
+    def easy(j: Int): String =
+      s"the n${j}a of n${j}b and n${j}c is n${j}d " +
+        s"the n${j}e a n${j}f of n${j}g and n${j}h"
+    def hard(j: Int): String =
+      (0 until 16).map(t => s"zq${j}x$t").mkString(" ")
+    val docs = (
+      (1L to 20L).map(j => (j, easy(j.toInt), "en", "easy", 1L)) ++
+      (21L to 40L).map(j => (j, hard(j.toInt), "und", "hard", 1L))
+    ).toDF("doc_id", "text", "lang", "source", "n_chars")
+    // the reference covers only part of the easy domain, so held-out
+    // scores spread within each group and the band has tails to cut
+    val reference = (1L to 12L).flatMap(j => (0 until 5).map(c =>
+        (10000L + j * 5 + c, easy(j.toInt))))
+      .toDF("doc_id", "text")
+    // the same rows behind a different plan: sameSemantics says no, so
+    // prepare scores twice (the unshared path)
+    val twin = reference.filter(lit(true))
+    assert(reference.sameSemantics(reference))
+    assert(!reference.sameSemantics(twin))
+    val band = Some((10, 90))
+    def run(reweightRef: org.apache.spark.sql.DataFrame) =
+      TrainingPipeline.prepare(docs, spanWords = 0,
+          surprisalBand = band, bandTrain = Some(reference),
+          balance = Some(Balance.Reweighted("source", budget = 12L,
+            maxQuota = 12)),
+          reweightTrain = Some(reweightRef))
+        .select($"doc_id", $"split", $"pack_id", xxhash64($"text"))
+        .as[(Long, String, Long, Long)].collect().sorted.toSeq
+    val shared = run(reference)
+    val unshared = run(twin)
+    // both stages fire: the band cuts docs, the budget binds after it
+    val banded = TrainingPipeline.prepare(docs, spanWords = 0,
+      surprisalBand = band, bandTrain = Some(reference)).count()
+    assert(banded < docs.count() && banded > 12L, s"banded=$banded")
+    assert(shared.size === 12, shared.mkString(","))
+    assert(shared === unshared)
+  }
+
   test("packs are contiguous in doc order and near-budget") {
     val stats = out.groupBy($"pack_id")
       .agg(sum($"n_tokens").as("tok"), min($"doc_id").as("lo"), max($"doc_id").as("hi"))
