@@ -55,25 +55,27 @@ object Bench {
     fullLine.stripSuffix("}") + ",\"commit\":" +
       commit.fold("null")("\"" + _ + "\"") + "}"
 
+  /** SPARK_GRAFT_BENCH_PASSES (default 3, at least 1) and
+    * SPARK_GRAFT_BENCH_RETRIES (default 12, at least 0), read before the
+    * session starts so a bad value fails before any Spark job runs. */
+  private[graft] def passesAndRetries(env: Map[String, String]): (Int, Int) = {
+    def count(key: String, default: Int, min: Int): Int = {
+      val n = env.get(key).fold(Option(default))(_.toIntOption)
+      require(n.exists(_ >= min),
+        s"$key must be an integer >= $min, got '${env(key)}'")
+      n.get
+    }
+    (count("SPARK_GRAFT_BENCH_PASSES", 3, 1),
+      count("SPARK_GRAFT_BENCH_RETRIES", 12, 0))
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // Deep composed plans + AQE stall the DRIVER without this: every
-      // AQE stage completion posts a SQL-UI plan update whose string
-      // the driver renders AND regex-redacts in full — measured at the
-      // 64x octave: 30+ min at ~1 core in generateTreeString/redact
-      // before the first row printed (same lesson on a 1000-executor
-      // cluster: the driver, not the executors, was the bottleneck).
-      // 32 KB keeps plan strings debuggable and bounds the per-update
-      // rendering cost.
-      .config("spark.sql.maxPlanStringLength", "32768")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val (passes, retryCap) = passesAndRetries(sys.env)
+    // local-iteration filter (same contract as Verify's); unset
+    // benches everything
+    val names = Harness.only(SparkEntry.queries.toSeq.sortBy(_._1))
+    val spark = Harness.session()
 
     // warm-up: file indexes + codegen/JIT paths (events needs its
     // dedicated loader — raw read trips on the NANOS timestamp)
@@ -98,17 +100,13 @@ object Bench {
     // failures with full attribution.
     val warmDir = sys.env.getOrElse("SPARK_GRAFT_WARM_DIR",
       "/root/testdata/sf0.001")
-    val onlyW = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(',').toSeq)
-    SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => onlyW.forall(_.exists(name.contains)) }
-      .foreach { case (name, fn) =>
-        try fn(spark, warmDir).count()
-        catch { case scala.util.control.NonFatal(e) =>
-          System.err.println(
-            s"[bench] warm-up $name failed: ${e.getMessage}")
-        }
-        spark.catalog.clearCache()
+    names.foreach { case (name, fn) =>
+      try fn(spark, warmDir).count()
+      catch { case scala.util.control.NonFatal(e) =>
+        System.err.println(s"[bench] warm-up $name failed: ${e.getMessage}")
       }
+      spark.catalog.clearCache()
+    }
 
     // Per-query median of N interleaved passes: pass 1 runs q01..q61,
     // then pass 2 runs q01..q61 again, etc. Interleaving (rather than
@@ -116,12 +114,6 @@ object Bench {
     // queries instead of concentrating it on whichever query was
     // unlucky — single cache-cleared runs produced phantom 3-7×
     // regressions on this shared box (see BASELINE.md variance notes).
-    val passes = sys.env.getOrElse("SPARK_GRAFT_BENCH_PASSES", "3").toInt
-    // local-iteration filter (same contract as Verify's): comma-separated
-    // name substrings; unset — the driver's case — benches everything
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(',').toSeq)
-    val names = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => only.forall(_.exists(name.contains)) }
     val samples = scala.collection.mutable.Map.empty[String, List[Double]]
       .withDefaultValue(Nil)
     val failures = scala.collection.mutable.Map.empty[String, Int]
@@ -219,7 +211,6 @@ object Bench {
     // bench's runtime; attribution rides the full line only.
     def isOutlier(sec: Double, mn: Double): Boolean =
       mn >= 0 && sec > 3 * mn && sec > mn + 1.0
-    val retryCap = sys.env.getOrElse("SPARK_GRAFT_BENCH_RETRIES", "12").toInt
     val outlierQs = names.flatMap { case (name, fn) =>
       val mn = minOr(samples(name))
       val evs = samples(name).reverse.zip(attrib(name).reverse).zipWithIndex

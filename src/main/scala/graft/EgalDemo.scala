@@ -1,7 +1,6 @@
 package graft
 
 import graft.ops.{DescriptiveStats, EarthquakeOps}
-import org.apache.spark.sql.SparkSession
 
 /** CLI demo of the EGAL-parity pipeline: fixture JSON (or a file of
   * JSON lines passed as arg 0) → parse → normalize → enrich → dedup →
@@ -13,14 +12,7 @@ import org.apache.spark.sql.SparkSession
   */
 object EgalDemo {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-      .appName("egal-demo")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
     import spark.implicits._
 
     val fixture = Seq(

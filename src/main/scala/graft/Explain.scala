@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev utility: print the formatted physical plan (and optionally run)
   * selected queries. Usage:
   *   runMain graft.Explain <sfDir> <queryName> [<queryName> ...]
@@ -9,13 +7,11 @@ import org.apache.spark.sql.SparkSession
 object Explain {
   def main(args: Array[String]): Unit = {
     val dir = args.head
-    val spark = SparkSession.builder()
-      .appName("graft-explain")
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
+    // back to Spark's uncapped default: composed plans run far past
+    // 32 KB, and the cap would cut the formatted plan and the
+    // reused-stage count below short
+    spark.conf.unset("spark.sql.maxPlanStringLength")
     for (name <- args.tail) {
       val df = SparkEntry.queries(name)(spark, dir)
       println(s"===== $name =====")

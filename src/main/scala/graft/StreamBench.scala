@@ -76,10 +76,11 @@ object StreamBench {
     (secs, rows, latMs)
   }
 
-  /** Nearest-rank percentile over a latency sample set. */
-  private def pct(samples: Array[Double], p: Double): Double = {
+  /** Nearest-rank percentile over a latency sample set: the
+    * ceil(p·n)-th smallest sample (1-based). */
+  private[graft] def pct(samples: Array[Double], p: Double): Double = {
     val s = samples.sorted
-    s(math.min(s.length - 1, math.max(0, (p * s.length).toInt)))
+    s(math.max(0, math.ceil(p * s.length).toInt - 1))
   }
 
   private def event(id: Long, minute: Int): String =
@@ -89,22 +90,7 @@ object StreamBench {
     val nBatches = args.headOption.filter(_ != "table")
       .map(_.toInt).getOrElse(50)
     val perBatch = args.lift(1).map(_.toInt).getOrElse(2000)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // Deep composed plans + AQE stall the DRIVER without this: every
-      // AQE stage completion posts a SQL-UI plan update whose string
-      // the driver renders AND regex-redacts in full — measured at the
-      // 64x octave: 30+ min at ~1 core in generateTreeString/redact
-      // before the first row printed (same lesson on a 1000-executor
-      // cluster: the driver, not the executors, was the bottleneck).
-      // 32 KB keeps plan strings debuggable and bounds the per-update
-      // rendering cost.
-      .config("spark.sql.maxPlanStringLength", "32768")
-      .getOrCreate()
+    val spark = Harness.session()
     spark.sparkContext.setLogLevel("ERROR")
     // optional state-store provider override (set
     // SPARK_GRAFT_STATE_PROVIDER to the RocksDBStateStoreProvider

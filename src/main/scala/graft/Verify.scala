@@ -1,34 +1,14 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import graft.Harness.jsonStr
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // Deep composed plans + AQE stall the DRIVER without this: every
-      // AQE stage completion posts a SQL-UI plan update whose string
-      // the driver renders AND regex-redacts in full — measured at the
-      // 64x octave: 30+ min at ~1 core in generateTreeString/redact
-      // before the first row printed (same lesson on a 1000-executor
-      // cluster: the driver, not the executors, was the bottleneck).
-      // 32 KB keeps plan strings debuggable and bounds the per-update
-      // rendering cost.
-      .config("spark.sql.maxPlanStringLength", "32768")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session()
     new java.io.File(outDir).mkdirs()
-    // local-iteration filter: comma-separated name substrings; unset
-    // (the driver's case) runs everything
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(',').toSeq)
-    val selected = SparkEntry.queries.filter { case (name, _) =>
-      only.forall(_.exists(name.contains)) }
+    val selected = Harness.only(SparkEntry.queries.toSeq)
     // per-query record for verify_summary.json: ok / rows / seconds /
     // error — the machine-readable side of the dump, so a round whose
     // driver-side oracle compare dies (r16: CORRECTNESS_r16.json came
@@ -77,17 +57,4 @@ object Verify {
       s"$outDir/verify_summary.json")
     spark.stop()
   }
-
-  // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-  // — a tab or CR in builder-authored SQL would otherwise make the
-  // driver's json.load fail and silently zero the round's correctness.
-  private def jsonStr(s: String): String = "\"" + s.flatMap {
-    case '"'  => "\\\""
-    case '\\' => "\\\\"
-    case '\n' => "\\n"
-    case '\r' => "\\r"
-    case '\t' => "\\t"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  } + "\""
 }

@@ -21,6 +21,68 @@ class UtilitySpec extends SparkSpec {
     assert(Bench.headCommit().forall(_.length == 40))
   }
 
+  test("Bench: malformed, zero and negative pass/retry counts fail " +
+      "before any Spark job") {
+    assert(Bench.passesAndRetries(Map.empty) === ((3, 12)))
+    assert(Bench.passesAndRetries(Map("SPARK_GRAFT_BENCH_PASSES" -> "1",
+      "SPARK_GRAFT_BENCH_RETRIES" -> "0")) === ((1, 0)))
+    for ((key, bad) <- Seq("SPARK_GRAFT_BENCH_PASSES" -> "three",
+        "SPARK_GRAFT_BENCH_PASSES" -> "0", "SPARK_GRAFT_BENCH_PASSES" -> "-2",
+        "SPARK_GRAFT_BENCH_RETRIES" -> "", "SPARK_GRAFT_BENCH_RETRIES" -> "-1")) {
+      val e = intercept[IllegalArgumentException](
+        Bench.passesAndRetries(Map(key -> bad)))
+      assert(e.getMessage.contains(key), e.getMessage)
+    }
+  }
+
+  test("ScaleBench selection: unknown sections and names, and names " +
+      "outside the selected sections, fail before any table is written") {
+    // no row runs, so no table is read: the tables dir need not exist
+    val rows = new ScaleBench.Rows(spark, "/nonexistent", 1).rows
+    def names(sections: Option[String], filter: Option[String]) =
+      ScaleBench.select(rows, sections, filter).map(_.name)
+    assert(rows.map(_.name).distinct.size === rows.size)
+    assert(names(None, None) === rows.map(_.name))
+    assert(names(Some("guards"), None) ===
+      rows.filter(_.section == "guards").map(_.name))
+    // table order, not argument order
+    assert(names(Some("pipelines"), Some("minhash_pairs,agg_q01_shape")) ===
+      Seq("agg_q01_shape", "minhash_pairs"))
+    assert(names(Some("guards,pipelines"), Some("ann_recall,bloom_index")) ===
+      Seq("ann_recall", "bloom_index"))
+    for ((sections, filter) <- Seq(
+        (Some("guards"), Some("ann_recall")),
+        (Some("guards"), Some("minhash_pairs")),
+        (Some("pipelines"), Some("bloom_index")),
+        (Some("pipelines"), Some("minhash_pairz")),
+        (None, Some("apportion_1m_keys,typo")),
+        (Some("guard"), None),
+        (Some(""), None))) {
+      intercept[IllegalArgumentException](names(sections, filter))
+    }
+  }
+
+  test("StreamBench.pct is nearest-rank: the ceil(p*n)-th smallest") {
+    val samples = (1 to 40).map(_.toDouble).reverse.toArray
+    assert(StreamBench.pct(samples, 0.50) === 20.0)
+    assert(StreamBench.pct(samples, 0.95) === 38.0)
+    assert(StreamBench.pct(samples, 1.0) === 40.0)
+    assert(StreamBench.pct(Array(7.0), 0.5) === 7.0)
+  }
+
+  test("Harness is the only main-source file that builds a SparkSession") {
+    val main = new java.io.File("src/main/scala")
+    assert(main.isDirectory, s"run from the project root: $main")
+    def files(d: java.io.File): Seq[java.io.File] =
+      d.listFiles().toSeq.flatMap(f => if (f.isDirectory) files(f) else Seq(f))
+    val builders = files(main).filter(_.getName.endsWith(".scala"))
+      .filter { f =>
+        val src = scala.io.Source.fromFile(f, "UTF-8")
+        try src.mkString.contains("SparkSession.builder") finally src.close()
+      }.map(_.getName)
+    assert(builders === Seq("Harness.scala"))
+  }
+
   test("ivfTopK: reasonable recall of brute-force neighbors on real embeddings") {
     val emb = Tables.embeddings(spark, "/root/testdata/sf0.01")
     val queries = emb.filter($"vec_id" < 5)
