@@ -1,6 +1,8 @@
 package graft
 
+import graft.operators.Hydration
 import graft.ops.{DescriptiveStats, EarthquakeOps}
+import org.apache.spark.sql.DataFrame
 
 /** CLI demo of the EGAL-parity pipeline: fixture JSON (or a file of
   * JSON lines passed as arg 0) → parse → normalize → enrich → dedup →
@@ -25,9 +27,18 @@ object EgalDemo {
                else fixture.toDF("json"))
       .selectExpr("cast(json as binary) as value")
 
+    report(raw)
+    spark.stop()
+  }
+
+  /** Parse, normalize, enrich and dedup `raw` (JSON arrays in a binary
+    * `value` column) and print the events, the region counts, the
+    * magnitude extremes and the one-pass stats. The deduped frame is
+    * pinned for the four reports and released when they finish. */
+  def report(raw: DataFrame): Unit = Hydration.scoped {
     val enriched = EarthquakeOps.enrich(
       EarthquakeOps.normalizeDate(EarthquakeOps.parseEvents(raw)))
-    val deduped = EarthquakeOps.dedupWholeRow(enriched).cache()
+    val deduped = Hydration.persist(EarthquakeOps.dedupWholeRow(enriched))
 
     println("=== enriched + deduped events ===")
     deduped.orderBy("eventID").show(20, truncate = false)
@@ -41,8 +52,5 @@ object EgalDemo {
     println("=== one-pass descriptive stats ===")
     DescriptiveStats.compute(deduped,
       Seq("depth", "magnitude", "latitude", "longitude", "rms")).show()
-
-    deduped.unpersist()
-    spark.stop()
   }
 }

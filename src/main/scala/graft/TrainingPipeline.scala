@@ -89,8 +89,8 @@ object TrainingPipeline {
     *  - `none` — [[graft.operators.Hydration.persist]] at the same
     *    points (the pre-r17 shape): full lineage retained, useful when
     *    a caller needs the composed plan inspectable end-to-end
-    *    (PlanQualitySpec's sweep) or wants the hydration conf to
-    *    govern storage.
+    *    (PlanQualitySpec's sweep) or wants Spark's
+    *    `spark.sql.defaultCacheStorageLevel` to govern storage.
     *
     * All three policies are bit-identical in OUTPUT (each boundary
     * holds exactly the rows the lazy plan computes — asserted by

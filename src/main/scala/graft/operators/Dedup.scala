@@ -29,10 +29,13 @@ import org.apache.spark.sql.types._
   * (hydration joins on a different key than the candidate join —
   * `lshCandidates`' shingles, `dedupIncremental`'s corpus index and
   * batch projection, `sparseCosineTopK`'s vector aggregate). Such
-  * caches stay registered until the session's LRU evicts them or the
-  * caller/harness runs `spark.catalog.clearCache()` — Bench and
-  * Verify do so after every query. Their storage LEVEL is the
-  * session-wide [[Hydration.StorageLevelConf]] dial (MEMORY_AND_DISK
+  * caches go through [[Hydration.persist]]: inside a
+  * [[Hydration.scoped]] block (every eager operator here runs in one)
+  * they are released when the block exits; called from plain caller
+  * code they stay registered until the session's LRU evicts them or
+  * the caller/harness runs `spark.catalog.clearCache()` — Bench and
+  * Verify do so after every query. Their storage LEVEL is Spark's
+  * session-wide `spark.sql.defaultCacheStorageLevel` (MEMORY_AND_DISK
   * default; NONE = recompute per reference — at 100 TB a shingle
   * projection is petabyte-class and LRU thrash beats recompute; see
   * [[Hydration]] for the policy discussion and
@@ -170,8 +173,9 @@ object Dedup {
     val r = k / bands
     // hydration persist: the shingle projection feeds the signature
     // pass AND the verify-side lookups — 3 recomputes at level NONE
-    // (LRU evicts it after the query; a few GB per million docs at the
-    // default level — size or disable via [[Hydration]])
+    // (released by the caller's scope, else LRU-evicted after the
+    // query; a few GB per million docs at the default level — size or
+    // disable via `spark.sql.defaultCacheStorageLevel`, see [[Hydration]])
     val shingled = Hydration.persist(docs
       .select(col(idCol).as("id"), shingles(col(textCol), shingleSize).as("sh"))
       .filter(size(col("sh")) > 0))
@@ -252,23 +256,13 @@ object Dedup {
       idCol: String = "doc_id", textCol: String = "text",
       shingleSize: Int = 3, k: Int = -1, bands: Int = -1,
       maxBucket: Int = HotBuckets.DefaultCap,
-      strict: Boolean = false): DataFrame =
-    minHashDupPairsWithPin(docs, threshold, idCol, textCol, shingleSize,
-      k, bands, maxBucket, strict)._1
-
-  /** [[minHashDupPairs]] plus its hydration-persisted shingle pin, so
-    * an EAGER caller can unpersist it once the result is materialized
-    * ([[leakageSafeSplit]]; the [[ingestBatch]] discipline). */
-  private def minHashDupPairsWithPin(docs: DataFrame, threshold: Double,
-      idCol: String, textCol: String, shingleSize: Int, k: Int,
-      bands: Int, maxBucket: Int,
-      strict: Boolean): (DataFrame, DataFrame) = {
+      strict: Boolean = false): DataFrame = {
     val (kk, bb) = resolveLsh(threshold, k, bands)
     val (pairs, shingled) = lshCandidatePairs(docs, idCol, textCol,
       shingleSize, kk, bb, maxBucket, strict)
-    (hashedGramJaccard(pairs, "id_a", "id_b", shingled, shingled)
+    hashedGramJaccard(pairs, "id_a", "id_b", shingled, shingled)
       .filter(col("jaccard") >= threshold)
-      .select(col("id_a"), col("id_b"), col("jaccard")), shingled)
+      .select(col("id_a"), col("id_b"), col("jaccard"))
   }
 
   /** SimHash-64 signatures over shingle hashes — native single-pass
@@ -480,13 +474,13 @@ object Dedup {
     *
     * Output: (id, comp) with comp = the component's min id. */
   def connectedComponents(pairs: DataFrame, maxIter: Int = 25,
-      driverThreshold: Long = 1000000L): DataFrame = {
+      driverThreshold: Long = 1000000L): DataFrame = Hydration.scoped {
     val spark = pairs.sparkSession
     import spark.implicits._
-    val p = pairs.select(col("id_a").cast("long"), col("id_b").cast("long"))
-      .cache()
-    val nEdges = p.count()
-    if (nEdges <= driverThreshold) {
+    val p = Hydration.persist(
+      pairs.select(col("id_a").cast("long"), col("id_b").cast("long")))
+    if (p.count() > driverThreshold) largeSmallStar(p, maxIter)
+    else {
       val parent = scala.collection.mutable.Map.empty[Long, Long]
       def find(x: Long): Long = {
         var r = x
@@ -501,13 +495,8 @@ object Dedup {
         if (ra != rb) { if (ra < rb) parent(rb) = ra else parent(ra) = rb }
       }
       val ids = collected.flatMap(t => Seq(t._1, t._2)).distinct
-      val out = ids.toSeq.map(id => (id, find(id))).toDF("id", "comp")
-      p.unpersist()
-      return out
+      ids.toSeq.map(id => (id, find(id))).toDF("id", "comp")
     }
-    val out = largeSmallStar(p, maxIter)
-    p.unpersist()
-    out
   }
 
   /** One LARGE-STAR pass: for each node u (over the symmetric
@@ -560,15 +549,14 @@ object Dedup {
       val r = e.agg(count(lit(1)), bit_xor(xxhash64(col("u"), col("v")))).head()
       (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
     }
-    val seed = p.select(col("id_a").as("u"), col("id_b").as("v"))
-      .filter(col("u") =!= col("v"))
-      .distinct()
-      .cache()
+    val seed = Hydration.persist(
+      p.select(col("id_a").as("u"), col("id_b").as("v"))
+        .filter(col("u") =!= col("v"))
+        .distinct())
     var edges = seed
     var sumCur = summarize(edges)
     var converged = false
     var i = 0
-    try {
     while (!converged && i < maxIter) {
       val step = smallStarStep(largeStarStep(edges))
       // localCheckpoint EVERY round (r17). The previous shape
@@ -590,20 +578,13 @@ object Dedup {
       converged = sumNext == sumCur &&
         next.join(edges, Seq("u", "v"), "left_anti").isEmpty
       // round 0's input is the CACHED seed frame — release it as soon
-      // as it's superseded (the finally below only covers exit paths
-      // that never reached this point; unpersist is idempotent); later
-      // generations are checkpoints and need no unpersist
+      // as it's superseded, a memory bound at scale (the caller's scope
+      // releases it on every other exit path; unpersist is idempotent);
+      // later generations are checkpoints and need no unpersist
       if (i == 0) edges.unpersist()
       edges = next
       sumCur = sumNext
       i += 1
-    }
-    } finally {
-      // every exit path releases the seed: maxIter <= 0 skips the loop
-      // entirely, and a failure inside round 0 (summarize/checkpoint)
-      // propagates before the in-loop unpersist — either would pin the
-      // seed in the CacheManager for the session's lifetime otherwise
-      seed.unpersist()
     }
     // fail FAST, like lshParams: returning possibly under-merged labels
     // would let dedupCorpus/semanticCollapse silently keep extra
@@ -624,8 +605,8 @@ object Dedup {
       .union(edges.select(col("v").as("id"), col("v").as("comp")))
       .groupBy(col("id")).agg(min(col("comp")).as("comp"))
     // eager checkpoint of the (node, comp) result — one row per node —
-    // so the final edge generation can be RELEASED here: returning a
-    // lazy plan over the cached edges would pin one frame per call in
+    // so the caller's scope can RELEASE the pinned input: returning a
+    // lazy plan over the cached pairs would pin one frame per call in
     // the CacheManager for the session's lifetime (the exact leak the
     // caching contract above forbids; checkpoint blocks, by contrast,
     // are freed by the ContextCleaner once the RDD is unreferenced)
@@ -721,19 +702,7 @@ object Dedup {
       jaccardThreshold: Double = 0.8,
       idCol: String = "doc_id", textCol: String = "text",
       shingleSize: Int = 3, k: Int = -1, bands: Int = -1,
-      maxBucket: Int = HotBuckets.DefaultCap): DataFrame =
-    dedupIncrementalIndexedWithProj(newDocs, corpusIndex, jaccardThreshold,
-      idCol, textCol, shingleSize, k, bands, maxBucket)._1
-
-  /** [[dedupIncrementalIndexed]] plus the internal hydrated batch
-    * projections (shingle proj + fingerprinted batch), so an EAGER
-    * caller ([[ingestBatch]]) can unpersist them once the result is
-    * materialized — the lazy public form must leave the caches alive
-    * for the frame it returns. */
-  private def dedupIncrementalIndexedWithProj(newDocs: DataFrame,
-      corpusIndex: DataFrame, jaccardThreshold: Double,
-      idCol: String, textCol: String, shingleSize: Int, k: Int,
-      bands: Int, maxBucket: Int): (DataFrame, Seq[DataFrame]) = {
+      maxBucket: Int = HotBuckets.DefaultCap): DataFrame = {
     // fail fast on a dial mismatch with the index's build: comparing
     // 3-gram batch shingles to a 5-gram index gives jaccard ~ 0 and
     // silently lets every cross duplicate through (pure schema check —
@@ -824,8 +793,7 @@ object Dedup {
         proj, corpusShingled)
       .filter(col("jaccard") >= jaccardThreshold)
       .select(col("new_id").as(idCol)).distinct()
-    (afterExact.join(dupNewIds, Seq(idCol), "left_anti"),
-      Seq(proj, fped))
+    afterExact.join(dupNewIds, Seq(idCol), "left_anti")
   }
 
   /** Append a batch's ACCEPTED survivors to an existing corpus index —
@@ -871,9 +839,10 @@ object Dedup {
     * survivor against itself (returning an empty frame). The
     * checkpoint pins the result computed against the PRE-append index
     * and the append re-shingles only the O(batch) survivors from
-    * those blocks; the internal batch projection cache is unpersisted
-    * before returning (the repeated-batch API must not accumulate one
-    * pinned frame per ingestion across a long-lived job).
+    * those blocks; the internal batch projection pins are released
+    * right after the checkpoint by a [[Hydration.scoped]] block (the
+    * repeated-batch API must not accumulate one pinned frame per
+    * ingestion across a long-lived job).
     * (localCheckpoint blocks do not survive executor loss; a caller
     * needing a fault-tolerant handle writes the returned frame to the
     * lake and reads it back.)
@@ -897,13 +866,12 @@ object Dedup {
       shingleSize: Int = 3, k: Int = -1, bands: Int = -1,
       maxBucket: Int = HotBuckets.DefaultCap): DataFrame = {
     val index = spark.read.parquet(indexPath)
-    val (result, pins) = dedupIncrementalIndexedWithProj(batch, index,
+    // the checkpoint materializes everything the batch projection pins
+    // feed, and the scope releases them right after it: holding them
+    // past this call would leak pinned frames per ingestion
+    val accepted = Hydration.scoped(dedupIncrementalIndexed(batch, index,
       jaccardThreshold, idCol, textCol, shingleSize, k, bands, maxBucket)
-    val accepted = result.localCheckpoint()
-    // the checkpoint materialized everything the projection caches
-    // feed; holding them past this call would leak pinned frames
-    // per ingestion
-    pins.foreach(_.unpersist())
+      .localCheckpoint())
     buildCorpusIndex(accepted, shingleSize, idCol, textCol)
       .write.mode("append").parquet(indexPath)
     accepted
@@ -1400,14 +1368,14 @@ object Dedup {
     * so its rep never merges with a content cluster.
     *
     * EAGER: the result is local-checkpointed before returning, so the
-    * fingerprint and shingle pins are released inside the call (the
-    * [[ingestBatch]] discipline); the only storage left behind is the
-    * result's own checkpoint blocks. */
+    * fingerprint and shingle pins are released inside the call, on
+    * every exit path ([[Hydration.scoped]]); the only storage left
+    * behind is the result's own checkpoint blocks. */
   def leakageSafeSplit(docs: DataFrame, trainPct: Int,
       jaccardThreshold: Double = 0.8, idCol: String = "doc_id",
       textCol: String = "text", shingleSize: Int = 3,
       maxBucket: Int = HotBuckets.DefaultCap,
-      strict: Boolean = false): DataFrame = {
+      strict: Boolean = false): DataFrame = Hydration.scoped {
     require(trainPct >= 1 && trainPct <= 99,
       s"trainPct=$trainPct must be in [1, 99] — 0 or 100 is not a split")
     val withFp = Hydration.persist(
@@ -1429,12 +1397,11 @@ object Dedup {
     val exactReps = joinRep(withFp)
       .filter(col(idCol) === col("__rep0"))
       .drop("__fp", "__rep0")
-    val (pairs, shingled) = minHashDupPairsWithPin(exactReps,
-      jaccardThreshold, idCol, textCol, shingleSize, -1, -1, maxBucket,
-      strict)
+    val pairs = minHashDupPairs(exactReps, jaccardThreshold, idCol,
+      textCol, shingleSize, maxBucket = maxBucket, strict = strict)
     val comps = connectedComponents(pairs)
       .withColumnRenamed("id", "__rep0")
-    val out = joinRep(withFp)
+    joinRep(withFp)
       .join(comps, Seq("__rep0"), "left")
       .withColumn("split_rep", coalesce(col("comp"), col("__rep0")))
       .withColumn("split",
@@ -1442,11 +1409,6 @@ object Dedup {
           lit("train")).otherwise(lit("eval")))
       .drop("__fp", "__rep0", "comp")
       .localCheckpoint()
-    // the checkpoint materialized everything the pins feed; holding
-    // them past this call would leak corpus-scale frames per call
-    withFp.unpersist()
-    shingled.unpersist()
-    out
   }
 
   /** Contamination FRACTION per document — the tolerance-threshold

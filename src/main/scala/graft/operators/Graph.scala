@@ -33,11 +33,12 @@ import org.apache.spark.sql.functions._
   * `dst` — both shuffles are on graph keys Spark can hash-partition
   * and AQE can skew-split; rank state is O(nodes) and distributed.
   * The edge table is degree-annotated ONCE up front and hydrated
-  * ([[Hydration]] dial), not recomputed per iteration; each
-  * iteration's ranks are `localCheckpoint`ed so lineage stays O(1)
-  * deep (the same discipline as the distributed connected-components
-  * loop). Dangling nodes (no out-edges) contribute nothing — their
-  * mass evaporates rather than teleporting, the documented variant
+  * ([[Hydration.persist]], released when the call exits), not
+  * recomputed per iteration; each iteration's ranks are
+  * `localCheckpoint`ed so lineage stays O(1) deep (the same
+  * discipline as the distributed connected-components loop). Dangling
+  * nodes (no out-edges) contribute nothing — their mass evaporates
+  * rather than teleporting, the documented variant
   * (uniform redistribution would need an extra global aggregate per
   * iteration; callers who need it can add a sink node).
   */
@@ -60,7 +61,7 @@ object Graph {
     */
   def pageRankInt(edges: DataFrame, iters: Int,
       scale: Long = 1000000000000L, dampNum: Long = 85L,
-      dedupEdges: Boolean = true): DataFrame = {
+      dedupEdges: Boolean = true): DataFrame = Hydration.scoped {
     require(iters >= 1, s"iters must be >= 1, got $iters")
     require(dampNum >= 0L && dampNum <= 100L,
       s"dampNum is a percentage, got $dampNum")
@@ -136,10 +137,6 @@ object Graph {
       // planning than they save in materialization barriers.
       ranks = ranks.localCheckpoint()
     }
-    nodes.unpersist()
-    noInbound.unpersist()
-    eDeg.unpersist()
-    e.unpersist()
     ranks
   }
 

@@ -204,7 +204,7 @@ object Similarity {
   def projectedTopK(queries: DataFrame, corpus: DataFrame, k: Int,
       dim: Int, outDim: Int, pool: Int,
       idCol: String = "vec_id", vecCol: String = "embedding",
-      broadcastLimit: Int = DefaultBroadcastLimit): DataFrame = {
+      broadcastLimit: Int = DefaultBroadcastLimit): DataFrame = Hydration.scoped {
     require(k >= 1, s"k must be >= 1, got $k")
     require(pool >= k, s"pool=$pool must cover k=$k")
     require(outDim >= 1 && outDim <= dim,
@@ -225,9 +225,7 @@ object Similarity {
       .join(qSide.select(col("q_id"), col("q_proj")),
         col("q_id") =!= col("n_id"))
       .withColumn("ascore", round(dot(col("q_proj"), col("n_proj")), 4))
-    val out = rerankTopK(approx, "ascore", c, qSide, k, pool)
-    q.unpersist(); c.unpersist()
-    out
+    rerankTopK(approx, "ascore", c, qSide, k, pool)
   }
 
   /** Projected IVF ANN — the 100 TB composition of [[randomProjection]]
@@ -257,7 +255,7 @@ object Similarity {
       dim: Int, outDim: Int, nCells: Int, nProbe: Int, pool: Int,
       idCol: String = "vec_id", vecCol: String = "embedding",
       broadcastLimit: Int = DefaultBroadcastLimit,
-      centroids: Option[Seq[Seq[Double]]] = None): DataFrame = {
+      centroids: Option[Seq[Seq[Double]]] = None): DataFrame = Hydration.scoped {
     require(k >= 1, s"k must be >= 1, got $k")
     require(pool >= k, s"pool=$pool must cover k=$k")
     require(outDim >= 1 && outDim <= dim,
@@ -322,9 +320,7 @@ object Similarity {
       .filter(col("q_id") =!= col("n_id"))
       .withColumn("ascore", round(dot(col("q_proj"), col("n_proj")), 4))
     val qSide = if (broadcastQ) broadcast(q) else q.hint("shuffle_hash")
-    val out = rerankTopK(approx, "ascore", c, qSide, k, pool)
-    q.unpersist(); c.unpersist()
-    out
+    rerankTopK(approx, "ascore", c, qSide, k, pool)
   }
 
   /** The pool-then-exact-re-rank tail shared by [[pqTopK]],
@@ -501,20 +497,19 @@ object Similarity {
     * readout). Empty cells keep their previous centroid. */
   def kmeansCentroids(vectors: DataFrame, nCells: Int, iters: Int,
       dim: Int, idCol: String = "vec_id",
-      vecCol: String = "embedding"): Seq[Seq[Double]] = {
+      vecCol: String = "embedding"): Seq[Seq[Double]] = Hydration.scoped {
     // zero-norm/non-finite vectors excluded — see [[unitVectors]] (a
     // NaN component would otherwise crash the ANSI decimal cast in the
     // mean aggregate below)
     // HYDRATION-PINNED (the pqCodebooks discipline — this operator IS
-    // the multi-consumer, so the pin is operator-owned and released in
-    // the finally): the seed scan + every Lloyd iteration otherwise
+    // the multi-consumer, so the pin is operator-owned and released by
+    // its scope): the seed scan + every Lloyd iteration otherwise
     // re-executes the ENTIRE upstream chain — for a trained
     // projected-IVF caller that chain is the full JL projection, paid
     // iters+1 times per training run (measured: q148 isolated floor
     // 6.81 → see BASELINE for the post-pin number)
     val v = Hydration.persist(
       unitVectors(vectors, idCol, vecCol).select(col("id"), col("vec")))
-    try {
     var centroids: Seq[Seq[Double]] = v
       .groupBy(col("vec")).agg(min(col("id")).as("sid"))
       .orderBy(col("sid")).limit(nCells)
@@ -557,7 +552,6 @@ object Similarity {
       }
     }
     centroids
-    } finally v.unpersist()
   }
 
   /** Hashing-trick TF vectors from raw text — the stub-free
@@ -587,8 +581,9 @@ object Similarity {
     // the sparse-vector aggregate feeds four plan references (two norm
     // joins, the query side, the neighbor side) — hydration-persist it
     // so the upstream tokenize+count runs once (the lshCandidates
-    // discipline; LRU evicts after the query, level/recompute via
-    // [[Hydration.StorageLevelConf]])
+    // discipline; released by the caller's scope, else LRU-evicted
+    // after the query; level/recompute via Spark's
+    // `spark.sql.defaultCacheStorageLevel`, see [[Hydration]])
     val cached = Hydration.persist(vectors)
     val norms = Hydration.persist(cached.groupBy(col("id"))
       .agg(sqrt(sum(col("cnt") * col("cnt")).cast(DoubleType)).as("nrm")))
@@ -692,7 +687,7 @@ object Similarity {
     * @return codebooks(s)(cell) = centroid of subspace s */
   def pqCodebooks(vectors: DataFrame, dim: Int, m: Int, nCent: Int,
       iters: Int, idCol: String = "vec_id",
-      vecCol: String = "embedding"): Seq[Seq[Seq[Double]]] = {
+      vecCol: String = "embedding"): Seq[Seq[Seq[Double]]] = Hydration.scoped {
     require(m >= 1 && dim % m == 0, s"dim=$dim must split into m=$m subspaces")
     require(nCent >= 1, s"nCent must be >= 1, got $nCent")
     require(iters >= 0,
@@ -746,7 +741,6 @@ object Similarity {
         }
       }
     }
-    subs.unpersist()
     books
   }
 
@@ -813,7 +807,7 @@ object Similarity {
   def pqTopK(queries: DataFrame, corpus: DataFrame, k: Int, dim: Int,
       books: Seq[Seq[Seq[Double]]], pool: Int,
       idCol: String = "vec_id", vecCol: String = "embedding",
-      broadcastLimit: Int = DefaultBroadcastLimit): DataFrame = {
+      broadcastLimit: Int = DefaultBroadcastLimit): DataFrame = Hydration.scoped {
     val m = books.size
     require(m >= 1 && dim % m == 0, s"dim=$dim must split into m=$m subspaces")
     require(k >= 1, s"k must be >= 1, got $k")
@@ -839,10 +833,7 @@ object Similarity {
       .join(qSide.select(col("q_id"), col("tbl")),
         col("q_id") =!= col("n_id"))
       .withColumn("adc", adcScore(col("codes"), col("tbl"), m))
-    val out = rerankTopK(approx, "adc", c, qSide, k, pool)
-    c.unpersist()
-    q.unpersist()
-    out
+    rerankTopK(approx, "adc", c, qSide, k, pool)
   }
 
   /** IVF-PQ top-k — the faiss-lineage composition of [[ivfTopK]]'s
@@ -877,7 +868,7 @@ object Similarity {
       centroids: Seq[Seq[Double]], books: Seq[Seq[Seq[Double]]],
       nProbe: Int, pool: Int,
       idCol: String = "vec_id", vecCol: String = "embedding",
-      broadcastLimit: Int = DefaultBroadcastLimit): DataFrame = {
+      broadcastLimit: Int = DefaultBroadcastLimit): DataFrame = Hydration.scoped {
     val m = books.size
     require(m >= 1 && dim % m == 0, s"dim=$dim must split into m=$m subspaces")
     require(k >= 1, s"k must be >= 1, got $k")
@@ -938,10 +929,7 @@ object Similarity {
       .filter(col("q_id") =!= col("n_id"))
       .withColumn("adc", adcScore(col("codes"), col("tbl"), m))
     val qSide = if (broadcastQ) broadcast(q) else q.hint("shuffle_hash")
-    val out = rerankTopK(approx, "adc", c, qSide, k, pool)
-    c.unpersist()
-    q.unpersist()
-    out
+    rerankTopK(approx, "adc", c, qSide, k, pool)
   }
 
   /** Maximal-marginal-relevance diverse selection (Carbonell &
@@ -967,7 +955,8 @@ object Similarity {
     * `(step, vec_id, score)`; fewer than k candidates ends the walk
     * early with the rows selected so far. */
   def mmrSelect(vectors: DataFrame, queryId: Long, k: Int,
-      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
+      idCol: String = "vec_id",
+      vecCol: String = "embedding"): DataFrame = Hydration.scoped {
     require(k >= 1 && k <= 100,
       s"k=$k outside [1, 100] — the greedy loop is k driver actions")
     val spark = vectors.sparkSession
@@ -990,34 +979,32 @@ object Similarity {
     val qvec = qRows(0).getSeq[Double](1)
     val cand = Hydration.persist(base.filter(col("id") =!= queryId)
       .withColumn("rel4", round(cosine(col("vec"), constVec(qvec)), 4)))
-    try {
-      val picked = scala.collection.mutable.ArrayBuffer[(Long, Double)]()
-      var continue = true
-      while (continue && picked.size < k) {
-        val notPicked =
-          if (picked.isEmpty) cand
-          else cand.filter(!col("id").isin(picked.map(_._1).toSeq: _*))
-        val top =
-          if (picked.isEmpty)
-            notPicked.select(col("id"), col("rel4").as("score"))
-              .orderBy(col("score").desc, col("id")).limit(1).collect()
-          else {
-            val selVecs = cand
-              .filter(col("id").isin(picked.map(_._1).toSeq: _*))
-              .select(col("id").as("s_id"), col("vec").as("s_vec"))
-            notPicked.crossJoin(broadcast(selVecs))
-              .groupBy(col("id"), col("rel4"))
-              .agg(max(round(cosine(col("vec"), col("s_vec")), 4))
-                .as("ms4"))
-              .select(col("id"), (col("rel4") - col("ms4")).as("score"))
-              .orderBy(col("score").desc, col("id")).limit(1).collect()
-          }
-        if (top.isEmpty) continue = false
-        else picked += ((top(0).getLong(0), top(0).getDouble(1)))
-      }
-      picked.toSeq.zipWithIndex
-        .map { case ((id, sc), i) => (i + 1L, id, sc) }
-        .toDF("step", "vec_id", "score")
-    } finally cand.unpersist()
+    val picked = scala.collection.mutable.ArrayBuffer[(Long, Double)]()
+    var continue = true
+    while (continue && picked.size < k) {
+      val notPicked =
+        if (picked.isEmpty) cand
+        else cand.filter(!col("id").isin(picked.map(_._1).toSeq: _*))
+      val top =
+        if (picked.isEmpty)
+          notPicked.select(col("id"), col("rel4").as("score"))
+            .orderBy(col("score").desc, col("id")).limit(1).collect()
+        else {
+          val selVecs = cand
+            .filter(col("id").isin(picked.map(_._1).toSeq: _*))
+            .select(col("id").as("s_id"), col("vec").as("s_vec"))
+          notPicked.crossJoin(broadcast(selVecs))
+            .groupBy(col("id"), col("rel4"))
+            .agg(max(round(cosine(col("vec"), col("s_vec")), 4))
+              .as("ms4"))
+            .select(col("id"), (col("rel4") - col("ms4")).as("score"))
+            .orderBy(col("score").desc, col("id")).limit(1).collect()
+        }
+      if (top.isEmpty) continue = false
+      else picked += ((top(0).getLong(0), top(0).getDouble(1)))
+    }
+    picked.toSeq.zipWithIndex
+      .map { case ((id, sc), i) => (i + 1L, id, sc) }
+      .toDF("step", "vec_id", "score")
   }
 }

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.ops.EarthquakeOps
+import graft.operators.Hydration
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode, StreamingQuery, Trigger}
@@ -107,7 +108,8 @@ object Jobs {
     * The batch is persisted for the call: the upsert reads it twice
     * (probe, then merge), and an unpersisted foreachBatch frame
     * re-runs its source on every pass — a Kafka batch would be fetched
-    * once per read. Released in `finally`, so no batch stays pinned. */
+    * once per read. Released by a [[Hydration.scoped]] block,
+    * so no batch stays pinned, even when the upsert throws. */
   def upsertStream(updates: DataFrame, path: String, checkpoint: String,
       keyCol: String, versionCol: String, tsCol: String,
       trigger: Trigger = Trigger.ProcessingTime(0)): DataStreamWriter[Row] =
@@ -116,9 +118,7 @@ object Jobs {
       .option("checkpointLocation", checkpoint)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        batch.persist()
-        try graft.sources.Lake.upsertLatest(
-          batch.sparkSession, path, batch, keyCol, versionCol, tsCol)
-        finally batch.unpersist()
+        Hydration.scoped(graft.sources.Lake.upsertLatest(batch.sparkSession,
+          path, Hydration.persist(batch), keyCol, versionCol, tsCol))
       }
 }

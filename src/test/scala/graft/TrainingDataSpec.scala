@@ -278,13 +278,15 @@ class DedupSpec extends SparkSpec {
       Similarity.sparseCosineTopK(
         Similarity.sparseTfVectors(docs, dim = 32), col("id") < 2, k = 3)
         .collect().map(_.toString).sorted.toSeq)
-    val withCache = runAll()
-    spark.conf.set(graft.operators.Hydration.StorageLevelConf, "NONE")
+    // scoped: the lazy operators' pins are released before the NONE
+    // half, which would otherwise read them instead of recomputing
+    val withCache = graft.operators.Hydration.scoped(runAll())
+    spark.conf.set("spark.sql.defaultCacheStorageLevel", "NONE")
     try {
       val recomputed = runAll()
       assert(recomputed === withCache,
         "hydration level must only move cost, never results")
-    } finally spark.conf.unset(graft.operators.Hydration.StorageLevelConf)
+    } finally spark.conf.unset("spark.sql.defaultCacheStorageLevel")
   }
 
   test("a parquet-persisted corpus index replays dedupIncremental exactly") {

@@ -70,17 +70,42 @@ class UtilitySpec extends SparkSpec {
     assert(StreamBench.pct(Array(7.0), 0.5) === 7.0)
   }
 
-  test("Harness is the only main-source file that builds a SparkSession") {
+  /** (file name, source text) of every `src/main` Scala file. */
+  private def mainSources: Seq[(String, String)] = {
     val main = new java.io.File("src/main/scala")
     assert(main.isDirectory, s"run from the project root: $main")
     def files(d: java.io.File): Seq[java.io.File] =
       d.listFiles().toSeq.flatMap(f => if (f.isDirectory) files(f) else Seq(f))
-    val builders = files(main).filter(_.getName.endsWith(".scala"))
-      .filter { f =>
-        val src = scala.io.Source.fromFile(f, "UTF-8")
-        try src.mkString.contains("SparkSession.builder") finally src.close()
-      }.map(_.getName)
+    files(main).filter(_.getName.endsWith(".scala")).map { f =>
+      val src = scala.io.Source.fromFile(f, "UTF-8")
+      try (f.getName, src.mkString) finally src.close()
+    }
+  }
+
+  test("Harness is the only main-source file that builds a SparkSession") {
+    val builders = mainSources
+      .filter(_._2.contains("SparkSession.builder")).map(_._1)
     assert(builders === Seq("Harness.scala"))
+  }
+
+  test("Hydration is the one pin module: no bare cache/persist, and " +
+      "unpersist only at the two sanctioned releases") {
+    // code lines only: scaladoc and line comments may name the calls
+    val code = for {
+      (name, src) <- mainSources if name != "Hydration.scala"
+      line <- src.linesIterator.map(_.trim)
+      if !Seq("//", "*", "/*").exists(line.startsWith)
+    } yield (name, line)
+    val bare = code.filter { case (_, l) =>
+      l.contains(".cache()") ||
+        l.replace("Hydration.persist(", "").contains(".persist(")
+    }
+    assert(bare.isEmpty, s"pin through Hydration.persist: $bare")
+    // Lake's checkpoint-RDD release, and largeSmallStar's round-0
+    // release of its seed (a memory bound at scale)
+    assert(code.filter(_._2.contains(".unpersist(")).sorted === Seq(
+      ("Dedup.scala", "if (i == 0) edges.unpersist()"),
+      ("Lake.scala", "r.rdd.unpersist(blocking = false)")))
   }
 
   test("ivfTopK: reasonable recall of brute-force neighbors on real embeddings") {
