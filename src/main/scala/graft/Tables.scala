@@ -11,10 +11,56 @@ import org.apache.spark.sql.types._
   *
   * At cluster scale the same loaders work against a partitioned lake
   * (directory of files); nothing here assumes a single file.
+  *
+  * SCHEMA MEMO: `spark.read.parquet(path)` runs one footer-scan Spark
+  * job per reader to infer the schema, even for one file: one job per
+  * table a query reads. [[schemaOf]] infers each
+  * table FILE's schema once per JVM and [[table]] reads with it, so a
+  * warm read starts no job.
+  *  - Key: the qualified path, the file's length and modification
+  *    time, and the session's parquet-inference confs (every set conf
+  *    whose key contains `parquet`, e.g.
+  *    `spark.sql.legacy.parquet.nanosAsLong`, plus
+  *    `spark.sql.caseSensitive`). A rewritten file or a flipped conf
+  *    is a new key.
+  *  - Scope: regular files only. A directory (the partitioned lake)
+  *    keeps Spark's own inference on every read: a file added under a
+  *    partition subdirectory leaves the root's mtime as it was, so a
+  *    directory key could go stale.
+  *  - Miss: exactly the unmemoized call, `spark.read.parquet(path)
+  *    .schema`, so a miss infers (or fails) as Spark does.
   */
 object Tables {
-  def table(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  private val fileSchemas =
+    new java.util.concurrent.ConcurrentHashMap[(String, Long, Long,
+      Map[String, String]), StructType]()
+
+  /** The schema `spark.read.parquet(path)` would infer, memoized per
+    * table file (the key and scope above). The inference runs OUTSIDE
+    * the map's locks (computeIfAbsent would hold a bin lock across a
+    * Spark job): concurrent misses may both infer; the first put wins. */
+  def schemaOf(spark: SparkSession, path: String): StructType = {
+    def infer(): StructType = spark.read.parquet(path).schema
+    val p = new org.apache.hadoop.fs.Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val file =
+      try Some(fs.getFileStatus(p)).filter(_.isFile)
+      catch { case _: java.io.FileNotFoundException => None }
+    file.fold(infer()) { f =>
+      val confs = spark.conf.getAll.filter { case (k, _) =>
+        k.contains("parquet") || k == "spark.sql.caseSensitive" }
+      val key = (f.getPath.toString, f.getLen, f.getModificationTime, confs)
+      Option(fileSchemas.get(key)).getOrElse {
+        val inferred = infer()
+        Option(fileSchemas.putIfAbsent(key, inferred)).getOrElse(inferred)
+      }
+    }
+  }
+
+  def table(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    spark.read.schema(schemaOf(spark, path)).parquet(path)
+  }
 
   def region(s: SparkSession, d: String): DataFrame    = table(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame    = table(s, d, "nation")

@@ -60,7 +60,7 @@ object StreamingQueries {
   /** File-stream over the events table (either ts encoding → µs `ts`
     * + exact-ns `ts_ns`, same contract as Tables.events). */
   private def eventsStream(s: SparkSession, dir: String): DataFrame = {
-    val schema = s.read.parquet(s"$dir/events.parquet").schema
+    val schema = graft.Tables.schemaOf(s, s"$dir/events.parquet")
     graft.Tables.normalizeEventTs(
       s.readStream.schema(schema)
         .option("pathGlobFilter", "events.parquet").parquet(dir))
@@ -174,7 +174,7 @@ object StreamingQueries {
     * the planted over-cap StreamingSpec case pins the exact class). */
   def q72StreamNearDup(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val schema = s.read.parquet(s"$dir/documents.parquet").schema
+    val schema = graft.Tables.schemaOf(s, s"$dir/documents.parquet")
     val stream = s.readStream.schema(schema)
       .option("pathGlobFilter", "documents.parquet").parquet(dir)
     val pairs = graft.streaming.NearDup.pairs(stream, maxHamming = 6)
@@ -467,7 +467,7 @@ object StreamingQueries {
     * bound instead of exactness. */
   def q144StreamDecontaminate(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val schema = s.read.parquet(s"$dir/documents.parquet").schema
+    val schema = graft.Tables.schemaOf(s, s"$dir/documents.parquet")
     val stream = s.readStream.schema(schema)
       .option("pathGlobFilter", "documents.parquet").parquet(dir)
       .filter($"doc_id" % 20 =!= 0)
@@ -519,7 +519,7 @@ object StreamingQueries {
     * both sides). */
   def q149StreamDeconTtl(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val schema = s.read.parquet(s"$dir/documents.parquet").schema
+    val schema = graft.Tables.schemaOf(s, s"$dir/documents.parquet")
     val stream = s.readStream.schema(schema)
       .option("pathGlobFilter", "documents.parquet").parquet(dir)
       .filter($"doc_id" % 20 =!= 0)

@@ -206,14 +206,14 @@ object Lake {
     *
     * Winner per key = highest `versionCol`; a same-version collision
     * prefers the incoming update (deterministic via a source-priority
-    * tie-break). The merged slice is staged by an eager local
-    * checkpoint (executor block storage, memory then disk) before the
-    * overwrite, so the target is never read and clobbered in the same
-    * job; the blocks are released once the overwrite returns. The
-    * overwrite still commits only at job end: a staged block lost to
-    * an executor failure fails the job BEFORE its commit, leaving the
-    * lake as it was, and the replay below re-stages. This is the
-    * principled form of the reference's
+    * tie-break). The merged slice is written straight through the
+    * dynamic partition overwrite, in the same job that reads the
+    * affected days: that write stages its output under
+    * `.spark-staging-*` and replaces the day directories only at job
+    * commit, after every task has read the old rows. A failed task or
+    * job never reaches the commit, so the lake stays as it was and the
+    * replay below re-reads it. This is the principled form of the
+    * reference's
     * "updated events resolved by whole-row distinct"
     * (sparktoELKstream.py:94-99): updates REPLACE, not accumulate.
     * Idempotent — replaying the same batch (foreachBatch retry
@@ -376,20 +376,12 @@ object Lake {
       .filter(col("__rn") === 1)
       .drop("__src", "__rn")
     if (!atomicDays) {
-      // EAGER: the merged slice is materialized and its lineage to the
-      // lake files cut before the overwrite job starts, so that job
-      // never reads the partitions it replaces
-      val staged = merged.localCheckpoint(eager = true,
-        storageLevel = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      try staged.write.mode("overwrite")
+      // this job reads the days it replaces: the overwrite swaps
+      // them only at job commit, after every task has read them
+      merged.write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy("event_date")
         .parquet(path)
-      finally staged.queryExecution.logical match {
-        case r: org.apache.spark.sql.execution.LogicalRDD =>
-          r.rdd.unpersist(blocking = false)
-        case _ =>
-      }
     } else {
       // ATOMIC-DAY COMMIT: the closed form of the dynamic-overwrite
       // residual above. The merged slice is staged PARTITIONED (one

@@ -56,14 +56,20 @@ object Jobs {
       EarthquakeOps.normalizeDate(EarthquakeOps.parseEvents(raw)))
       .withColumn("event_ts", to_timestamp(col("date"), "yyyy-MM-dd'T'HH:mm"))
 
-  /** Streaming dedup (O9): keyed drop-duplicates with a watermark so
-    * state expires — the reference re-polls 7-day windows (S5), so
-    * duplicates arrive up to a week late; the watermark bounds state
-    * while covering that horizon. */
+  /** Streaming dedup (O9): drops a row whose (eventID, lastUpdateDate)
+    * key was seen within the watermark delay of that key's first
+    * event time — the reference re-polls 7-day windows (S5), so
+    * duplicates arrive up to a week late, and the 8-day delay covers
+    * that horizon. The key carries no event-time column, so a plain
+    * `dropDuplicates` on it could never evict;
+    * `dropDuplicatesWithinWatermark` keeps each key's state until the
+    * watermark passes its first event time plus the delay. A re-polled
+    * copy arriving after that is older than the watermark and is
+    * dropped as late. */
   def dedupStream(events: DataFrame, watermark: String = "8 days"): DataFrame =
     events
       .withWatermark("event_ts", watermark)
-      .dropDuplicates("eventID", "lastUpdateDate")
+      .dropDuplicatesWithinWatermark("eventID", "lastUpdateDate")
 
   /** Keyed dedup for duplicates that re-arrive with a DIFFERENT event
     * time (the reference's overlapping re-polls re-stamp rows, so

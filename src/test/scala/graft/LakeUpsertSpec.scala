@@ -291,39 +291,6 @@ class LakeUpsertSpec extends SparkSpec {
   private def persistentIds(): Set[Int] =
     spark.sparkContext.getPersistentRDDs.keySet.toSet
 
-  /** Jobs `body` starts, counted by a listener (the PlanQualitySpec
-    * pattern) over the jobs tagged with a local property. A sentinel
-    * job run afterwards drains the listener queue: events reach one
-    * listener in order, so once the sentinel's start arrives every
-    * job of `body` has been counted. */
-  private def jobsOf(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val tag = "graft.spec.gate"
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val drained = new java.util.concurrent.CountDownLatch(1)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        Option(e.properties).map(_.getProperty(tag)) match {
-          case Some("body") => jobs.incrementAndGet()
-          case Some("sentinel") => drained.countDown()
-          case _ =>
-        }
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setLocalProperty(tag, "body")
-      try body finally sc.setLocalProperty(tag, "sentinel")
-      sc.parallelize(Seq(1), 1).count()
-      assert(drained.await(30, java.util.concurrent.TimeUnit.SECONDS),
-        "the listener never saw the sentinel job")
-      jobs.get()
-    } finally {
-      sc.setLocalProperty(tag, null)
-      sc.removeSparkListener(listener)
-    }
-  }
-
   test("a batch with a null ts row fails before the lake is read or " +
       "written: files, mtimes and rows unchanged") {
     val path = tmp()
@@ -344,7 +311,7 @@ class LakeUpsertSpec extends SparkSpec {
     assert(state(path) === stateBefore)
   }
 
-  test("default-mode upsert into an existing lake: at most 5 jobs, no " +
+  test("default-mode upsert into an existing lake: at most 4 jobs, no " +
       "pinned blocks and no staging directories left behind") {
     val path = tmp()
     seed(path)
@@ -358,7 +325,7 @@ class LakeUpsertSpec extends SparkSpec {
       Lake.upsertLatest(spark, path, batch, "id", "version", "ts")
     }
     info(s"jobs per upsert: $jobs")
-    assert(jobs <= 5, s"$jobs jobs for one upsert")
+    assert(jobs <= 4, s"$jobs jobs for one upsert")
     assert((persistentIds() -- pinned).isEmpty, persistentIds() -- pinned)
     val parent = new java.io.File(path).getParentFile
     val base = new java.io.File(path).getName

@@ -14,6 +14,39 @@ import org.scalatest.funsuite.AnyFunSuite
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
 
+  /** Jobs `body` starts, counted by a listener (the PlanQualitySpec
+    * pattern) over the jobs tagged with a local property. A sentinel
+    * job run afterwards drains the listener queue: events reach one
+    * listener in order, so once the sentinel's start arrives every
+    * job of `body` has been counted. */
+  def jobsOf(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val tag = "graft.spec.gate"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val drained = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty(tag)) match {
+          case Some("body") => jobs.incrementAndGet()
+          case Some("sentinel") => drained.countDown()
+          case _ =>
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty(tag, "body")
+      try body finally sc.setLocalProperty(tag, "sentinel")
+      sc.parallelize(Seq(1), 1).count()
+      assert(drained.await(30, java.util.concurrent.TimeUnit.SECONDS),
+        "the listener never saw the sentinel job")
+      jobs.get()
+    } finally {
+      sc.setLocalProperty(tag, null)
+      sc.removeSparkListener(listener)
+    }
+  }
+
   /** Restart gate for a stateful streaming query (SessionizeSpec's
     * checkpoint-recovery pattern): feeds `batches` through
     * `query(input)` twice — once uninterrupted, once stopped after

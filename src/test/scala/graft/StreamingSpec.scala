@@ -43,6 +43,36 @@ class StreamingSpec extends SparkSpec {
     } finally query.stop()
   }
 
+  test("keyed dedup evicts a key once the watermark passes its event " +
+      "time plus the delay") {
+    implicit val sqlCtx = spark.sqlContext
+    val input = MemoryStream[String]
+    val raw = input.toDF().selectExpr("cast(value as binary) as value")
+    val query = Jobs.dedupStream(Jobs.eventsPipeline(raw)).writeStream
+      .format("memory").queryName("dedup_evict_out")
+      .outputMode("append")
+      .start()
+    def stateRows(): Long = query.lastProgress.stateOperators.head.numRowsTotal
+    // 19 days after the first events: past their 8-day delay
+    def later(id: Long): String =
+      mkEvent(id, 0, 1.0).replace("2023-02-06T04", "2023-02-25T04")
+    try {
+      input.addData(
+        s"[${mkEvent(21, 10, 5.0)},${mkEvent(22, 11, 3.0)},${mkEvent(23, 12, 4.0)}]")
+      query.processAllAvailable()
+      assert(stateRows() === 3)
+      input.addData(s"[${later(24)}]") // advances the watermark
+      query.processAllAvailable()
+      input.addData(s"[${later(25)}]") // runs under the advanced watermark
+      query.processAllAvailable()
+      assert(stateRows() === 2, "the three early keys were not evicted")
+      // a re-polled copy of an evicted key is older than the watermark
+      input.addData(s"[${mkEvent(21, 10, 5.0)}]")
+      query.processAllAvailable()
+      assert(spark.table("dedup_evict_out").count() === 5)
+    } finally query.stop()
+  }
+
   test("windowed region counts aggregate on the stream") {
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[String]

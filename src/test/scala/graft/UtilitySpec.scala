@@ -70,9 +70,12 @@ class UtilitySpec extends SparkSpec {
     assert(StreamBench.pct(Array(7.0), 0.5) === 7.0)
   }
 
-  /** (file name, source text) of every `src/main` Scala file. */
-  private def mainSources: Seq[(String, String)] = {
-    val main = new java.io.File("src/main/scala")
+  /** (file name, source text) of every `src/main` Scala file, or of
+    * those under `dir`. */
+  private def mainSources: Seq[(String, String)] = sourcesUnder("src/main/scala")
+
+  private def sourcesUnder(dir: String): Seq[(String, String)] = {
+    val main = new java.io.File(dir)
     assert(main.isDirectory, s"run from the project root: $main")
     def files(d: java.io.File): Seq[java.io.File] =
       d.listFiles().toSeq.flatMap(f => if (f.isDirectory) files(f) else Seq(f))
@@ -89,7 +92,7 @@ class UtilitySpec extends SparkSpec {
   }
 
   test("Hydration is the one pin module: no bare cache/persist, and " +
-      "unpersist only at the two sanctioned releases") {
+      "unpersist only at the one sanctioned release") {
     // code lines only: scaladoc and line comments may name the calls
     val code = for {
       (name, src) <- mainSources if name != "Hydration.scala"
@@ -101,11 +104,20 @@ class UtilitySpec extends SparkSpec {
         l.replace("Hydration.persist(", "").contains(".persist(")
     }
     assert(bare.isEmpty, s"pin through Hydration.persist: $bare")
-    // Lake's checkpoint-RDD release, and largeSmallStar's round-0
-    // release of its seed (a memory bound at scale)
+    // largeSmallStar's round-0 release of its seed (a memory bound at
+    // scale)
     assert(code.filter(_._2.contains(".unpersist(")).sorted === Seq(
-      ("Dedup.scala", "if (i == 0) edges.unpersist()"),
-      ("Lake.scala", "r.rdd.unpersist(blocking = false)")))
+      ("Dedup.scala", "if (i == 0) edges.unpersist()")))
+  }
+
+  test("queries read the scale-factor tables only through Tables, so every " +
+      "read uses the schema memo") {
+    val bypass = for {
+      (name, src) <- sourcesUnder("src/main/scala/graft/queries")
+      line <- src.linesIterator.map(_.trim)
+      if line.contains(".read.parquet(s\"$dir/")
+    } yield (name, line)
+    assert(bypass.isEmpty, s"read tables via graft.Tables: $bypass")
   }
 
   test("ivfTopK: reasonable recall of brute-force neighbors on real embeddings") {
