@@ -77,10 +77,40 @@ object Tables {
     *  - `ts_ns`: exact int64 nanoseconds — use for ordering/arithmetic
     *    (bit-exact vs DuckDB's epoch_ns / epoch_us semantics);
     *  - `ts`: µs TimestampType — use for date/window functions.
+    *
+    * Only the legacy encoding needs `spark.sql.legacy.parquet.nanosAsLong`
+    * (Spark 4 rejects TIMESTAMP(NANOS) without it). The file's footer
+    * decides: for a NANOS `ts` this sets the conf on the session and
+    * leaves it set, because the scan reads the file at action time, not
+    * here; a µs `ts` leaves the session's confs as they were.
     */
   def events(s: SparkSession, d: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    if (nanosTs(s, s"$d/events.parquet"))
+      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     normalizeEventTs(table(s, d, "events"))
+  }
+
+  private val nanosFiles = new java.util.concurrent.ConcurrentHashMap[
+    (String, Long, Long), java.lang.Boolean]()
+
+  /** Whether the first data file under `path` (the file Spark's
+    * non-merging inference reads) stores `ts` as TIMESTAMP(NANOS),
+    * memoized under the [[schemaOf]] file key. */
+  private def nanosTs(s: SparkSession, path: String): Boolean = {
+    import org.apache.parquet.schema.LogicalTypeAnnotation._
+    graft.sources.Lake.dataFiles(s, path).headOption.exists { f =>
+      nanosFiles.computeIfAbsent(
+        (f.getPath.toString, f.getLen, f.getModificationTime), _ => {
+          val schema =
+            graft.sources.Lake.footer(s, f).getFileMetaData.getSchema
+          schema.containsField("ts") &&
+            (schema.asGroupType.getType("ts").getLogicalTypeAnnotation match {
+              case t: TimestampLogicalTypeAnnotation =>
+                t.getUnit == TimeUnit.NANOS
+              case _ => false
+            })
+        })
+    }
   }
 
   /** Schema-adaptive `ts` normalization, shared with the streaming

@@ -1,7 +1,14 @@
 package graft.sources
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.HadoopReadOptions
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.metadata.ParquetMetadata
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.sql.{Column, DataFrame, GraftShims, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StructType}
+import scala.jdk.CollectionConverters._
 
 /** Partitioned parquet lake writer/reader.
   *
@@ -94,10 +101,122 @@ object Lake {
 
   /** Read a lake whose files span schema versions (columns added over
     * time, the normal fate of a long-lived archive): union the per-file
-    * schemas, old files surface the new columns as null. Costs a footer
-    * scan per file — use on evolving lakes, not hot paths. */
+    * schemas, old files surface the new columns as null. The schema is
+    * [[lakeSchema]]'s: a driver-side listing plus a footer read per
+    * file NOT yet memoized, so a warm read starts no Spark job (before:
+    * a `mergeSchema` footer-scan job over every file on every read). */
   def readEvolving(spark: SparkSession, path: String): DataFrame =
-    spark.read.option("mergeSchema", "true").parquet(path)
+    evolving(spark, path, footers(spark, path))
+
+  /** The schema `spark.read.option("mergeSchema", "true").parquet(path)`
+    * infers, without its footer-scan job.
+    *
+    * FOOTER MEMO: the lake's data files are listed on the driver with
+    * Spark's own filter (every file with no `_`- or `.`-prefixed
+    * component below the root, as `InMemoryFileIndex` keeps them), and
+    * each file's footer is read once per JVM with parquet-hadoop's
+    * `ParquetFileReader`.
+    *  - Key: the qualified path, the file's length and modification
+    *    time (the [[graft.Tables.schemaOf]] key); a rewritten file is a
+    *    new key. A file replaced by another with the same length AND
+    *    modification time would be read with the old footer.
+    *  - Entry: the Spark schema stored in the footer
+    *    (`org.apache.spark.sql.parquet.row.metadata`, what Spark's
+    *    inference reads first) and the file's row count.
+    *  - Scope: per lake root; each listing keeps only the entries of the
+    *    files it found, so files a rewrite deleted leave the memo.
+    *  - Merge: the footer schemas in path order, folded with Spark's own
+    *    `StructType.merge` (same names, types, order and conflict
+    *    errors as `mergeSchema`); the partition columns come from
+    *    Spark's partition discovery on the read.
+    *  - Fallback: exactly Spark's inference (one job, as before) when a
+    *    footer cannot be read, a file lacks the Spark key, a parquet
+    *    summary file is present, or the lake holds no data file — so a
+    *    corrupt file fails (or is skipped under
+    *    `spark.sql.files.ignoreCorruptFiles`) as Spark decides. */
+  private[graft] def lakeSchema(spark: SparkSession, path: String): StructType =
+    readEvolving(spark, path).schema
+
+  /** One memoized footer: the Spark schema it carries, if any, and the
+    * file's row count. */
+  private final case class Footer(schema: Option[StructType], rows: Long)
+
+  private val footerMemo = new java.util.concurrent.ConcurrentHashMap[
+    String, Map[(String, Long, Long), Footer]]()
+
+  /** The files `InMemoryFileIndex` lists under `path` (`path` itself if
+    * it is a file; nothing if it does not exist), in path order. */
+  private[graft] def dataFiles(spark: SparkSession,
+      path: String): Seq[FileStatus] = {
+    val root = new Path(path)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def hidden(name: String): Boolean =
+      (name.startsWith("_") && !name.contains("=") &&
+        !name.startsWith("_metadata") &&
+        !name.startsWith("_common_metadata")) ||
+        name.startsWith(".") || name.endsWith("._COPYING_")
+    def leaves(st: FileStatus): Seq[FileStatus] =
+      if (!st.isDirectory) Seq(st)
+      else fs.listStatus(st.getPath).toSeq
+        .filterNot(c => hidden(c.getPath.getName)).flatMap(leaves)
+    if (!fs.exists(root)) Nil
+    else leaves(fs.getFileStatus(root)).sortBy(_.getPath.toString)
+  }
+
+  /** The parquet footer of one file, read on the driver. The static
+    * reader, not `ParquetFileReader.open`: on a 4-cpu VM `open` took
+    * 13–16 ms per small file and this about 1 ms. */
+  private[graft] def footer(spark: SparkSession,
+      file: FileStatus): ParquetMetadata = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val in = HadoopInputFile.fromStatus(file, conf)
+    val stream = in.newStream()
+    try ParquetFileReader.readFooter(in,
+      HadoopReadOptions.builder(conf, file.getPath).build(), stream)
+    finally stream.close()
+  }
+
+  /** Every data file of the lake with its memoized footer (the
+    * [[lakeSchema]] memo), or None when Spark's inference must decide:
+    * no data file, a summary file, or a footer that cannot be read. */
+  private def footers(spark: SparkSession,
+      path: String): Option[Seq[(FileStatus, Footer)]] = {
+    val files = dataFiles(spark, path)
+    val summary = files.exists(f =>
+      SummaryFiles.contains(f.getPath.getName))
+    if (files.isEmpty || summary) None
+    else scala.util.Try {
+      val root = files.head.getPath.getFileSystem(spark.sparkContext
+        .hadoopConfiguration).makeQualified(new Path(path)).toString
+      val known = Option(footerMemo.get(root)).getOrElse(Map.empty)
+      val read = files.map { f =>
+        val key = (f.getPath.toString, f.getLen, f.getModificationTime)
+        key -> known.getOrElse(key, {
+          val meta = footer(spark, f)
+          Footer(
+            Option(meta.getFileMetaData.getKeyValueMetaData
+              .get(SparkSchemaKey)).flatMap(json => scala.util.Try(
+              DataType.fromJson(json).asInstanceOf[StructType]).toOption),
+            meta.getBlocks.asScala.map(_.getRowCount).sum)
+        })
+      }
+      footerMemo.put(root, read.toMap)
+      files.zip(read.map(_._2))
+    }.toOption
+  }
+
+  private val SparkSchemaKey = "org.apache.spark.sql.parquet.row.metadata"
+  private val SummaryFiles = Set("_metadata", "_common_metadata")
+
+  /** [[readEvolving]] over an already-read footer list. */
+  private def evolving(spark: SparkSession, path: String,
+      files: Option[Seq[(FileStatus, Footer)]]): DataFrame =
+    files.map(_.map(_._2.schema)).filter(_.forall(_.isDefined)) match {
+      case Some(schemas) =>
+        spark.read.schema(GraftShims.mergeSchemas(spark, schemas.flatten))
+          .parquet(path)
+      case None => spark.read.option("mergeSchema", "true").parquet(path)
+    }
 
   /** Write as a BUCKETED table (hash-bucketed + sorted by `key`,
     * registered in the session catalog). Two tables bucketed the same
@@ -260,12 +379,22 @@ object Lake {
     * as a maintenance pass. This behavior is pinned by
     * LakeUpsertSpec's re-dating case.
     *
+    * PLAN — two Spark jobs per call into an existing lake: the probe
+    * below and the write. The lake's schema comes from the
+    * [[lakeSchema]] footer memo (no footer-scan job), and a slice whose
+    * estimated size (memoized row counts of the affected days' files
+    * plus the batch rows, times the row's default size) fits
+    * `spark.sql.adaptive.advisoryPartitionSizeInBytes` merges in one
+    * task with no exchange; a larger one keeps the hash-partitioned
+    * window. Both plans give the same rows, in either commit mode.
+    *
     * DRIVER BOUND — the affected-dates collect: the update batch's
     * DISTINCT event dates are collected to the driver to scope the
     * read filter and the dynamic overwrite. Each batch partition ships
     * its set of `to_date(tsCol)` values (a per-partition
     * `collect_set`, in the same one-pass aggregate that counts the
-    * null-`tsCol` rows) and the driver unions them. The bound is
+    * null-`tsCol` rows and all the rows) and the driver unions them
+    * and sums the counts. The bound is
     * O(distinct days in the batch) per partition, not O(batch) or
     * O(lake) — a century of daily
     * partitions is ~36k date values (a few hundred KB), fine at any
@@ -296,22 +425,28 @@ object Lake {
       updates: DataFrame, keyCol: String, versionCol: String,
       tsCol: String, atomicDays: Boolean,
       seam: (String, String) => Unit): Unit = {
-    // ONE probe pass over the batch: the null-tsCol count and the set
-    // of affected dates come out of a single per-partition aggregate,
-    // merged on the driver — one job and one stage, where a SQL
+    // ONE probe pass over the batch: the null-tsCol count, the row
+    // count and the set of affected dates (epoch days) come out of a
+    // single per-partition aggregate over the internal rows, merged on
+    // the driver — one job and one stage, where a SQL
     // count/collect_set aggregate adds an exchange (and, under AQE, a
-    // second job). It runs before the heal and before any lake read or
-    // write, so a rejected batch touches nothing
+    // second job) and `.rdd` a row-deserializing SQL execution. It
+    // runs before the heal and before any lake read or write, so a
+    // rejected batch touches nothing. A null date of a non-null tsCol
+    // (an unparseable string under non-ANSI casts) addresses no
+    // existing partition, so it is not collected
     val updDated = updates.withColumn("event_date", to_date(col(tsCol)))
-    val (nullTs, dates) = updDated
-      .select(col(tsCol).isNull, col("event_date")).rdd
-      .aggregate((0L, Set.empty[Any]))(
+    val (nullTs, batchRows, days) = updDated
+      .select(col(tsCol).isNull, col("event_date")).queryExecution.toRdd
+      .aggregate((0L, 0L, Set.empty[Int]))(
         (acc, r) =>
-          if (r.getBoolean(0)) (acc._1 + 1L, acc._2)
-          else (acc._1, acc._2 + r.get(1)),
-        (a, b) => (a._1 + b._1, a._2 ++ b._2))
+          if (r.getBoolean(0)) (acc._1 + 1L, acc._2 + 1L, acc._3)
+          else (acc._1, acc._2 + 1L,
+            if (r.isNullAt(1)) acc._3 else acc._3 + r.getInt(1)),
+        (a, b) => (a._1 + b._1, a._2 + b._2, a._3 ++ b._3))
     require(nullTs == 0L,
       s"upsertLatest: null $tsCol rows cannot be partition-merged")
+    val dates = days.toSeq.sorted.map(d => java.time.LocalDate.ofEpochDay(d))
     // a previous atomic-day writer may have crashed mid-commit: heal
     // BEFORE reading the existing slice, or a day sitting in trash
     // reads as missing and this batch merges against a torn base.
@@ -325,7 +460,8 @@ object Lake {
     recoverUpsertDays(spark, path)
     import org.apache.spark.sql.expressions.Window
     // SCHEMA EVOLUTION (the day-2 reality: the stream gains a column):
-    // the existing slice reads with mergeSchema so files already
+    // the existing slice reads with the merged schema of every lake
+    // file ([[lakeSchema]], the mergeSchema result) so files already
     // spanning schema versions surface every column, and the union
     // below null-fills whichever side lacks a column — old rows get
     // NULL in the new column, exactly the readEvolving contract. A
@@ -343,9 +479,10 @@ object Lake {
     // — ONE probe discipline for every lake writer; any failure of an
     // existing lake's read propagates.
     val hasData = probeHasData(spark, path)
+    val lakeFiles = if (hasData) footers(spark, path) else Some(Nil)
     val existingSlice =
-      if (hasData) readEvolving(spark, path)
-        .filter(col("event_date").isin(dates.toSeq: _*))
+      if (hasData) evolving(spark, path, lakeFiles)
+        .filter(col("event_date").isin(dates: _*))
         .withColumn("__src", lit(0))
       else updDated.limit(0).withColumn("__src", lit(0))
     val updTypes = updDated.schema.map(f => f.name -> f.dataType).toMap
@@ -371,7 +508,23 @@ object Lake {
     val w = Window.partitionBy(col(keyCol))
       .orderBy(col(versionCol).desc, col("__src").desc,
         xxhash64(payloadCols: _*))
-    val merged = unioned
+    // PLAN CHOICE: a slice that fits Spark's own coalescing target
+    // merges in ONE task — a single partition already satisfies the
+    // window's distribution, so there is no exchange and read, merge
+    // and write run as one job. AQE would coalesce the shuffle to one
+    // partition anyway, but only after running its map stage as a job
+    // of its own. The size is estimated from the memoized row counts
+    // of the affected days' files plus the probe's batch rows; an
+    // unknown slice keeps the shuffle. Both plans run the same window
+    // and tie-break: the choice changes the physical plan only
+    val dayDirs = dates.map(d => s"event_date=$d").toSet
+    val sliceRows = lakeFiles.map(_.collect {
+      case (f, ft) if dayDirs(f.getPath.getParent.getName) => ft.rows
+    }.sum)
+    val oneTask = sliceRows.exists(n =>
+      (n + batchRows) * unioned.schema.defaultSize <=
+        GraftShims.advisoryPartitionBytes(spark))
+    val merged = (if (oneTask) unioned.coalesce(1) else unioned)
       .withColumn("__rn", row_number().over(w))
       .filter(col("__rn") === 1)
       .drop("__src", "__rn")
@@ -396,7 +549,6 @@ object Lake {
       // any later writer reads). Renames are metadata ops on
       // HDFS/local; object-store deployments need a rename-atomic
       // commit layer, the same note as [[swapInto]].
-      import org.apache.hadoop.fs.Path
       val stage = new Path(upsertDayStageDir(path))
       val trash = new Path(upsertDayTrashDir(path))
       val target = new Path(path)
@@ -450,7 +602,6 @@ object Lake {
     * before that read for the same reason. */
   private[graft] def recoverUpsertDays(spark: SparkSession,
       path: String): Unit = {
-    import org.apache.hadoop.fs.Path
     val target = new Path(path)
     val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val trash = new Path(upsertDayTrashDir(path))
@@ -479,7 +630,7 @@ object Lake {
     import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy(col(keyCol))
       .orderBy(col(versionCol).desc, col("event_date").desc)
-    // mergeSchema: a maintenance rewrite of an EVOLVING lake must see
+    // merged schema: a maintenance rewrite of an EVOLVING lake must see
     // every column any file carries — a plain read samples one footer
     // and would silently DROP a recently-added column from the whole
     // lake (the rewrite then destroys it)
@@ -525,7 +676,7 @@ object Lake {
   def compact(spark: SparkSession, path: String, nFiles: Int = 1,
       saltCols: Seq[String] = Seq.empty): Unit = {
     val tmp = path.stripSuffix("/") + "__compacting"
-    // mergeSchema for the same reason as dropSupersededVersions: a
+    // merged schema for the same reason as dropSupersededVersions: a
     // compaction must never silently drop a column newer files carry
     // (side effect: the rewrite homogenizes the lake onto the merged
     // schema, null-filling old rows — the documented evolution shape)

@@ -27,4 +27,29 @@ object GraftShims {
     * classes outside the package need the alias to override
     * `ExpectsInputTypes.inputTypes`. */
   type AbstractType = org.apache.spark.sql.types.AbstractDataType
+
+  private def conf(spark: SparkSession) =
+    spark.asInstanceOf[classic.SparkSession].sessionState.conf
+
+  /** Fold file schemas as `mergeSchema` inference does
+    * (`SchemaMergeUtils`): `StructType.merge` (private[sql]) in order,
+    * under the session's case sensitivity, a conflict raised as Spark's
+    * own merge error. */
+  def mergeSchemas(spark: SparkSession,
+      schemas: Seq[types.StructType]): types.StructType = {
+    val caseSensitive = conf(spark).caseSensitiveAnalysis
+    schemas.reduce { (merged, next) =>
+      try merged.merge(next, caseSensitive)
+      catch { case e: org.apache.spark.SparkException =>
+        throw errors.QueryExecutionErrors
+          .failedMergingSchemaError(merged, next, e)
+      }
+    }
+  }
+
+  /** `spark.sql.adaptive.advisoryPartitionSizeInBytes` as the session
+    * resolves it (the key falls back to another one when unset, so its
+    * string form is not a number). */
+  def advisoryPartitionBytes(spark: SparkSession): Long =
+    conf(spark).getConf(internal.SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES)
 }

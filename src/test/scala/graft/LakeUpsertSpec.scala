@@ -2,8 +2,14 @@ package graft
 
 import graft.sources.Lake
 import graft.streaming.Jobs
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.command.DataWritingCommandExec
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 import java.nio.file.Files
 import scala.jdk.CollectionConverters._
 
@@ -311,7 +317,7 @@ class LakeUpsertSpec extends SparkSpec {
     assert(state(path) === stateBefore)
   }
 
-  test("default-mode upsert into an existing lake: at most 4 jobs, no " +
+  test("default-mode upsert into an existing lake: at most 2 jobs, no " +
       "pinned blocks and no staging directories left behind") {
     val path = tmp()
     seed(path)
@@ -325,7 +331,7 @@ class LakeUpsertSpec extends SparkSpec {
       Lake.upsertLatest(spark, path, batch, "id", "version", "ts")
     }
     info(s"jobs per upsert: $jobs")
-    assert(jobs <= 4, s"$jobs jobs for one upsert")
+    assert(jobs <= 2, s"$jobs jobs for one upsert")
     assert((persistentIds() -- pinned).isEmpty, persistentIds() -- pinned)
     val parent = new java.io.File(path).getParentFile
     val base = new java.io.File(path).getName
@@ -362,5 +368,158 @@ class LakeUpsertSpec extends SparkSpec {
     // gone; earlier suites' pins may only have been GC-released since
     assert((persistentIds() -- pinned).isEmpty,
       persistentIds() -- pinned)
+  }
+
+  /** `body` with Spark's coalescing target at `bytes`, restored after:
+    * at "1" no slice fits, so the upsert keeps the shuffle plan. */
+  private def withAdvisory[T](bytes: String)(body: => T): T = {
+    val key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, bytes)
+    try body finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
+  /** Three seeded update batches over 30 keys on three days (a key's
+    * day derives from the key, the upsert's contract); versions
+    * collide within and across batches, and the last batch gains a
+    * column. */
+  private def seededBatches(rngSeed: Long): Seq[DataFrame] = {
+    val r = new scala.util.Random(rngSeed)
+    (1 to 3).map { b =>
+      val rows = Seq.fill(60) {
+        val id = r.nextInt(30).toLong
+        (id, r.nextInt(4).toLong,
+          f"2024-01-0${1 + id % 3} ${r.nextInt(24)}%02d:00:00",
+          s"p${r.nextInt(1000)}")
+      }
+      val df = rows.toDF("id", "version", "ts", "payload")
+        .withColumn("ts", col("ts").cast("timestamp"))
+      if (b < 3) df else df.withColumn("region", concat(lit("r"), $"id" % 4))
+    }
+  }
+
+  private def lakeRows(path: String): (org.apache.spark.sql.types.StructType,
+      Set[Row]) = {
+    val df = Lake.readEvolving(spark, path)
+    (df.schema, df.collect().toSet)
+  }
+
+  test("the single-task merge and the shuffle plan leave the same lake " +
+      "rows and schema on the same seeded batches") {
+    val small = tmp(); val forced = tmp()
+    for (batch <- seededBatches(11)) {
+      Lake.upsertLatest(spark, small, batch, "id", "version", "ts")
+      withAdvisory("1") {
+        Lake.upsertLatest(spark, forced, batch, "id", "version", "ts")
+      }
+    }
+    val (schema, rows) = lakeRows(small)
+    assert(schema.fieldNames.toSeq ===
+      Seq("id", "version", "ts", "payload", "region", "event_date"))
+    assert(rows.size === 30)
+    assert(lakeRows(forced) === ((schema, rows)))
+  }
+
+  /** The executed plans of the write commands `body` ran. */
+  private def writePlans(body: => Unit): Seq[SparkPlan] = {
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        plans.add(qe.executedPlan)
+      override def onFailure(f: String, qe: QueryExecution,
+          e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    // jobsOf's sentinel drains the listener queue the callbacks ride on
+    try jobsOf(body) finally spark.listenerManager.unregister(listener)
+    plans.asScala.toSeq.filter(p =>
+      planHelper.find(p)(_.isInstanceOf[DataWritingCommandExec]).isDefined)
+  }
+
+  /** Walks plans through AQE's wrapper and query stages. */
+  private val planHelper = new AdaptiveSparkPlanHelper {}
+
+  test("a small upsert writes with no Exchange; the forced plan keeps " +
+      "the hash exchange") {
+    def exchanges(p: SparkPlan) =
+      planHelper.collect(p) { case e: ShuffleExchangeLike => e }
+    def upsert(path: String): Seq[SparkPlan] = writePlans {
+      Lake.upsertLatest(spark, path,
+        Seq((1L, 2L, "2024-01-01 10:00:00", "a-v2"),
+            (4L, 1L, "2024-01-02 12:00:00", "d-v1"))
+          .toDF("id", "version", "ts", "payload")
+          .withColumn("ts", col("ts").cast("timestamp")),
+        "id", "version", "ts")
+    }
+    val small = tmp(); seed(small)
+    val one = upsert(small)
+    assert(one.size === 1, one.mkString("\n"))
+    assert(exchanges(one.head).isEmpty, one.head.treeString)
+    val forced = tmp(); seed(forced)
+    val shuffled = withAdvisory("1")(upsert(forced))
+    assert(shuffled.size === 1, shuffled.mkString("\n"))
+    assert(exchanges(shuffled.head).exists(_.outputPartitioning.toString
+      .startsWith("hashpartitioning(id")), shuffled.head.treeString)
+    assert(state(forced) === state(small))
+  }
+
+  test("lakeSchema equals mergeSchema inference (names, types, order) " +
+      "with a wider unaffected day, and re-reads a rewritten file") {
+    val path = tmp()
+    seed(path)
+    Seq((7L, 1L, "2024-01-05 10:00:00", "g-v1", 3.5, "x"))
+      .toDF("id", "version", "ts", "payload", "score", "note")
+      .withColumn("ts", col("ts").cast("timestamp"))
+      .withColumn("event_date", to_date($"ts"))
+      .write.mode("append").partitionBy("event_date").parquet(path)
+    Lake.upsertLatest(spark, path,
+      Seq((1L, 2L, "2024-01-01 10:00:00", "a-v2"))
+        .toDF("id", "version", "ts", "payload")
+        .withColumn("ts", col("ts").cast("timestamp")),
+      "id", "version", "ts")
+    def inferred() = spark.read.option("mergeSchema", "true").parquet(path)
+      .schema
+    assert(Lake.lakeSchema(spark, path) === inferred())
+    assert(Lake.lakeSchema(spark, path).fieldNames.toSeq === Seq("id",
+      "version", "ts", "payload", "score", "note", "event_date"))
+    assert(jobsOf(Lake.readEvolving(spark, path)) === 0)
+    assert(Lake.readEvolving(spark, path).count() === 4L)
+    // the wide day's file replaced in place by one with another column
+    val day = new java.io.File(path, "event_date=2024-01-05")
+    val old = day.listFiles().filter(_.getName.endsWith(".parquet")).head
+    val stage = tmp()
+    Seq((7L, 1L, "2024-01-05 10:00:00", "g-v1", 9L))
+      .toDF("id", "version", "ts", "payload", "rank")
+      .withColumn("ts", col("ts").cast("timestamp"))
+      .coalesce(1).write.mode("overwrite").parquet(stage)
+    val fresh = new java.io.File(stage).listFiles()
+      .filter(_.getName.endsWith(".parquet")).head
+    Files.move(fresh.toPath, old.toPath,
+      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    Files.deleteIfExists(new java.io.File(day, s".${old.getName}.crc").toPath)
+    assert(jobsOf(Lake.readEvolving(spark, path)) === 0)
+    assert(Lake.lakeSchema(spark, path) === inferred())
+    // the upsert widened day 1 to the lake's columns; day 5 now has rank
+    assert(Lake.lakeSchema(spark, path).fieldNames.toSeq === Seq("id",
+      "version", "ts", "payload", "score", "note", "rank", "event_date"))
+  }
+
+  test("restart gate: upsertStream stopped after a batch and restarted " +
+      "from its checkpoint leaves the same lake rows") {
+    val r = new scala.util.Random(23)
+    val batches = Seq.fill(4)(Seq.fill(25) {
+      val id = r.nextInt(20).toLong
+      (id, r.nextInt(5).toLong,
+        f"2024-02-0${1 + id % 4} ${r.nextInt(24)}%02d:00:00",
+        s"p${r.nextInt(100)}")
+    })
+    assertRestartDrains(batches, stopAfter = 2) { (input, dir) =>
+      Jobs.upsertStream(
+        input.toDF("id", "version", "ts", "payload")
+          .withColumn("ts", col("ts").cast("timestamp")),
+        dir.resolve("lake").toString, dir.resolve("cp").toString,
+        "id", "version", "ts").start()
+    } { dir => spark.read.parquet(dir.resolve("lake").toString)
+      .collect().toSet }
   }
 }

@@ -56,31 +56,47 @@ trait SparkSpec extends AnyFunSuite {
     * rule of the `seen`/`n_seen` monitors). */
   def assertRestartInvariant[A: Encoder](batches: Seq[Seq[A]],
       stopAfter: Int, keys: Seq[String], tag: String)(
-      query: org.apache.spark.sql.DataFrame => Dataset[_]): Unit = {
-    require(stopAfter >= 1 && stopAfter < batches.size,
-      s"stopAfter=$stopAfter must leave batches on both sides")
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    def drained(restartAfter: Option[Int]): Set[Row] = {
-      val dir = java.nio.file.Files.createTempDirectory("restart-gate")
-      val out = dir.resolve("out").toString
-      val input = org.apache.spark.sql.execution.streaming.runtime
-        .MemoryStream[A]
-      def start() = query(input.toDF()).toDF().writeStream
-        .format("parquet").option("path", out)
+      query: org.apache.spark.sql.DataFrame => Dataset[_]): Unit =
+    assertRestartDrains(batches, stopAfter) { (input, dir) =>
+      query(input).toDF().writeStream
+        .format("parquet").option("path", dir.resolve("out").toString)
         .option("checkpointLocation", dir.resolve("cp").toString)
         .outputMode("append").start()
-      var q = start()
-      try batches.zipWithIndex.foreach { case (b, i) =>
-        input.addData(b)
-        q.processAllAvailable()
-        if (restartAfter.contains(i + 1)) { q.stop(); q = start() }
-      } finally q.stop()
-      val df = spark.read.parquet(out)
+    } { dir =>
+      val df = spark.read.parquet(dir.resolve("out").toString)
       val rest = df.columns.filterNot(c => c == tag || keys.contains(c))
       df.groupBy(keys.map(col): _*)
         .agg(max_by(struct(rest.map(col): _*), col(tag)).as("f"))
         .select(keys.map(col) :+ col("f.*"): _*)
         .collect().toSet
+    }
+
+  /** The restart gate's core, for any sink: `start(input, dir)` starts
+    * the query over the memory stream with its checkpoint and output
+    * under `dir`; `drain(dir)` reads what the run left. Runs `batches`
+    * uninterrupted and again stopped after batch `stopAfter` and
+    * restarted from the same checkpoint, and requires equal drains. */
+  def assertRestartDrains[A: Encoder](batches: Seq[Seq[A]],
+      stopAfter: Int)(
+      start: (org.apache.spark.sql.DataFrame, java.nio.file.Path) =>
+        org.apache.spark.sql.streaming.StreamingQuery)(
+      drain: java.nio.file.Path => Set[Row]): Unit = {
+    require(stopAfter >= 1 && stopAfter < batches.size,
+      s"stopAfter=$stopAfter must leave batches on both sides")
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    def drained(restartAfter: Option[Int]): Set[Row] = {
+      val dir = java.nio.file.Files.createTempDirectory("restart-gate")
+      val input = org.apache.spark.sql.execution.streaming.runtime
+        .MemoryStream[A]
+      var q = start(input.toDF(), dir)
+      try batches.zipWithIndex.foreach { case (b, i) =>
+        input.addData(b)
+        q.processAllAvailable()
+        if (restartAfter.contains(i + 1)) {
+          q.stop(); q = start(input.toDF(), dir)
+        }
+      } finally q.stop()
+      drain(dir)
     }
     val straight = drained(None)
     assert(straight.nonEmpty, "the gate's input drained to nothing")

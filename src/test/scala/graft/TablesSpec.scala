@@ -120,4 +120,23 @@ class TablesSpec extends SparkSpec {
       .write.mode("append").partitionBy("day").parquet(s"$dir/lake.parquet")
     assert(Tables.table(spark, dir.getPath, "lake").count() === 3)
   }
+
+  test("Tables.events on a µs-ts file leaves nanosAsLong as the " +
+      "caller set it") {
+    val dir = tmpDir()
+    tableFile(dir, "events", Seq((1L, "2024-01-01 10:00:00.123456"))
+      .toDF("event_id", "ts").withColumn("ts", $"ts".cast("timestamp")))
+    val key = "spark.sql.legacy.parquet.nanosAsLong"
+    val prev = spark.conf.getOption(key)
+    try {
+      spark.conf.set(key, "false")
+      val events = Tables.events(spark, dir.getPath)
+      assert(spark.conf.get(key) === "false")
+      assert(events.select("ts_ns").as[Long].collect() ===
+        Array(1704103200123456000L))
+    } finally prev match {
+      case Some(v) => spark.conf.set(key, v)
+      case None    => spark.conf.unset(key)
+    }
+  }
 }
