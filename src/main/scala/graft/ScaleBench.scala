@@ -246,16 +246,18 @@ object ScaleBench {
       // next pass (or the next ROW sharing a logical sub-plan, e.g.
       // the curated pipeline warming the composed row's dedup stage)
       // reports a phantom speedup
-      def minOf2(body: => Long): Double = {
-        val a = time(body); spark.catalog.clearCache()
-        val bb = time(body); spark.catalog.clearCache()
-        math.min(a, bb)
+      // the row count rides along so two commits' runs compare outputs
+      def minOf2(body: => Long): (Double, Long) = {
+        var rows = 0L
+        val a = time { rows = body }; spark.catalog.clearCache()
+        val bb = time { rows = body }; spark.catalog.clearCache()
+        (math.min(a, bb), rows)
       }
       sideLabel = "x1"
-      val t1 = minOf2(run(b))
+      val (t1, rows1) = minOf2(run(b))
       sideLabel = "xN"
-      val tN = minOf2(run(aN))
-      println(f"""{"pipeline":"$name","x1_sec":$t1%.2f,"xN_sec":$tN%.2f,"factor":$factor,"ratio":${tN / t1}%.2f}""")
+      val (tN, rowsN) = minOf2(run(aN))
+      println(f"""{"pipeline":"$name","x1_sec":$t1%.2f,"xN_sec":$tN%.2f,"factor":$factor,"ratio":${tN / t1}%.2f,"x1_rows":$rows1,"xN_rows":$rowsN}""")
     })
 
     private def guard(name: String)(body: String => Unit): Row =
@@ -443,7 +445,7 @@ object ScaleBench {
       // blowup) is what scales
       ratio("decontaminate", onDocs)(d => Dedup.decontaminate(
         d.filter($"doc_id" % 20 =!= 0),
-        d.filter($"doc_id" % 20 === 0), n = 8).count()),
+        Dedup.Exact(d.filter($"doc_id" % 20 === 0)), n = 8).count()),
       // exact-substring repeat spans (the Lee-et-al suffix-array
       // family, q152): amplified copies duplicate every window of the
       // original text, so duplicated-OCCURRENCE volume grows ~linearly
@@ -572,9 +574,10 @@ object ScaleBench {
       // q86's prune-then-verify: the benchmark side grows with the
       // factor but crosses as a fixed 2^20-bit filter; ratio tracks
       // the corpus gram scan
-      ratio("bloom_decontaminate", onDocs)(d => Dedup.decontaminateBloom(
-        d.filter($"doc_id" % 10 =!= 0), d.filter($"doc_id" % 10 === 0),
-        n = 6, numBits = 1 << 20).count()),
+      ratio("bloom_decontaminate", onDocs)(d => Dedup.decontaminate(
+        d.filter($"doc_id" % 10 =!= 0),
+        Dedup.Bloomed(d.filter($"doc_id" % 10 === 0), numBits = 1 << 20),
+        n = 6).count()),
       // q119: dedupCorpus's cluster machinery + two label joins + a
       // narrow bucket map — ratio must track the dedup family's
       ratio("leakage_safe_split", onDocs)(d => Dedup.leakageSafeSplit(
@@ -1245,7 +1248,7 @@ object ScaleBench {
         Harness.freshDir(spark, artDir)
         // the production shape: a blocklist 400× the batch — the point
         // of the artifact is precisely that re-shingling the benchmark
-        // per batch (decontaminateBloom scans it TWICE: filter build +
+        // per batch (the Bloomed probe scans it TWICE: filter build +
         // the exact verify join's gram table) dwarfs reading the
         // persisted gram table + stamped filter. At smaller blocklists
         // (measured: 20k docs → 0.95×, 200k → 1.04×) the batch-side
@@ -1267,10 +1270,9 @@ object ScaleBench {
         var rebuildSurvivors = 0L
         val tRebuild = time {
           (0 until nBatches).foreach { b =>
-            rebuildSurvivors += Dedup
-              .decontaminateBloom(batch(b), benchmark, n = gramN,
-                numBits = 1 << 27).count() // ~6M grams: 2^27 bits ≈ 0.2% fp
-                                           // (2^20 would saturate → no prune)
+            // ~6M grams: 2^27 bits ≈ 0.2% fp (2^20 would saturate → no prune)
+            rebuildSurvivors += Dedup.decontaminate(batch(b),
+              Dedup.Bloomed(benchmark, numBits = 1 << 27), n = gramN).count()
           }
         }
         // BUILD-ONCE: gram table + stamped filter persisted as artifacts
@@ -1287,11 +1289,10 @@ object ScaleBench {
         var probeSurvivors = 0L
         val tProbe = time {
           (0 until nBatches).foreach { b =>
-            probeSurvivors += Dedup
-              .decontaminateBloomPrebuilt(batch(b),
-                spark.read.parquet(s"$artDir/grams"),
-                SketchStore.readBloom(spark,
-                  s"$artDir/bloom", domain), n = gramN).count()
+            probeSurvivors += Dedup.decontaminate(batch(b),
+              Dedup.Prebuilt(spark.read.parquet(s"$artDir/grams"),
+                SketchStore.readBloom(spark, s"$artDir/bloom", domain)),
+              n = gramN).count()
           }
         }
         val expected = nBatches.toLong * half

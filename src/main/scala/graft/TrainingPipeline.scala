@@ -318,7 +318,7 @@ object TrainingPipeline {
     //    contaminated cluster survivor must drop even if its
     //    duplicates already did
     val cleaned = benchmark.fold(collapsed)(b =>
-      marked(Dedup.decontaminate(collapsed, b, decontaminateNgram),
+      marked(Dedup.decontaminate(collapsed, Dedup.Exact(b), decontaminateNgram),
         "decontaminate"))
     // 7b. winnowing decontamination (when `winnowEval` is set): the
     //     fingerprint-overlap complement to the exact-gram stage —

@@ -13,9 +13,10 @@ import org.apache.spark.sql.types._
   *    shuffle is the band-bucket self-join on (band, bucketHash) — the
   *    classic shingle→minhash→band→bucket-join plan, with candidate
   *    verification as a second exact-Jaccard filter;
-  *  - SimHash: a projection to one 64-bit signature, a band-bucket
-  *    join on `maxHamming + 1` signature chunks (pigeonhole-complete
-  *    for the promised radius), and a Hamming-distance verify;
+  *  - SimHash: a projection to a 96-bit signature (two 48-bit
+  *    md5-domain words, replayable in DuckDB), a band-bucket join on
+  *    `maxHamming + 1` signature chunks (pigeonhole-complete for the
+  *    promised radius), and a Hamming-distance verify;
   *  - embedding near-dup: random-hyperplane LSH buckets, cosine verify.
   *
   * All candidate generation is bucket-equi-join — never an O(n²)
@@ -27,8 +28,8 @@ import org.apache.spark.sql.types._
   * `cache()` a slim projection ONLY when the returned plan references
   * it more than once AND no exchange-level reuse can deliver the same
   * (hydration joins on a different key than the candidate join —
-  * `lshCandidates`' shingles, `dedupIncremental`'s corpus index and
-  * batch projection, `sparseCosineTopK`'s vector aggregate). Such
+  * `minHashDupPairs`' shingles, `dedupIncrementalIndexed`'s batch
+  * projection, `sparseCosineTopK`'s vector aggregate). Such
   * caches go through [[Hydration.persist]]: inside a
   * [[Hydration.scoped]] block (every eager operator here runs in one)
   * they are released when the block exits; called from plain caller
@@ -66,10 +67,6 @@ object Dedup {
     require(k <= 128, "lane mixing provides 128 independent permutations")
     graft.functions.SignatureExpressions.minHashSig(shingleCol, k)
   }
-
-  /** (id, sh) → (id, sh, sig) via the native kernel — no shuffle. */
-  def minHashSignatures(shingled: DataFrame, k: Int): DataFrame =
-    shingled.select(col("id"), minHashSignature(col("sh"), k).as("sig"))
 
   /** Threshold-derived banding, two-step: (1) the LARGEST row width r
     * (fewest false-positive candidates — candidate rate for unrelated
@@ -136,34 +133,24 @@ object Dedup {
       .withColumnRenamed("col", "bucket")
   }
 
-  /** LSH banding: split the k-length signature into `bands` bands of
-    * k/bands rows each; a candidate pair shares ≥1 full band. Pass
-    * (k, bands) explicitly, or let the threshold-taking operators
+  /** (id, sh) — each doc's distinct word shingles, docs without any
+    * dropped: the front every shingle-based operator here shares. */
+  private def shingled(docs: DataFrame, idCol: String, textCol: String,
+      shingleSize: Int): DataFrame =
+    docs.select(col(idCol).as("id"), shingles(col(textCol), shingleSize).as("sh"))
+      .filter(size(col("sh")) > 0)
+
+  /** MinHash LSH banding: split the k-length signature into `bands`
+    * bands of k/bands rows each; a candidate pair shares ≥1 full band.
+    * Pass (k, bands) explicitly, or let the threshold-taking operators
     * derive them via [[lshParams]]. The band-bucket self-join is
     * hot-bucket bounded with a star fallback
     * ([[HotBuckets.starSelfJoinCandidates]]): a bucket with B > cap
     * members yields B-1 representative candidates instead of B² —
     * bounded work AND a mega-cluster of true duplicates still
-    * collapses downstream. */
-  def lshCandidates(docs: DataFrame, idCol: String, textCol: String,
-      shingleSize: Int = 3, k: Int = 128, bands: Int = 32,
-      maxBucket: Int = HotBuckets.DefaultCap,
-      strict: Boolean = false): DataFrame = {
-    val (pairs, shingled) = lshCandidatePairs(docs, idCol, textCol,
-      shingleSize, k, bands, maxBucket, strict)
-    // hydrate shingles only for surviving candidates — the DEBUG /
-    // small-scale form: each pair row carries two full string arrays,
-    // so memory per pair is O(doc length). The verification path
-    // ([[minHashDupPairs]]) does NOT go through this frame — it
-    // verifies from slim hashed arrays ([[hashedGramJaccard]]); hydrate
-    // when a caller genuinely needs the shingle sets side by side.
-    pairs
-      .join(shingled.select(col("id").as("id_a"), col("sh").as("sh_a")), Seq("id_a"))
-      .join(shingled.select(col("id").as("id_b"), col("sh").as("sh_b")), Seq("id_b"))
-      .select(col("id_a"), col("id_b"), col("sh_a"), col("sh_b"))
-  }
-
-  /** Slim LSH candidate generation: (id_a, id_b) pairs PLUS the shared
+    * collapses downstream.
+    *
+    * Returns the slim (id_a, id_b) pairs PLUS the shared
     * hydration-persisted shingle projection, so callers verify without
     * re-shingling. The heavy arrays never touch a pair row. */
   private def lshCandidatePairs(docs: DataFrame, idCol: String,
@@ -176,10 +163,8 @@ object Dedup {
     // (released by the caller's scope, else LRU-evicted after the
     // query; a few GB per million docs at the default level — size or
     // disable via `spark.sql.defaultCacheStorageLevel`, see [[Hydration]])
-    val shingled = Hydration.persist(docs
-      .select(col(idCol).as("id"), shingles(col(textCol), shingleSize).as("sh"))
-      .filter(size(col("sh")) > 0))
-    val sig = minHashSignatures(shingled, k)
+    val proj = Hydration.persist(shingled(docs, idCol, textCol, shingleSize))
+    val sig = proj.select(col("id"), minHashSignature(col("sh"), k).as("sig"))
     // bucket self-join on the slim (id, band, bucket) set => pair ids;
     // oversized buckets degrade to star candidates vs the bucket-min
     // (a genuine mega-cluster still collapses downstream — a plain
@@ -188,7 +173,7 @@ object Dedup {
       Seq("band", "bucket"), "id", Nil, maxBucket, "minhash_lsh", strict)
       .select(col("id_a"), col("id_b"))
       .dropDuplicates("id_a", "id_b")
-    (pairs, shingled)
+    (pairs, proj)
   }
 
   /** Exact Jaccard for an already-generated candidate pair set from
@@ -258,38 +243,12 @@ object Dedup {
       maxBucket: Int = HotBuckets.DefaultCap,
       strict: Boolean = false): DataFrame = {
     val (kk, bb) = resolveLsh(threshold, k, bands)
-    val (pairs, shingled) = lshCandidatePairs(docs, idCol, textCol,
+    val (pairs, proj) = lshCandidatePairs(docs, idCol, textCol,
       shingleSize, kk, bb, maxBucket, strict)
-    hashedGramJaccard(pairs, "id_a", "id_b", shingled, shingled)
+    hashedGramJaccard(pairs, "id_a", "id_b", proj, proj)
       .filter(col("jaccard") >= threshold)
       .select(col("id_a"), col("id_b"), col("jaccard"))
   }
-
-  /** SimHash-64 signatures over shingle hashes — native single-pass
-    * kernel ([[graft.functions.SimHash64]]): ±1 bit votes folded per
-    * row, a pure projection (the explode→64-sum-aggregate shape paid
-    * an exploded-row shuffle for the same result). Shingles (not
-    * unigrams) as features: on small-vocabulary corpora unigram
-    * signatures collapse to near-identical values and the bucket join
-    * degenerates to O(n²). */
-  def simHashSignatures(shingled: DataFrame): DataFrame =
-    shingled.select(col("id"),
-      graft.functions.SignatureExpressions.simHash64(col("sh")).as("sig"))
-
-  /** 128-bit SimHash signatures as two 64-bit words (sig0 = the
-    * [[simHashSignatures]] bits, sig1 from the double-hash lane) — the
-    * wide fast path: at any maxHamming the pigeonhole chunks are 2×
-    * the single-word width, so band-bucket cardinality stays ≥ 2^18
-    * at the default radius instead of collapsing to a few hundred. */
-  def simHash128Signatures(shingled: DataFrame): DataFrame =
-    shingled
-      .select(col("id"),
-        graft.functions.SignatureExpressions.simHash128(col("sh")).as("s"))
-      .select(col("id"), col("s").getItem(0).as("sig0"),
-        col("s").getItem(1).as("sig1"))
-
-  /** Hamming distance between two 64-bit signatures. */
-  def hamming64(a: Column, b: Column): Column = bit_count(a.bitwiseXOR(b))
 
   /** Contiguous chunk layout whose pigeonhole guarantee COVERS
     * `maxHamming`: `maxHamming + 1` bands, widths as equal as possible
@@ -347,10 +306,11 @@ object Dedup {
   /** Signature-level SimHash pairing over a MULTI-WORD signature
     * (columns `wordCols`, each holding `wordBits` bits): band each row
     * into `maxHamming + 1` chunks, bucket-join (hot-bucket guarded),
-    * verify total hamming ≤ `maxHamming`. Shared by both signature
-    * domains — 2×64-bit xxhash64 fast path, 2×48-bit portable md5 —
-    * and unit-testable with PLANTED signatures (DedupSpec plants
-    * straddling pairs and asserts they are found).
+    * verify total hamming ≤ `maxHamming`. Runs the document path's
+    * 2×48-bit portable md5 signature, the multimodal perceptual hash's
+    * 2×32-bit words, and PLANTED single-word signatures
+    * (`Seq("sig")` — the specs plant straddling pairs and assert they
+    * are found).
     *
     * No caching: the band fan-out is referenced once per join side,
     * but both sides shuffle the SAME banded projection on (band,
@@ -389,75 +349,45 @@ object Dedup {
       .select(col("id_a"), col("id_b"), col("hamming"))
   }
 
-  /** [[simHashPairsFromSigWords]] for a single-long signature column
-    * `sig` — the planted-fixture entry point and the shape the 48/64
-    * bit domains used before the round-7 widening. */
-  def simHashPairsFromSigs(sig: DataFrame, sigBits: Int, maxHamming: Int,
-      maxBucket: Int = HotBuckets.DefaultCap): DataFrame =
-    simHashPairsFromSigWords(sig, Seq("sig"), sigBits, sigBits, maxHamming,
-      maxBucket)
-
-  /** SimHash near-dup pairs on the 128-bit fast-path signature
-    * ([[simHash128Signatures]]): band into `maxHamming + 1` chunks
-    * ([[simHashBandSpec]] — recall 1.0 at the promised radius by
-    * pigeonhole), bucket-join, verify hamming ≤ maxHamming. 128 bits
-    * keep the chunks ≥ 18 bits wide at the default radius — the
-    * single-word 64-bit layout left 9-bit chunks (512 buckets/band),
-    * a candidate blowup at corpus scale.
+  /** SimHash near-dup pairs in the portable 96-bit md5 domain: two
+    * 48-bit words ([[graft.functions.SignatureKernels.simHash48]]
+    * parts 0/1 — DuckDB's `md5_number_upper/lower & (2^48-1)`), banded
+    * into `maxHamming + 1` chunks ([[simHashBandSpec]] — recall 1.0 at
+    * the promised radius by pigeonhole), bucket-joined, hamming
+    * verified — every step replayable in DuckDB, so the driver query
+    * (q28) is oracle-gated. 96 bits keep the pigeonhole chunks 13-14
+    * bits wide at maxHamming 6 — the round-6 single-word 48-bit layout
+    * had 6-7-bit chunks (64-128 buckets per band), a ~56× candidate
+    * blowup vs the legacy 12-bit layout and quadratic at 100× scale.
     *
     * '''Dial semantics''': `maxHamming` is an ABSOLUTE radius over the
-    * signature width, so a wider signature at a fixed dial TIGHTENS
-    * the normalized similarity threshold — 6 of 128 bits ≈ 3 of 64.
-    * The DEFAULT therefore scales with the width: 6/128 here preserves
-    * the pre-widening 3/64 normalized radius (7 bands, still ≥ 2^18
-    * buckets each), so callers on defaults kept their recall across
-    * the widening. Callers tuning their own dial scale it the same way
-    * (6/64 → 12/128); the price is `maxHamming + 1` bands of half the
-    * chunk width ([[simHashBandSpec]] trades bucket cardinality for
-    * radius — below ~12-bit chunks the bucket join re-enters the
-    * candidate-blowup regime the widening fixed). */
+    * 96 bits, so a wider signature at a fixed dial TIGHTENS the
+    * normalized similarity threshold. The default scales with the
+    * width — 6/96 ≈ the pre-widening 3/48 normalized threshold, so
+    * defaulted callers kept their radius (7 bands of 13-14 bits, ≥ 8k
+    * buckets each). Callers tuning their own dial scale it the same
+    * way; the price is `maxHamming + 1` bands of narrower chunks
+    * ([[simHashBandSpec]] trades bucket cardinality for radius — below
+    * ~12-bit chunks the bucket join re-enters the candidate-blowup
+    * regime the widening fixed). */
   def simHashDupPairs(docs: DataFrame, maxHamming: Int = 6,
       idCol: String = "doc_id", textCol: String = "text",
       shingleSize: Int = 3,
-      maxBucket: Int = HotBuckets.DefaultCap): DataFrame = {
-    val sig = simHash128Signatures(docs
-      .select(col(idCol).as("id"), shingles(col(textCol), shingleSize).as("sh"))
-      .filter(size(col("sh")) > 0))
-    simHashPairsFromSigWords(sig, Seq("sig0", "sig1"), 64, 128, maxHamming,
-      maxBucket)
-  }
+      maxBucket: Int = HotBuckets.DefaultCap): DataFrame =
+    simHashPairsFromSigWords(simHashSigs(docs, idCol, textCol, shingleSize),
+      Seq("sig0", "sig1"), 48, 96, maxHamming, maxBucket)
 
-  /** [[simHashDupPairs]] in the portable 96-bit md5 domain: two 48-bit
-    * words ([[graft.functions.SignatureKernels.simHash48]] parts 0/1 —
-    * DuckDB's `md5_number_upper/lower & (2^48-1)`), the same
-    * [[simHashBandSpec]] banding, hamming verify — every step
-    * replayable in DuckDB, so the driver query is oracle-gated (the
-    * `hashSplitPortable`/`rollingHashPortable` play; the xxhash64
-    * variant stays the production fast path). 96 bits keep the
-    * pigeonhole chunks 13-14 bits wide at maxHamming 6 — the round-6
-    * single-word 48-bit layout had 6-7-bit chunks (64-128 buckets per
-    * band), a ~56× candidate blowup vs the legacy 12-bit layout and
-    * quadratic at 100× scale. Dial semantics as in
-    * [[simHashDupPairs]]: `maxHamming` is absolute over the 96 bits,
-    * and the default scales with the width — 6/96 ≈ the pre-widening
-    * 3/48 normalized threshold, so defaulted callers kept their
-    * radius (7 bands of 13-14 bits, ≥ 8k buckets each). */
-  def simHashDupPairsPortable(docs: DataFrame, maxHamming: Int = 6,
-      idCol: String = "doc_id", textCol: String = "text",
-      shingleSize: Int = 3,
-      maxBucket: Int = HotBuckets.DefaultCap): DataFrame = {
-    val shingled = docs
-      .select(col(idCol).as("id"), shingles(col(textCol), shingleSize).as("sh"))
-      .filter(size(col("sh")) > 0)
-    // the fused kernel digests each shingle ONCE for both words — two
-    // SimHash48Portable calls would run the md5 loop twice per doc
-    val sig = shingled
+  /** (id, sig0, sig1): the portable 96-bit SimHash of each doc's
+    * shingles — [[simHashDupPairs]]' signature, and the one
+    * [[graft.streaming.NearDup]] signs its stream with. The fused
+    * kernel digests each shingle ONCE for both words — two
+    * SimHash48Portable calls would run the md5 loop twice per doc. */
+  private[graft] def simHashSigs(docs: DataFrame, idCol: String,
+      textCol: String, shingleSize: Int): DataFrame =
+    shingled(docs, idCol, textCol, shingleSize)
       .select(col("id"),
         graft.functions.SignatureExpressions.simHash96Portable(col("sh")).as("s"))
       .select(col("id"), col("s")(0).as("sig0"), col("s")(1).as("sig1"))
-    simHashPairsFromSigWords(sig, Seq("sig0", "sig1"), 48, 96, maxHamming,
-      maxBucket)
-  }
 
   /** Connected components over an undirected pair list (id_a, id_b).
     * Two paths behind one interface:
@@ -637,39 +567,12 @@ object Dedup {
     exactKept.join(drop, Seq(idCol), "left_anti")
   }
 
-  /** Incremental corpus dedup — the growing-training-set operation:
-    * dedup a NEW batch against an EXISTING corpus without ever
-    * self-joining the corpus. Returns the rows of `newDocs` to ADD:
-    * first the batch is internally deduped (exact fingerprint collapse
-    * + near-dup clustering — the new side is the small one), then
-    * exact matches against the corpus are removed by a fingerprint
-    * anti-join (one hash shuffle), then near-matches by an ASYMMETRIC
-    * banded LSH join with exact-Jaccard verification.
-    *
-    * At 100 TB the corpus side dominates; it is scanned ONCE into a
-    * cached (id, fingerprint, shingles) projection, and the NEW batch
-    * is shingled + signed ONCE into a cached (id, sh, sig) projection
-    * that feeds the within-batch pass and the cross pass (the round-3
-    * shape computed it twice). */
-  def dedupIncremental(newDocs: DataFrame, corpus: DataFrame,
-      jaccardThreshold: Double = 0.8,
-      idCol: String = "doc_id", textCol: String = "text",
-      shingleSize: Int = 3, k: Int = -1, bands: Int = -1,
-      maxBucket: Int = HotBuckets.DefaultCap): DataFrame =
-    // 0. the corpus index: one scan, hydration-persisted, reused three
-    //    times within this call. For REPEATED batch ingestion, build
-    //    it once with [[buildCorpusIndex]], write it as a parquet
-    //    table, and feed every batch through
-    //    [[dedupIncrementalIndexed]] — it IS the index.
-    dedupIncrementalIndexed(newDocs,
-      Hydration.persist(buildCorpusIndex(corpus, shingleSize, idCol, textCol)),
-      jaccardThreshold, idCol, textCol, shingleSize, k, bands, maxBucket)
-
-  /** The (id, __fp, sh) corpus-index projection [[dedupIncremental]]
-    * hydrates from, exposed so repeated ingestion can persist it as a
-    * REAL table: write the returned frame once (parquet/Delta), read
-    * it back for every subsequent batch via
-    * [[dedupIncrementalIndexed]] — the 100 TB corpus is then scanned
+  /** The (id, __fp, sh) corpus index [[dedupIncrementalIndexed]]
+    * dedups a batch against. For ONE batch, pin it
+    * (`Hydration.persist(buildCorpusIndex(corpus))` — the call reads it
+    * three times); for repeated ingestion persist it as a REAL table:
+    * write the returned frame once (parquet/Delta), read it back for
+    * every subsequent batch — the 100 TB corpus is then scanned
     * and shingled ONCE across all ingestions instead of once per
     * batch, and no executor-storage cache needs to survive between
     * jobs. Raw shingles (not signatures) are stored so any later
@@ -683,32 +586,39 @@ object Dedup {
       idCol: String = "doc_id", textCol: String = "text"): DataFrame =
     corpus.select(col(idCol).as("id"),
       fingerprint(col(textCol)).as("__fp"),
-      shingles(col(textCol), shingleSize).as("sh",
-        new org.apache.spark.sql.types.MetadataBuilder()
-          .putLong(ShingleSizeMetaKey, shingleSize.toLong).build()))
+      shingles(col(textCol), shingleSize).as("sh", shingleStamp(shingleSize)))
 
   private[graft] val ShingleSizeMetaKey = "graft.shingleSize"
 
-  /** [[dedupIncremental]] against a PREBUILT corpus index
-    * ([[buildCorpusIndex]] output — freshly built, or read back from a
-    * persisted index table). `shingleSize` must match the index's
-    * build parameter: the batch side is shingled here and verified
-    * against the index's stored shingles — enforced against the
-    * [[ShingleSizeMetaKey]] stamp in the `sh` column metadata (a pure
-    * schema check, no job). The index frame's
-    * persistence is the CALLER's policy (a parquet-backed index needs
-    * none); this method never caches it. */
+  /** Incremental corpus dedup — the growing-training-set operation:
+    * dedup a NEW batch against an EXISTING corpus without ever
+    * self-joining the corpus. Returns the rows of `newDocs` to ADD:
+    * first the batch is internally deduped (exact fingerprint collapse
+    * + near-dup clustering — the new side is the small one), then
+    * exact matches against the corpus are removed by a fingerprint
+    * anti-join (one hash shuffle), then near-matches by an ASYMMETRIC
+    * banded LSH join with exact-Jaccard verification.
+    *
+    * At 100 TB the corpus side dominates; it is scanned ONCE into the
+    * (id, fingerprint, shingles) index, and the NEW batch is shingled
+    * + signed ONCE into a cached (id, sh, sig) projection that feeds
+    * the within-batch pass and the cross pass (the round-3 shape
+    * computed it twice).
+    *
+    * `corpusIndex` is [[buildCorpusIndex]]' output — freshly built
+    * (and pinned), or read back from a persisted index table.
+    * `shingleSize` must match the index's build parameter: the batch
+    * side is shingled here and verified against the index's stored
+    * shingles — enforced against the [[ShingleSizeMetaKey]] stamp in
+    * the `sh` column metadata (a pure schema check, no job). The index
+    * frame's persistence is the CALLER's policy (a parquet-backed index
+    * needs none); this method never caches it. */
   def dedupIncrementalIndexed(newDocs: DataFrame, corpusIndex: DataFrame,
       jaccardThreshold: Double = 0.8,
       idCol: String = "doc_id", textCol: String = "text",
       shingleSize: Int = 3, k: Int = -1, bands: Int = -1,
       maxBucket: Int = HotBuckets.DefaultCap): DataFrame = {
-    // fail fast on a dial mismatch with the index's build: comparing
-    // 3-gram batch shingles to a 5-gram index gives jaccard ~ 0 and
-    // silently lets every cross duplicate through (pure schema check —
-    // the stamp survives the parquet round-trip; indexes built before
-    // the stamp existed skip the check)
-    requireShingleStamp(corpusIndex, shingleSize, "ingest against")
+    requireShingleStamp(corpusIndex, "sh", shingleSize, "corpus index")
     val (kk, bb) = resolveLsh(jaccardThreshold, k, bands)
     val r = kk / bb
     val corpusPrep = corpusIndex
@@ -733,10 +643,7 @@ object Dedup {
     //    joins, AND the cross pass — the round-3 review flagged the
     //    previous shape for shingling + signing the batch twice
     //    (once inside dedupCorpus, again for the cross join)
-    val proj = Hydration.persist(exactKept
-      .select(col(idCol).as("id"),
-        shingles(col(textCol), shingleSize).as("sh"))
-      .filter(size(col("sh")) > 0)
+    val proj = Hydration.persist(shingled(exactKept, idCol, textCol, shingleSize)
       .withColumn("sig", minHashSignature(col("sh"), kk)))
     val banded = bandedOf(proj.select(col("id"), col("sig")), bb, r)
     // 3. within-batch near-dup: banded self-join (star fallback for
@@ -813,13 +720,13 @@ object Dedup {
   def appendCorpusIndex(corpusIndex: DataFrame, accepted: DataFrame,
       shingleSize: Int = 3, idCol: String = "doc_id",
       textCol: String = "text"): DataFrame = {
-    requireShingleStamp(corpusIndex, shingleSize, "append to")
+    requireShingleStamp(corpusIndex, "sh", shingleSize, "corpus index")
     corpusIndex.unionByName(
       buildCorpusIndex(accepted, shingleSize, idCol, textCol))
   }
 
   /** One complete ingestion step against a PERSISTED parquet corpus
-    * index — the repeated-batch form of [[dedupIncremental]] for a
+    * index — the repeated-batch form of incremental dedup for a
     * corpus that outlives any one Spark job: read the index table,
     * dedup `batch` against it ([[dedupIncrementalIndexed]]), append
     * the accepted survivors' index rows, return the accepted docs.
@@ -954,15 +861,25 @@ object Dedup {
     graft.sources.Lake.swapInto(spark, indexPath, scratch)
   }
 
-  private def requireShingleStamp(corpusIndex: DataFrame,
-      shingleSize: Int, action: String): Unit =
-    corpusIndex.schema.find(_.name == "sh").map(_.metadata)
+  /** Column metadata carrying the [[ShingleSizeMetaKey]] stamp. */
+  private def shingleStamp(shingleSize: Int): Metadata =
+    new MetadataBuilder().putLong(ShingleSizeMetaKey, shingleSize.toLong).build()
+
+  /** Fails fast when `table`'s `column` carries a [[ShingleSizeMetaKey]]
+    * stamp other than `shingleSize` — comparing grams of two widths
+    * matches (almost) nothing, so every duplicate or contaminated doc
+    * would pass silently. A pure schema check, no job; the stamp
+    * survives the parquet round-trip, and tables written before it
+    * existed skip the check. */
+  private def requireShingleStamp(table: DataFrame, column: String,
+      shingleSize: Int, what: String): Unit =
+    table.schema.find(_.name == column).map(_.metadata)
       .filter(_.contains(ShingleSizeMetaKey)).foreach { m =>
         val built = m.getLong(ShingleSizeMetaKey)
         require(built == shingleSize.toLong,
-          s"corpus index was built with shingleSize=$built but this " +
-            s"batch uses shingleSize=$shingleSize — rebuild the index " +
-            s"or pass the matching shingleSize to $action it")
+          s"$what was built with shingleSize=$built but this call uses " +
+            s"shingleSize=$shingleSize — rebuild it or pass the matching " +
+            "shingleSize")
       }
 
   /** Typo-level near-dup pairs via blocked edit distance: normalize,
@@ -1116,9 +1033,7 @@ object Dedup {
       strictBuckets: Boolean = false): DataFrame = {
     require(threshold > 0 && threshold <= 1,
       s"containment threshold must be in (0, 1], got $threshold")
-    val exploded = docs
-      .select(col(idCol).as("id"), shingles(col(textCol), shingleSize).as("sh"))
-      .filter(size(col("sh")) > 0)
+    val exploded = shingled(docs, idCol, textCol, shingleSize)
       .select(col("id"), explode(col("sh")).as("g"))
       .select(col("id"), xxhash64(col("g")).as("gh"))
     val guarded = HotBuckets.guard(exploded, Seq("gh"), maxBucket,
@@ -1220,27 +1135,95 @@ object Dedup {
   }
 
   /** The hashed n-gram array shared by every gram-decontamination
-    * path (batch, Bloom-pruned, and the streaming twin) — hash INSIDE
-    * the array, before the generator: the gram strings never outlive
-    * the transform (a generator cannot nest under an expression
-    * anyway), and ONE kernel means the stream and batch sides cannot
-    * drift on gram width/tokenization. */
+    * path (exact, Bloom-pruned, prebuilt, and the streaming twin) —
+    * hash INSIDE the array, before the generator: the gram strings
+    * never outlive the transform (a generator cannot nest under an
+    * expression anyway), and ONE kernel means the stream and batch
+    * sides cannot drift on gram width/tokenization. */
   def gramHashArray(text: Column, n: Int): Column =
     transform(shingles(text, n), g => xxhash64(g))
+
+  /** What [[decontaminate]] probes a corpus's gram hashes against. */
+  sealed trait Against
+
+  /** The benchmark's distinct gram hashes, hash-joined directly. The
+    * benchmark side is tiny (an eval suite), so Catalyst broadcasts
+    * its hash set and the corpus never shuffles at all. */
+  final case class Exact(benchmark: DataFrame) extends Against
+
+  /** A `numBits` Bloom filter ([[Bloom]], 3 hashes) over the
+    * benchmark's gram hashes prunes the corpus grams before the exact
+    * verify join. Survivors are EXACTLY [[Exact]]'s (Bloom has no false
+    * negatives, and false positives die in the verify), but the
+    * benchmark crosses the cluster as `numBits/8` bytes instead of a
+    * ~30-50 B/gram join hashmap — the form for a consortium-scale
+    * blocklist (10⁸-10⁹ grams) whose hash set no longer fits a
+    * broadcast; the verify join then shuffles. Building the filter is
+    * one extra pass over the benchmark (collecting ≤ numBits/64 longs
+    * to the driver), and the verify join re-reads it: at blocklist
+    * scale pass a persisted benchmark. */
+  final case class Bloomed(benchmark: DataFrame, numBits: Int = 1 << 20)
+      extends Against
+
+  /** [[Bloomed]] against a PERSISTED benchmark — the reuse form for
+    * "hundreds of ingestion batches, one blocklist": `grams` is
+    * [[benchmarkGrams]]' output (fresh, or read back from parquet) and
+    * `filter` the Bloom filter built over its `gram_h` column
+    * ([[SketchStore.writeBloom]]). No benchmark re-scan, no filter
+    * rebuild; survivors are [[Exact]]'s as long as both come from the
+    * same benchmark revision. The gram width is checked: `grams`
+    * carries the `n` it was built with, and probing it at another
+    * width fails fast instead of matching nothing. */
+  final case class Prebuilt(grams: DataFrame, filter: Bloom.Filter)
+      extends Against
+
+  /** The benchmark side of decontamination as a PERSISTABLE table: the
+    * distinct `gram_h` hashes of `benchmark`'s word n-grams, with `n`
+    * stamped into the column's metadata ([[ShingleSizeMetaKey]] — it
+    * survives the parquet round-trip). Build it and its Bloom filter
+    * ONCE per benchmark revision, then probe every batch with
+    * [[Prebuilt]]. */
+  def benchmarkGrams(benchmark: DataFrame, n: Int = 13,
+      textCol: String = "text"): DataFrame =
+    benchmark
+      .select(explode(gramHashArray(col(textCol), n)).as("gram_h"))
+      .distinct()
+      .select(col("gram_h").as("gram_h", shingleStamp(n)))
+
+  /** (id, gram_h): every corpus gram hash `against` confirms — the one
+    * hit core of [[decontaminate]] and [[contaminationFraction]]. A
+    * Bloom filter, when there is one, prunes the exploded corpus grams
+    * before the exact verify join. */
+  private def gramHits(corpus: DataFrame, against: Against, n: Int,
+      idCol: String, textCol: String): DataFrame = {
+    val (grams, filter) = against match {
+      case Exact(benchmark) => (benchmarkGrams(benchmark, n, textCol), None)
+      case Bloomed(benchmark, numBits) =>
+        val table = benchmarkGrams(benchmark, n, textCol)
+        (table, Some(Bloom.buildWords(table, "gram_h", numBits)))
+      case Prebuilt(table, bloom) =>
+        requireShingleStamp(table, "gram_h", n, "benchmark gram table")
+        (table, Some(bloom))
+    }
+    val probe = corpus.select(col(idCol).as("id"),
+      explode(gramHashArray(col(textCol), n)).as("gram_h"))
+    filter.fold(probe)(f => probe.filter(Bloom.mightContain(col("gram_h"), f)))
+      .join(grams, Seq("gram_h"))
+  }
 
   /** Benchmark DECONTAMINATION — drop training docs that collide with
     * an evaluation set on any word n-gram (the standard leakage gate:
     * GPT-3 used 13-gram collision; pick `n` per document length).
-    * Returns the corpus rows that survive.
+    * Returns the corpus rows that survive; `against` picks how the
+    * benchmark's grams are probed ([[Exact]], [[Bloomed]],
+    * [[Prebuilt]] — the survivors are the same for all three).
     *
     * Shape at 100 TB: both sides project their n-grams down to an
     * 8-byte `xxhash64` BEFORE any join boundary — never doc × doc, and
     * never the gram STRING: a 13-gram is ~100 raw text bytes, so
     * joining on the string ships ~13× the corpus's text volume into
     * the join (and holds it in the broadcast hashmap); the hash carries
-    * 16 bytes per exploded gram instead. The benchmark side is tiny
-    * (an eval suite), so Catalyst broadcasts its distinct hash set and
-    * the corpus never shuffles at all; contaminated ids collapse via
+    * 16 bytes per exploded gram instead. Contaminated ids collapse via
     * distinct + anti-join.
     *
     * Collision contract: a 64-bit hash equality stands in for gram
@@ -1249,83 +1232,9 @@ object Dedup {
     * |bench grams| / 2^64 — at 10^12 corpus grams × 10^6 bench grams
     * that is ~5×10^-5 expected docs; acceptable for a DROP-side gate
     * (it can only over-clean, never leak contamination through). */
-  def decontaminate(corpus: DataFrame, benchmark: DataFrame, n: Int = 13,
+  def decontaminate(corpus: DataFrame, against: Against, n: Int = 13,
       idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    def gramHashes = explode(gramHashArray(col(textCol), n))
-    val benchGrams = benchmark
-      .select(gramHashes.as("gram_h"))
-      .distinct()
-    val contaminated = corpus
-      .select(col(idCol).as("id"), gramHashes.as("gram_h"))
-      .join(benchGrams, Seq("gram_h"))
-      .select(col("id").as(idCol))
-      .distinct()
-    corpus.join(contaminated, Seq(idCol), "left_anti")
-  }
-
-  /** [[decontaminate]] with a Bloom-compressed broadcast: EXACTLY the
-    * same survivors (the filter only PRUNES before the exact verify
-    * join — Bloom has no false negatives, and false positives die in
-    * the verify), but the benchmark set crosses the cluster as
-    * `numBits/8` bytes instead of a hash-set broadcast.
-    *
-    * When it matters: [[decontaminate]] broadcasts the benchmark's
-    * distinct gram hashes as a join hashmap — ~30-50 B/gram. Fine for
-    * one eval suite; at a consortium-scale blocklist (10⁸-10⁹ grams)
-    * that broadcast is GBs per executor. The Bloom words array is
-    * 10-13 bits/gram for ~1% false positives ([[Bloom]]), so the
-    * corpus-side scan filters against megabytes, and only the ~fp
-    * fraction of gram rows reaches the exact join — which then
-    * SHUFFLES (hash join) rather than broadcasting, since by
-    * assumption the benchmark no longer fits a broadcast.
-    *
-    * Cost to build: one extra pass over the benchmark side (the
-    * filter build is its own action, collecting ≤ numBits/64 longs to
-    * the driver — bounded by the FILTER size, never the gram count).
-    * The benchmark side is re-read by the verify join; at blocklist
-    * scale, pass a persisted/checkpointed benchmark DataFrame. */
-  def decontaminateBloom(corpus: DataFrame, benchmark: DataFrame,
-      n: Int = 13, idCol: String = "doc_id", textCol: String = "text",
-      numBits: Int = 1 << 20, numHashes: Int = 3): DataFrame = {
-    val benchGrams = benchmarkGrams(benchmark, n, textCol)
-    val filter = Bloom.buildWords(benchGrams, "gram_h", numBits, numHashes)
-    decontaminateBloomPrebuilt(corpus, benchGrams, filter, n, idCol,
-      textCol)
-  }
-
-  /** The benchmark side of the Bloom-pruned decontamination as a
-    * PERSISTABLE artifact pair: the distinct gram-hash table this
-    * returns (write it as parquet) plus the [[Bloom.Filter]] built
-    * over it ([[SketchStore.writeBloom]], stamped with the gram
-    * width). Build both ONCE per benchmark revision, then run
-    * [[decontaminateBloomPrebuilt]] per ingestion batch — no
-    * benchmark re-scan, no filter rebuild. */
-  def benchmarkGrams(benchmark: DataFrame, n: Int = 13,
-      textCol: String = "text"): DataFrame =
-    benchmark
-      .select(explode(gramHashArray(col(textCol), n)).as("gram_h"))
-      .distinct()
-
-  /** [[decontaminateBloom]] against a PREBUILT benchmark: `benchGrams`
-    * is [[benchmarkGrams]]' output (fresh, or read back from parquet)
-    * and `filter` the Bloom filter built over ITS `gram_h` column —
-    * the reuse form for "hundreds of ingestion batches, one
-    * blocklist". Same exactness argument as the one-shot form: the
-    * filter only PRUNES before the exact verify join, so survivors
-    * are identical as long as filter and gram table come from the
-    * same benchmark revision AND the same gram width `n` (persist
-    * both together; [[SketchStore]]'s domain stamp is where `n`
-    * belongs — a width mismatch yields silent false negatives, which
-    * is exactly what the stamp exists to stop). */
-  def decontaminateBloomPrebuilt(corpus: DataFrame, benchGrams: DataFrame,
-      filter: Bloom.Filter, n: Int = 13, idCol: String = "doc_id",
-      textCol: String = "text"): DataFrame = {
-    val contaminated = corpus
-      .select(col(idCol).as("id"),
-        explode(transform(shingles(col(textCol), n),
-          g => xxhash64(g))).as("gram_h"))
-      .filter(Bloom.mightContain(col("gram_h"), filter))
-      .join(benchGrams, Seq("gram_h"))
+    val contaminated = gramHits(corpus, against, n, idCol, textCol)
       .select(col("id").as(idCol))
       .distinct()
     corpus.join(contaminated, Seq(idCol), "left_anti")
@@ -1419,7 +1328,7 @@ object Dedup {
     * kills a book); real decontamination pipelines drop on a fraction
     * and audit the mid-band — this emits the number they need.
     *
-    * Same scale shape as [[decontaminateBloom]]: grams cross joins as
+    * Same scale shape as [[decontaminate]] with [[Bloomed]]: grams cross joins as
     * 8-byte hashes only, the Bloom filter prunes the exact-verify
     * join's input (a gram failing the filter is DEFINITELY clean —
     * no false negatives — so it never reaches the join; BLOOM false
@@ -1454,24 +1363,16 @@ object Dedup {
     * (the q116 oracle yields NULLs there). */
   def contaminationFraction(corpus: DataFrame, benchmark: DataFrame,
       n: Int = 13, idCol: String = "doc_id", textCol: String = "text",
-      numBits: Int = 1 << 20, numHashes: Int = 3): DataFrame = {
-    def gramArr = transform(shingles(col(textCol), n), g => xxhash64(g))
-    val benchGrams = benchmark
-      .select(explode(gramArr).as("gram_h"))
-      .distinct()
-    val filter = Bloom.buildWords(benchGrams, "gram_h", numBits, numHashes)
-    val hits = corpus
-      .select(col(idCol).as("id"), explode(gramArr).as("gram_h"))
-      .filter(Bloom.mightContain(col("gram_h"), filter))
-      .join(benchGrams, Seq("gram_h"))
+      numBits: Int = 1 << 20): DataFrame = {
+    val hits = gramHits(corpus, Bloomed(benchmark, numBits), n, idCol, textCol)
       .groupBy(col("id"))
       .agg(count(lit(1)).as("__hit"))
     corpus
       .select(col(idCol).as("id"),
         // NULL text → NULL gram array → legacy size() = -1; guard to
         // NULL so frac null-propagates instead of emitting -0.0
-        when(col(textCol).isNotNull, size(gramArr).cast("long"))
-          .as("n_grams"))
+        when(col(textCol).isNotNull,
+          size(gramHashArray(col(textCol), n)).cast("long")).as("n_grams"))
       .join(hits, Seq("id"), "left")
       .select(col("id").as(idCol), col("n_grams"),
         coalesce(col("__hit"), lit(0L)).cast("long").as("n_hit"),

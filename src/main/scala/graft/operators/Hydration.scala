@@ -4,8 +4,8 @@ import org.apache.spark.sql.DataFrame
 
 /** The one pin module. Every operator cache in `src/main` goes through
   * [[persist]]: the HYDRATION caches — slim projections
-  * ([[Dedup.lshCandidates]]' shingles, [[Dedup.dedupIncremental]]'s
-  * corpus index and batch projection,
+  * ([[Dedup.minHashDupPairs]]' shingles, q64's corpus index and
+  * [[Dedup.dedupIncrementalIndexed]]'s batch projection,
   * [[Similarity.sparseCosineTopK]]'s vector aggregate) that feed more
   * than one plan reference on keys exchange reuse cannot cover — and
   * the eager operators' working sets alike.

@@ -580,7 +580,7 @@ object Similarity {
       broadcastLimit: Int = DefaultBroadcastLimit): DataFrame = {
     // the sparse-vector aggregate feeds four plan references (two norm
     // joins, the query side, the neighbor side) — hydration-persist it
-    // so the upstream tokenize+count runs once (the lshCandidates
+    // so the upstream tokenize+count runs once (the minHashDupPairs
     // discipline; released by the caller's scope, else LRU-evicted
     // after the query; level/recompute via Spark's
     // `spark.sql.defaultCacheStorageLevel`, see [[Hydration]])

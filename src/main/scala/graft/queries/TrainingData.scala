@@ -2,7 +2,7 @@ package graft.queries
 
 import graft.Tables
 import graft.functions.TextFunctions
-import graft.operators.{Dedup, Similarity, SketchStore}
+import graft.operators.{Dedup, Hydration, Similarity, SketchStore}
 import graft.sources.Multimodal
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -256,11 +256,11 @@ object TrainingData {
     * DuckDB can replay the whole pipeline: shingle → per-feature hash
     * → bit votes → banding → bucket join → hamming — independently
     * (see q28Sql). 96 bits keep the maxHamming+1 pigeonhole chunks
-    * 13-14 bits wide (≥ 2^13 buckets per band); the xxhash64 128-bit
-    * fast path stays in [[Dedup.simHashDupPairs]], spec-covered. */
+    * 13-14 bits wide (≥ 2^13 buckets per band) — the one document
+    * SimHash path, [[Dedup.simHashDupPairs]]. */
   def q28SimHashDedup(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    Dedup.simHashDupPairsPortable(Tables.documents(s, dir), maxHamming = 6)
+    Dedup.simHashDupPairs(Tables.documents(s, dir), maxHamming = 6)
       .orderBy($"id_a", $"id_b")
   }
 
@@ -1949,8 +1949,8 @@ object TrainingData {
     import s.implicits._
     val docs = Tables.documents(s, dir)
     val half = docs.agg(max($"doc_id")).head().getLong(0) / 2 + 1
-    Dedup.dedupIncremental(
-        docs.filter($"doc_id" >= half), docs.filter($"doc_id" < half),
+    Dedup.dedupIncrementalIndexed(docs.filter($"doc_id" >= half),
+        Hydration.persist(Dedup.buildCorpusIndex(docs.filter($"doc_id" < half))),
         jaccardThreshold = 0.5)
       .select($"doc_id", $"source")
       .orderBy($"doc_id")
@@ -2073,15 +2073,16 @@ object TrainingData {
   /** q68: benchmark decontamination — the corpus (doc_id % 20 ≠ 0)
     * loses every doc sharing an 8-gram with the "benchmark" slice
     * (doc_id % 20 = 0): the GPT-3-style leakage gate as a first-class
-    * operator ([[graft.operators.Dedup.decontaminate]]). The corpus's
+    * operator ([[graft.operators.Dedup.decontaminate]] with
+    * [[graft.operators.Dedup.Exact]]). The corpus's
     * planted near-dup clusters guarantee real cross-slice collisions,
     * so the query exercises genuine removals, not a no-op. */
   def q68Decontaminate(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val docs = Tables.documents(s, dir)
-    val survivors = graft.operators.Dedup.decontaminate(
+    val survivors = Dedup.decontaminate(
       docs.filter($"doc_id" % 20 =!= 0),
-      docs.filter($"doc_id" % 20 === 0), n = 8)
+      Dedup.Exact(docs.filter($"doc_id" % 20 === 0)), n = 8)
     survivors.select($"doc_id", $"n_chars".cast("long").as("n_chars"))
       .orderBy($"doc_id")
   }
@@ -2926,12 +2927,12 @@ object TrainingData {
     * cross-batch reuse lifecycle ([[graft.operators.SketchStore]]):
     * benchmark grams written as parquet, the Bloom filter written as
     * a stamped artifact, BOTH read back cold, then
-    * [[graft.operators.Dedup.decontaminateBloomPrebuilt]] over the
-    * loaded pair. The oracle is the EXACT decontamination SQL
-    * (mod-7 / 5-gram — dials disjoint from q68/q86/q116, so the
-    * artifact path gates independently): a round-trip that changed
-    * one bit of the filter or one gram row would surface as a
-    * survivor-set diff. */
+    * [[graft.operators.Dedup.decontaminate]] against the loaded pair
+    * ([[graft.operators.Dedup.Prebuilt]]). The oracle is the EXACT
+    * decontamination SQL (mod-7 / 5-gram — dials disjoint from
+    * q68/q86/q116, so the artifact path gates independently): a
+    * round-trip that changed one bit of the filter or one gram row
+    * would surface as a survivor-set diff. */
   def q121SketchArtifactDecontaminate(s: SparkSession,
       dir: String): DataFrame = {
     import s.implicits._
@@ -2951,9 +2952,9 @@ object TrainingData {
       graft.operators.Bloom.buildWords(grams, "gram_h", 1 << 17),
       s"$tmp/bloom", domain)
     // ...probe from a COLD read (the per-batch jobs)
-    Dedup.decontaminateBloomPrebuilt(corpus,
+    Dedup.decontaminate(corpus, Dedup.Prebuilt(
         s.read.parquet(s"$tmp/grams"),
-        SketchStore.readBloom(s, s"$tmp/bloom", domain), n = 5)
+        SketchStore.readBloom(s, s"$tmp/bloom", domain)), n = 5)
       .select($"doc_id", $"source").orderBy($"doc_id")
   }
 
@@ -2980,7 +2981,8 @@ object TrainingData {
       |ORDER BY d.doc_id""".stripMargin
 
   /** q86: Bloom-pruned decontamination
-    * ([[graft.operators.Dedup.decontaminateBloom]]) — bit-identical
+    * ([[graft.operators.Dedup.decontaminate]] with
+    * [[graft.operators.Dedup.Bloomed]]) — bit-identical
     * output to the exact gram-collision gate (the Bloom only PRUNES
     * before the exact verify join; false positives die there, false
     * negatives don't exist), so the ORACLE IS THE EXACT SQL: the
@@ -2990,10 +2992,10 @@ object TrainingData {
   def q86BloomDecontaminate(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val docs = Tables.documents(s, dir)
-    val survivors = graft.operators.Dedup.decontaminateBloom(
+    val survivors = Dedup.decontaminate(
       docs.filter($"doc_id" % 10 =!= 0),
-      docs.filter($"doc_id" % 10 === 0),
-      n = 6, numBits = 1 << 17)
+      Dedup.Bloomed(docs.filter($"doc_id" % 10 === 0), numBits = 1 << 17),
+      n = 6)
     survivors.select($"doc_id", $"source").orderBy($"doc_id")
   }
 

@@ -11,8 +11,8 @@ import org.apache.spark.sql.types._
   * The actual codec libraries are NOT in this container, so the decode
   * kernel is a clearly-marked DETERMINISTIC STUB — everything around
   * it (schema, batching, partition parallelism, null discipline) is
-  * the real production shape: swap `decodeStub` for an FFI call and
-  * nothing else changes.
+  * the real production shape: swap [[StubCodec]] for an FFI-backed
+  * [[MediaCodec]] and nothing else changes.
   */
 /** The codec boundary, as a TYPE: everything Spark-side (schema,
   * batching, partition parallelism, null discipline) programs against
@@ -312,12 +312,6 @@ object Multimodal {
     StructField("n_frames", IntegerType, nullable = false),
     StructField("format", StringType, nullable = false)))
 
-  /** Back-compat aliases for the stub kernels (specs reference these). */
-  def decodeStub(bytes: Array[Byte]): (Int, Int, Int, String) =
-    StubCodec.decode(bytes)
-  def featurizeStub(bytes: Array[Byte], dim: Int): Array[Float] =
-    StubCodec.featurize(bytes, dim)
-
   /** Attach decoded metadata to a DataFrame with a binary `media`
     * column. Batched per partition (no per-row task overhead), output
     * schema declared up front — the `mapInPandas` shape. */
@@ -394,7 +388,7 @@ object Multimodal {
   }
 
   /** IMAGE near-duplicate pairs — the multimodal twin of text SimHash
-    * ([[graft.operators.Dedup.simHashDupPairsPortable]]): perceptual
+    * ([[graft.operators.Dedup.simHashDupPairs]]): perceptual
     * hash per media row, pigeonhole banding into `maxHamming + 1`
     * chunks ([[graft.operators.Dedup.simHashBandSpec]] over the two
     * 32-bit words — recall 1.0 at the promised radius by

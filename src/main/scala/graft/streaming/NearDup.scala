@@ -9,10 +9,11 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * exact-key `dropDuplicates` to similarity-level.
   *
   * Each arriving doc is signed (portable 96-bit SimHash, two 48-bit
-  * md5-domain words — the q28 spec), banded into `maxHamming + 1`
-  * chunks ([[graft.operators.Dedup.simHashBandSpec]] via the SHARED
-  * [[graft.operators.Dedup.sigChunkExprs]] helper — the pigeonhole
-  * layout that guarantees recall at the promised radius, with 13-14
+  * md5-domain words — the q28 spec, through the batch operator's own
+  * [[graft.operators.Dedup.simHashSigs]] projection), banded into
+  * `maxHamming + 1` chunks ([[graft.operators.Dedup.simHashBandSpec]]
+  * via the SHARED [[graft.operators.Dedup.sigChunkExprs]] helper — the
+  * pigeonhole layout that guarantees recall at the promised radius, with 13-14
   * bit chunks so per-band bucket cardinality stays ≥ 2^13 instead of
   * the 64-128 buckets a single 48-bit word left), and compared
   * against every signature previously seen in its (band, chunk)
@@ -21,7 +22,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * Pairs are normalized to (min id, max id), so ARRIVAL ORDER never
   * changes the emitted SET — while every bucket stays under
   * `maxBucket`, a fully drained run produces exactly the batch
-  * [[graft.operators.Dedup.simHashDupPairsPortable]] candidate pairs,
+  * [[graft.operators.Dedup.simHashDupPairs]] candidate pairs,
   * which is what q72's oracle (q28's DuckDB replay) gates. Once the
   * cap fires the drained set narrows to a SUBSET of the UNCAPPED
   * batch enumeration (the set the oracle replays) — note the
@@ -84,14 +85,7 @@ object NearDup {
       maxBucket: Int = graft.operators.HotBuckets.DefaultCap): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    val sh = graft.functions.TextFunctions.shingles(col(textCol), 3)
-    val sig = docs
-      .select(col(idCol).as("id"), sh.as("sh"))
-      .filter(size(col("sh")) > 0)
-      .select(col("id"),
-        graft.functions.SignatureExpressions.simHash96Portable(col("sh"))
-          .as("s"))
-      .select(col("id"), col("s")(0).as("sig0"), col("s")(1).as("sig1"))
+    val sig = graft.operators.Dedup.simHashSigs(docs, idCol, textCol, 3)
     val chunkExprs = graft.operators.Dedup.sigChunkExprs(
       Seq(col("sig0"), col("sig1")), 48, 96, maxHamming)
     val banded = sig.select(col("id"), col("sig0"), col("sig1"),

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-/** [[operators.Bloom]] + [[operators.Dedup.decontaminateBloom]]:
+/** [[operators.Bloom]] + [[operators.Dedup.Bloomed]] decontamination:
   * the prune-then-verify contract — zero false negatives (exactness),
   * bounded false positives (the pruning actually prunes), and
   * bit-identical composition with the exact decontamination gate. */
@@ -33,10 +33,11 @@ class BloomSpec extends SparkSpec {
     val docs = Tables.documents(spark, sf)
     val corpus = docs.filter($"doc_id" % 10 =!= 0)
     val bench = docs.filter($"doc_id" % 10 === 0)
-    val exact = operators.Dedup.decontaminate(corpus, bench, n = 6)
+    val exact = operators.Dedup.decontaminate(corpus,
+        operators.Dedup.Exact(bench), n = 6)
       .select($"doc_id").as[Long].collect().sorted
-    val bloomed = operators.Dedup.decontaminateBloom(corpus, bench, n = 6,
-      numBits = 1 << 14)
+    val bloomed = operators.Dedup.decontaminate(corpus,
+      operators.Dedup.Bloomed(bench, numBits = 1 << 14), n = 6)
     // deliberately UNDERSIZED filter (high fp) — exactness must not
     // depend on the fp rate, only volume does
     val got = bloomed.select($"doc_id").as[Long].collect().sorted
@@ -66,10 +67,11 @@ class BloomSpec extends SparkSpec {
     val docs = Tables.documents(spark, sf)
     val corpus = docs.filter($"doc_id" % 10 =!= 0)
     val bench = docs.filter($"doc_id" % 10 === 0)
-    val exact = operators.Dedup.decontaminate(corpus, bench, n = 6)
+    val exact = operators.Dedup.decontaminate(corpus,
+        operators.Dedup.Exact(bench), n = 6)
       .select($"doc_id").as[Long].collect().sorted
-    val big = operators.Dedup.decontaminateBloom(corpus, bench, n = 6,
-        numBits = 1 << 23)
+    val big = operators.Dedup.decontaminate(corpus,
+        operators.Dedup.Bloomed(bench, numBits = 1 << 23), n = 6)
       .select($"doc_id").as[Long].collect().sorted
     assert(big.toSeq === exact.toSeq)
   }

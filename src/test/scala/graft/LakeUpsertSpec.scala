@@ -429,6 +429,9 @@ class LakeUpsertSpec extends SparkSpec {
       override def onFailure(f: String, qe: QueryExecution,
           e: Exception): Unit = ()
     }
+    // an earlier write's callback (the test's seed) may still be queued
+    // on the same bus: drain it first, or it lands in `plans` too
+    jobsOf(())
     spark.listenerManager.register(listener)
     // jobsOf's sentinel drains the listener queue the callbacks ride on
     try jobsOf(body) finally spark.listenerManager.unregister(listener)

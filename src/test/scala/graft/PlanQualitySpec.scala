@@ -1,7 +1,9 @@
 package graft
 
+import org.apache.spark.sql.execution.FilterExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.window.WindowExec
-import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec, CartesianProductExec}
+import org.apache.spark.sql.execution.joins.{BaseJoinExec, BroadcastNestedLoopJoinExec, CartesianProductExec}
 
 /** Global plan-quality gate over EVERY driver-contract query: the
   * physical plan must contain
@@ -60,6 +62,30 @@ class PlanQualitySpec extends SparkSpec {
     val reused = plan.linesIterator.count(l =>
       l.contains("ReusedQueryStage") || l.contains("ReusedExchange"))
     assert(reused >= 1, s"no reused stage in final q28 plan:\n$plan")
+  }
+
+  test("decontamination probes: q68 verifies gram hashes with no Bloom " +
+      "filter; q86/q116/q121 Bloom-prune under the gram_h verify join") {
+    object Plans extends AdaptiveSparkPlanHelper
+    spark.catalog.clearCache()
+    // the probe filter tests the key's second hash, xxhash64(gram_h)
+    def bloomProbed(q: String): Boolean = {
+      val df = SparkEntry.queries(q)(spark, sf)
+      df.collect() // finalize the adaptive plan
+      val verify = Plans.collect(df.queryExecution.executedPlan) {
+        case j: BaseJoinExec
+            if j.leftKeys.exists(_.references.exists(_.name == "gram_h")) => j
+      }
+      assert(verify.nonEmpty, s"$q: no gram_h verify join")
+      verify.exists(j => Plans.find(j) {
+        case f: FilterExec => f.condition.toString.contains("xxhash64(gram_h")
+        case _ => false
+      }.isDefined)
+    }
+    assert(!bloomProbed("q68_decontaminate"), "q68 is the exact hash join")
+    for (q <- Seq("q86_bloom_decontaminate", "q116_contamination_frac",
+        "q121_sketch_artifact_decontaminate"))
+      assert(bloomProbed(q), s"$q: no Bloom probe under the verify join")
   }
 
   test("q79 divergence computes its four aggregates over ONE corpus shuffle (exchange reuse)") {

@@ -176,7 +176,8 @@ class PropertySpec extends SparkSpec {
         .toDF("doc_id", "text")
       val bench = Seq((100L, (0 until 10).map(t => s"b$t").mkString(" ")))
         .toDF("doc_id", "text")
-      assert(graft.operators.Dedup.decontaminate(corpus, bench, n).count() === 8L)
+      assert(graft.operators.Dedup.decontaminate(corpus,
+        graft.operators.Dedup.Exact(bench), n).count() === 8L)
     }
   }
 

@@ -32,14 +32,36 @@ class SketchStoreSpec extends SparkSpec {
     // the same survivors as the build-everything-fresh path
     val gramsPath = tmp("grams")
     grams.write.parquet(s"$gramsPath/grams")
-    val oneShot = Dedup.decontaminateBloom(corpus, bench, n = 4,
-        numBits = 1 << 10)
+    val oneShot = Dedup.decontaminate(corpus,
+        Dedup.Bloomed(bench, numBits = 1 << 10), n = 4)
       .select($"doc_id").as[Long].collect().toSet
-    val reused = Dedup.decontaminateBloomPrebuilt(corpus,
-        spark.read.parquet(s"$gramsPath/grams"), loaded, n = 4)
+    val reused = Dedup.decontaminate(corpus,
+        Dedup.Prebuilt(spark.read.parquet(s"$gramsPath/grams"), loaded), n = 4)
       .select($"doc_id").as[Long].collect().toSet
     assert(reused === oneShot, s"reused=$reused oneShot=$oneShot")
     assert(reused === Set(2L, 4L)) // both contaminated twins dropped
+  }
+
+  test("a persisted gram table probed at another gram width fails fast " +
+      "instead of letting every contaminated doc through") {
+    // 5-gram artifact, 4-gram probe: no 4-gram hash can equal a 5-gram
+    // hash, so an unchecked probe matches nothing and returns the
+    // whole corpus, contaminated twins included
+    val grams = Dedup.benchmarkGrams(bench, n = 5)
+    val filter = Bloom.buildWords(grams, "gram_h", numBits = 1 << 10)
+    val gramsPath = tmp("grams5")
+    grams.write.parquet(s"$gramsPath/grams")
+    val loaded = spark.read.parquet(s"$gramsPath/grams")
+    val e = intercept[IllegalArgumentException] {
+      Dedup.decontaminate(corpus, Dedup.Prebuilt(loaded, filter), n = 4)
+        .collect()
+    }
+    assert(e.getMessage.contains("shingleSize=5"), e.getMessage)
+    // the matching width still drops both twins
+    val kept = Dedup.decontaminate(corpus, Dedup.Prebuilt(loaded, filter),
+        n = 5)
+      .select($"doc_id").as[Long].collect().toSet
+    assert(kept === Set(2L, 4L))
   }
 
   test("CMS artifact round-trip: heavyHittersWith a loaded sketch ≡ " +

@@ -231,7 +231,7 @@ class StreamingSpec extends SparkSpec {
       assert(pairs.contains((3L, 4L))) // both vs each other (same batch)
       assert(!pairs.keys.exists(p => p._1 == 2L || p._2 == 2L))
       // the drained set matches the batch pipeline on the same corpus
-      val batch = graft.operators.Dedup.simHashDupPairsPortable(
+      val batch = graft.operators.Dedup.simHashDupPairs(
         Seq((1L, base),
           (2L, "completely different words about catalyst optimizer plans"),
           (3L, base + " extra"), (4L, base)).toDF("doc_id", "text"),
@@ -341,7 +341,7 @@ class StreamingSpec extends SparkSpec {
           "(3,4) must be the only missing pair")
       // the miss is exactly batch-minus-drained: the batch twin finds
       // all 6 pairs of the 4-clique
-      val batch = graft.operators.Dedup.simHashDupPairsPortable(
+      val batch = graft.operators.Dedup.simHashDupPairs(
         (1L to 4L).map((_, base)).toDF("doc_id", "text"), maxHamming = 12)
         .select($"id_a", $"id_b").as[(Long, Long)].collect().toSet
       assert(batch -- pairs === Set((3L, 4L)))

@@ -1,7 +1,7 @@
 package graft
 
 import graft.functions.TextFunctions
-import graft.operators.{Dedup, HotBuckets, Similarity}
+import graft.operators.{Dedup, HotBuckets, Hydration, Similarity}
 import graft.sources.Multimodal
 import org.apache.spark.sql.functions._
 
@@ -252,13 +252,15 @@ class DedupSpec extends SparkSpec {
       (13L, "a genuinely new document with its own entirely distinct vocabulary and content here today"), // exact dup of 12 → dropped (within-batch)
       (14L, "another brand new subject matter entirely unrelated to anything else in either corpus half")
     ).toDF("doc_id", "text")
-    val kept = Dedup.dedupIncremental(fresh, corpus, jaccardThreshold = 0.5)
+    val kept = Dedup.dedupIncrementalIndexed(fresh,
+        Hydration.persist(Dedup.buildCorpusIndex(corpus)), jaccardThreshold = 0.5)
       .select($"doc_id").as[Long].collect().sorted.toSeq
     assert(kept === Seq(12L, 14L))
     // idempotence: adding the kept rows to the corpus and re-ingesting
     // the same batch yields nothing new
     val corpus2 = corpus.unionByName(fresh.filter($"doc_id".isin(12L, 14L)))
-    val again = Dedup.dedupIncremental(fresh, corpus2, jaccardThreshold = 0.5)
+    val again = Dedup.dedupIncrementalIndexed(fresh,
+      Hydration.persist(Dedup.buildCorpusIndex(corpus2)), jaccardThreshold = 0.5)
     assert(again.isEmpty)
   }
 
@@ -273,7 +275,8 @@ class DedupSpec extends SparkSpec {
     ).toDF("doc_id", "text")
     def runAll() = (
       Dedup.minHashDupPairs(docs, 0.5).collect().map(_.toString).sorted.toSeq,
-      Dedup.dedupIncremental(fresh, corpus, jaccardThreshold = 0.5)
+      Dedup.dedupIncrementalIndexed(fresh,
+          Hydration.persist(Dedup.buildCorpusIndex(corpus)), jaccardThreshold = 0.5)
         .collect().map(_.toString).sorted.toSeq,
       Similarity.sparseCosineTopK(
         Similarity.sparseTfVectors(docs, dim = 32), col("id") < 2, k = 3)
@@ -309,7 +312,8 @@ class DedupSpec extends SparkSpec {
       val fromTable = Dedup.dedupIncrementalIndexed(fresh,
           spark.read.parquet(dir), jaccardThreshold = 0.5)
         .collect().map(_.toString).sorted.toSeq
-      val direct = Dedup.dedupIncremental(fresh, corpus, jaccardThreshold = 0.5)
+      val direct = Dedup.dedupIncrementalIndexed(fresh,
+          Hydration.persist(Dedup.buildCorpusIndex(corpus)), jaccardThreshold = 0.5)
         .collect().map(_.toString).sorted.toSeq
       assert(fromTable === direct)
       assert(fromTable.size === 1 && fromTable.head.contains("12"))
@@ -453,7 +457,7 @@ class DedupSpec extends SparkSpec {
   }
 
   test("simhash portable (md5/48-bit): same planted-fixture behavior as the fast path") {
-    val pairs = Dedup.simHashDupPairsPortable(docs, maxHamming = 10)
+    val pairs = Dedup.simHashDupPairs(docs, maxHamming = 10)
       .as[(Long, Long, Long)].collect()
       .map(p => (p._1, p._2) -> p._3).toMap
     assert(pairs((0L, 4L)) === 0L) // identical text → identical signature
@@ -470,7 +474,8 @@ class DedupSpec extends SparkSpec {
     val sigA = 0x0123456789ABL
     val diff = Seq(5, 13, 25, 37, 44).map(1L << _).reduce(_ | _)
     val sigs = Seq((1L, sigA), (2L, sigA ^ diff)).toDF("id", "sig")
-    val found = Dedup.simHashPairsFromSigs(sigs, 48, maxHamming = 6)
+    val found = Dedup.simHashPairsFromSigWords(sigs, Seq("sig"), 48, 48,
+        maxHamming = 6)
       .as[(Long, Long, Long)].collect().toSeq
     assert(found === Seq((1L, 2L, 5L)))
   }
@@ -536,7 +541,8 @@ class DedupSpec extends SparkSpec {
     // could mask a real leak of the same magnitude — the regression
     // under test is NEW ids still registered at the end
     val before = spark.sparkContext.getPersistentRDDs.keySet
-    for (_ <- 1 to 30) Dedup.simHashPairsFromSigs(sigs, 48, 2).count()
+    for (_ <- 1 to 30)
+      Dedup.simHashPairsFromSigWords(sigs, Seq("sig"), 48, 48, 2).count()
     val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
     assert(leaked.isEmpty, s"leaked persistent RDD ids: $leaked")
   }
@@ -658,9 +664,9 @@ class DedupSpec extends SparkSpec {
     // points and engaged (pairs co-occurring only in oversized buckets
     // are traded for the star set) — a refactor that stops forwarding
     // maxBucket would make the two counts equal
-    val capped = Dedup.simHashDupPairsPortable(degen, maxHamming = 6,
+    val capped = Dedup.simHashDupPairs(degen, maxHamming = 6,
       maxBucket = 10).count()
-    val uncappedSh = Dedup.simHashDupPairsPortable(degen, maxHamming = 6)
+    val uncappedSh = Dedup.simHashDupPairs(degen, maxHamming = 6)
       .count()
     assert(capped > 0 && capped < uncappedSh)
     val cappedMh = Dedup.minHashDupPairs(degen, 0.5, maxBucket = 10).count()
@@ -894,12 +900,12 @@ class DedupSpec extends SparkSpec {
       (2L, "epsilon delta gamma beta alpha zeta theta eta ordered anew"),
       (3L, "entirely unrelated vocabulary in this training document")
     ).toDF("doc_id", "text")
-    val kept = Dedup.decontaminate(corpus, bench, n = 4)
+    val kept = Dedup.decontaminate(corpus, Dedup.Exact(bench), n = 4)
       .select($"doc_id").as[Long].collect().sorted.toSeq
     assert(kept === Seq(2L, 3L))
     // n larger than every doc: the benchmark's single all-tokens gram
     // matches only an exact token-sequence duplicate
-    val keptAll = Dedup.decontaminate(corpus, bench, n = 50)
+    val keptAll = Dedup.decontaminate(corpus, Dedup.Exact(bench), n = 50)
       .select($"doc_id").as[Long].collect().sorted.toSeq
     assert(keptAll === Seq(1L, 2L, 3L))
   }
@@ -1072,7 +1078,7 @@ class DedupSpec extends SparkSpec {
     // prune invisibility: a 64-entry filter (dense false positives)
     // yields the identical frame — false positives die in the verify
     val tiny = Dedup.contaminationFraction(corpus, bench, n = 4,
-        numBits = 64, numHashes = 1)
+        numBits = 64)
       .orderBy($"doc_id")
       .as[(Long, Long, Long, Double)].collect().toSeq
     assert(tiny === got)
