@@ -307,13 +307,18 @@ object ScaleBench {
         per.sum / per.size
       }
       // index artifacts are build-once (the q148/q150 row stance) and
-      // share the pipeline rows' memo keys
+      // share the pipeline rows' memo keys; the indexes themselves are
+      // built (and their features pinned) once per side, then searched
+      // at every dial point of the session below
       val (cents, books) = pqArtifacts(side, d)
       val projCents = trainedCells.getOrElseUpdate(side, {
         val proj = Similarity.randomProjection(d, dim = 64, outDim = 16)
         Similarity.kmeansCentroids(
           proj, nCells = 16, iters = 2, dim = 16, vecCol = "proj")
       })
+      val raw = AnnIndex.build(d, dim = 64)
+      val projected = AnnIndex.build(d, dim = 64, outDim = 16)
+      Seq(raw, projected).foreach(_.features.count())
       // (name, reports monotonicity, (nProbe, pool) => top-10): q150's
       // IVF-PQ, q148's trained projected-IVF, and FULL-WIDTH routing
       // (r18 verdict task #2) — the same projected scan + pool + exact
@@ -321,15 +326,11 @@ object ScaleBench {
       // (the raw-space kmeans codebook the IVF-PQ rows already train),
       // which isolates how much of the projected variant's recall gap
       // is ROUTING error vs pool displacement
-      val indexes: Seq[(String, Boolean, (Int, Int) => DataFrame)] = Seq(
-        ("ann_recall_ivf_pq", true, (nProbe, pool) => Similarity
-          .ivfPqTopK(queries, d, 10, 64, cents, books, nProbe, pool)),
-        ("ann_recall_projected_ivf", true, (nProbe, pool) => Similarity
-          .projectedIvfTopK(queries, d, 10, dim = 64, outDim = 16,
-            nCells = 16, nProbe, pool, centroids = Some(projCents))),
-        ("ann_recall_projected_ivf_fullroute", false, (nProbe, pool) =>
-          Similarity.projectedIvfTopK(queries, d, 10, dim = 64,
-            outDim = 16, nCells = 16, nProbe, pool, centroids = Some(cents))))
+      val indexes: Seq[(String, Boolean, AnnIndex)] = Seq(
+        ("ann_recall_ivf_pq", true, raw.withCells(cents).withCodes(books)),
+        ("ann_recall_projected_ivf", true, projected.withCells(projCents)),
+        ("ann_recall_projected_ivf_fullroute", false,
+          projected.withCells(cents)))
       // the ladder (nProbe 1/4/8 at pool 100), then a pool-scaling
       // diagnostic at the widest probe: the r17 lesson says scale
       // `pool` with nProbe — this point separates the two ways a fixed
@@ -342,10 +343,9 @@ object ScaleBench {
       val prev = scala.collection.mutable.Map.empty[String, Double]
         .withDefaultValue(0.0)
       for ((nProbe, pool) <- Seq((1, 100), (4, 100), (8, 100), (8, 400));
-           (nm, monotone, run) <- indexes) {
+           (nm, monotone, index) <- indexes) {
         var r = 0.0
-        val t = time { r = recallOf(run(nProbe, pool)) }
-        spark.catalog.clearCache()
+        val t = time { r = recallOf(index.search(queries, 10, nProbe, pool)) }
         // monotonicity is REPORTED, not require-d (r17 ADVICE): a
         // fixed re-rank pool can genuinely lose recall as nProbe
         // grows on duplicated corpora (probe displacement — measured
@@ -360,6 +360,7 @@ object ScaleBench {
         } else ""
         println(f"""{"pipeline":"$nm","side":"$side","n_probe":$nProbe,"pool":$pool,"recall_at_10":$r%.3f$flag,"sec":$t%.2f}""")
       }
+      spark.catalog.clearCache()
     }
 
     // 7 id-salted tokens per doc: shingle sets are disjoint across ids,
@@ -622,8 +623,8 @@ object ScaleBench {
       ratio("pq_ann_pool100", onEmbeddings) { d =>
         val books = Similarity
           .pqCodebooks(d, 64, 8, 16, iters = 1)
-        Similarity.pqTopK(
-          d.filter($"vec_id" < 3), d, 10, 64, books, pool = 100).count()
+        AnnIndex.build(d, dim = 64).withCodes(books)
+          .search(d.filter($"vec_id" < 3), 10, pool = 100).count()
       },
       // q120: one posexplode scan to (label, dim) sums; the pair join
       // runs on the labels×dims aggregate — ratio tracks the scan
@@ -749,16 +750,19 @@ object ScaleBench {
       // width — compare the two rows' xN_sec for the payoff
       ratio("brute_ann", onEmbeddings)(d => Similarity.bruteForceTopK(
         d.filter(col("vec_id") % 37L === 0L), d, k = 8).count()),
-      ratio("projected_ann", onEmbeddings)(d => Similarity.projectedTopK(
-        d.filter(col("vec_id") % 37L === 0L), d, k = 8, dim = 64,
-        outDim = 16, pool = 200).count()),
+      ratio("projected_ann", onEmbeddings)(d => AnnIndex
+        .build(d, dim = 64, outDim = 16)
+        .search(d.filter(col("vec_id") % 37L === 0L), k = 8, pool = 200)
+        .count()),
       // q141 vs q135 at the same corpus/queries: the cell stage cuts
       // the candidate count by ~nCells/nProbe (16/4 here) ON TOP of
       // the projection's narrower dots — compare the three ANN rows'
       // xN_sec for the composed payoff (brute → projected → +IVF)
-      ratio("projected_ivf_ann", onEmbeddings)(d => Similarity.projectedIvfTopK(
-        d.filter(col("vec_id") % 37L === 0L), d, k = 8, dim = 64,
-        outDim = 16, nCells = 16, nProbe = 4, pool = 200).count()),
+      ratio("projected_ivf_ann", onEmbeddings)(d => AnnIndex
+        .build(d, dim = 64, outDim = 16)
+        .withCells(Similarity.hashCentroids(16, 16))
+        .search(d.filter(col("vec_id") % 37L === 0L), k = 8, nProbe = 4,
+          pool = 200).count()),
       // q148's trained variant at the SAME dials as projected_ivf_ann
       // (nProbe 4/16): the row isolates what Lloyd-trained cells buy
       // over the seeded hash stand-ins. Training is BUILD-ONCE (the
@@ -786,10 +790,9 @@ object ScaleBench {
             println(f"""{"pipeline":"projected_ivf_trained_cells","rows":${d.count()},"trained_max_cell_frac":${maxFrac(trained)}%.3f,"hash_max_cell_frac":${maxFrac(Similarity.hashCentroids(16, 16))}%.3f}""")
             trained
           })
-        Similarity.projectedIvfTopK(
-          d.filter(col("vec_id") % 37L === 0L), d, k = 8, dim = 64,
-          outDim = 16, nCells = 16, nProbe = 4, pool = 200,
-          centroids = Some(cents)).count()
+        AnnIndex.build(d, dim = 64, outDim = 16).withCells(cents)
+          .search(d.filter(col("vec_id") % 37L === 0L), k = 8, nProbe = 4,
+            pool = 200).count()
       },
       // q150's composition at REALISTIC dials (the projected_ivf rows'
       // nProbe 4/16, pool 200): trained coarse cells prune to ~1/4 of
@@ -798,15 +801,16 @@ object ScaleBench {
       // projected_ivf_trained's 16-double projections scored by a
       // 16-wide dot. Train (cells + codebooks, one artifact pair) is
       // BUILD-ONCE (memoized per side — the q148 stance); the timed
-      // search still quantizes the corpus per invocation (the
-      // operator's inline index build). Read the three-way ladder:
+      // pass still builds the index and quantizes the corpus (codes
+      // are computed over the pinned features at search time). Read
+      // the three-way ladder:
       // pq_ann_pool100 (codes, no cells) → projected_ivf_trained
       // (cells, no codes) → this row (both).
       ratio("ivf_pq_ann", onEmbeddings) { d =>
         val (cents, books) = pqArtifacts(sideLabel, d)
-        Similarity.ivfPqTopK(
-          d.filter(col("vec_id") % 37L === 0L), d, k = 8, dim = 64,
-          cents, books, nProbe = 4, pool = 200).count()
+        AnnIndex.build(d, dim = 64).withCells(cents).withCodes(books)
+          .search(d.filter(col("vec_id") % 37L === 0L), k = 8, nProbe = 4,
+            pool = 200).count()
       },
       // not a ratio row, but it reads the embeddings tables
       Row("ann_recall", "pipelines", _ =>

@@ -15,14 +15,15 @@ import org.apache.spark.sql.DataFrame
   * ran, when the block returns OR throws — pins made by lazy operators
   * called inside it included. Eager operators (those that materialize
   * their result before returning: [[Graph.pageRankInt]],
-  * [[Dedup.connectedComponents]], [[Dedup.ingestBatch]], the ANN
-  * searches and trainers in [[Similarity]], ...) wrap their body in
-  * it, so no pin outlives the call on any exit path. A nested scope
-  * releases only its own pins. A pin made outside any scope — a lazy
-  * operator called from plain caller code — stays registered: the
-  * frame it returns still reads it, so it is left to the session's LRU
-  * or the caller's `spark.catalog.clearCache()` (Bench and Verify run
-  * it after every query). The open scopes are per THREAD: a streaming
+  * [[Dedup.connectedComponents]], [[Dedup.ingestBatch]], the
+  * [[AnnIndex]] searches and the trainers in [[Similarity]], ...) wrap
+  * their body in it, so no pin outlives the call on any exit path. A
+  * nested scope releases only its own pins. A pin made outside any
+  * scope — a lazy operator or an [[AnnIndex]] build called from plain
+  * caller code — stays registered: the frame it returns still reads
+  * it, so it is left to the session's LRU or the caller's
+  * `spark.catalog.clearCache()` (Bench and Verify run it after every
+  * query). The open scopes are per THREAD: a streaming
   * query's execution thread started inside a block does not inherit
   * it.
   *

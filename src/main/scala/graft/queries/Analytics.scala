@@ -246,7 +246,8 @@ object Analytics {
        |LIMIT 25""".stripMargin
   }
 
-  /** Product-quantization ANN (q94): corpus compressed to 8 one-byte
+  /** Product-quantization ANN (q94, a PQ-coded
+    * [[graft.operators.AnnIndex]]): corpus compressed to 8 one-byte
     * codes per vector (32× the 64-dim float payload), candidates from
     * the ADC table-lookup scan through the bounded top-pool kernel,
     * exact cosine re-rank on the raw vectors. Run at pool = corpus the
@@ -262,9 +263,8 @@ object Analytics {
     // cannot change the full-pool result the oracle gates
     val books = graft.operators.Similarity
       .pqCodebooks(emb, dim = 64, m = 8, nCent = 16, iters = 1)
-    graft.operators.Similarity.pqTopK(
-        emb.filter($"vec_id" < 5), emb, k = 10, dim = 64, books,
-        pool = emb.count().toInt)
+    graft.operators.AnnIndex.build(emb, dim = 64).withCodes(books)
+      .search(emb.filter($"vec_id" < 5), k = 10, pool = emb.count().toInt)
       .orderBy($"q_id", $"rank")
   }
 
@@ -295,8 +295,8 @@ object Analytics {
     * index pieces that each shipped alone — q65's trained coarse
     * cells ([[graft.operators.Similarity.kmeansCentroids]]), q94's PQ
     * codes + ADC scoring ([[graft.operators.Similarity.pqCodebooks]]),
-    * and the shared exact re-rank tail — via
-    * [[graft.operators.Similarity.ivfPqTopK]]: trained cells prune
+    * and the shared exact re-rank tail — in one
+    * [[graft.operators.AnnIndex]]: trained cells prune
     * the candidate rows, PQ codes score the survivors by table
     * lookup, exact cosine re-ranks the pool. Gated at FULL probe +
     * pool = corpus, where BOTH the cell partition and the code
@@ -313,14 +313,15 @@ object Analytics {
     // one Lloyd step each from the deterministic distinct-vector
     // seeds (the q94/q148 convention: the train+search composition IS
     // the query; more iterations sharpen candidate quality but cannot
-    // change the full-probe/full-pool result the oracle gates)
-    val cents = graft.operators.Similarity.kmeansCentroids(
-      emb, nCells = 16, iters = 1, dim = 64)
-    val books = graft.operators.Similarity
-      .pqCodebooks(emb, dim = 64, m = 8, nCent = 16, iters = 1)
-    graft.operators.Similarity.ivfPqTopK(
-        emb.filter($"vec_id" < 5), emb, k = 10, dim = 64,
-        cents, books, nProbe = 16, pool = emb.count().toInt)
+    // change the full-probe/full-pool result the oracle gates), both
+    // trained on the index's pinned features
+    val index = graft.operators.AnnIndex.build(emb, dim = 64)
+    val cents = graft.operators.Similarity.kmeansCentroids(index.features,
+      nCells = 16, iters = 1, dim = 64, idCol = "n_id", vecCol = "n_raw")
+    val books = graft.operators.Similarity.pqCodebooks(index.features,
+      dim = 64, m = 8, nCent = 16, iters = 1, idCol = "n_id", vecCol = "n_raw")
+    index.withCells(cents).withCodes(books)
+      .search(emb.filter($"vec_id" < 5), k = 10, pool = emb.count().toInt)
       .orderBy($"q_id", $"rank")
   }
 

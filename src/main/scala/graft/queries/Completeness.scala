@@ -361,7 +361,8 @@ object Completeness {
       .orderBy($"id_a", $"id_b")
   }
 
-  /** IVF top-k — the ANN scale path — run at FULL probe width, where
+  /** IVF top-k ([[graft.operators.AnnIndex]] with hash cells and no
+    * approximate score) — the ANN scale path — run at FULL probe width, where
     * it is provably identical to exact brute force (every cell probed;
     * the corpus is in exactly one cell each — asserted in UtilitySpec).
     * Same oracle as q24: the driver hash-checks that the partitioned
@@ -371,9 +372,9 @@ object Completeness {
   def q55IvfTopK(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val emb = Tables.embeddings(s, dir)
-    graft.operators.Similarity.ivfTopK(
-      emb.filter($"vec_id" < 10), emb, k = 5, dim = 64,
-      nCells = 16, nProbe = 16)
+    graft.operators.AnnIndex.build(emb, dim = 64)
+      .withCells(graft.operators.Similarity.hashCentroids(64, 16))
+      .search(emb.filter($"vec_id" < 10), k = 5)
       .orderBy($"q_id", $"rank")
   }
 
@@ -430,9 +431,8 @@ object Completeness {
     val emb = Tables.embeddings(s, dir)
     val centroids = graft.operators.Similarity.kmeansCentroids(
       emb, nCells = 10, iters = 3, dim = 64)
-    graft.operators.Similarity.ivfTopKTrained(
-      emb.filter($"vec_id" < 10), emb, k = 5, dim = 64,
-      centroids = centroids, nProbe = 10)
+    graft.operators.AnnIndex.build(emb, dim = 64).withCells(centroids)
+      .search(emb.filter($"vec_id" < 10), k = 5)
       .orderBy($"q_id", $"rank")
   }
 

@@ -772,7 +772,7 @@ object TrainingData {
   }
 
   /** q135: projected ANN with exact re-rank
-    * ([[graft.operators.Similarity.projectedTopK]]) — candidates from
+    * (a projected [[graft.operators.AnnIndex]]) — candidates from
     * the q134 JL space (16 of 64 dims), pool of 200 re-ranked by exact
     * cosine. The oracle replays the WHOLE pipeline (the q29 dial
     * stance): projection, pool selection (ascore desc, id ties), and
@@ -783,9 +783,8 @@ object TrainingData {
   def q135ProjectedAnn(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val emb = Tables.embeddings(s, dir)
-    graft.operators.Similarity.projectedTopK(
-        emb.filter($"vec_id" >= 5 && $"vec_id" < 15), emb,
-        k = 8, dim = 64, outDim = 16, pool = 200)
+    graft.operators.AnnIndex.build(emb, dim = 64, outDim = 16)
+      .search(emb.filter($"vec_id" >= 5 && $"vec_id" < 15), k = 8, pool = 200)
       .orderBy($"q_id", $"rank")
   }
 
@@ -832,8 +831,8 @@ object TrainingData {
       }.mkString("[\n      ", ",\n      ", "]")
 
   /** q141: projected IVF ANN
-    * ([[graft.operators.Similarity.projectedIvfTopK]]) — the 100 TB
-    * composition q134/q135 build toward: JL-project both sides (16 of
+    * (a projected [[graft.operators.AnnIndex]] with hash cells) — the
+    * 100 TB composition q134/q135 build toward: JL-project both sides (16 of
     * 64 dims), assign IVF cells IN the projected space (16 hash
     * centroids, 8-probe), rank candidates by projected dot, re-rank
     * the 200-pool by exact raw cosine. The oracle replays the WHOLE
@@ -844,10 +843,10 @@ object TrainingData {
   def q141ProjectedIvf(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val emb = Tables.embeddings(s, dir)
-    graft.operators.Similarity.projectedIvfTopK(
-        emb.filter($"vec_id" >= 15 && $"vec_id" < 25), emb,
-        k = 8, dim = 64, outDim = 16, nCells = 16, nProbe = 8,
-        pool = 200)
+    graft.operators.AnnIndex.build(emb, dim = 64, outDim = 16)
+      .withCells(graft.operators.Similarity.hashCentroids(16, 16))
+      .search(emb.filter($"vec_id" >= 15 && $"vec_id" < 25), k = 8,
+        nProbe = 8, pool = 200)
       .orderBy($"q_id", $"rank")
   }
 
@@ -899,9 +898,9 @@ object TrainingData {
   /** q148: projected IVF with TRAINED centroids — q141's composition
     * with the hash-centroid stand-ins replaced by spherical k-means
     * run IN the projected space ([[graft.operators.Similarity
-    * .kmeansCentroids]] over [[graft.operators.Similarity
-    * .randomProjection]]'s output — the training pass a real
-    * billion-vector deployment runs, since Lloyd-trained cells on
+    * .kmeansCentroids]] over the [[graft.operators.AnnIndex]]'s pinned
+    * projected features, so the corpus is projected once — the
+    * training pass a real billion-vector deployment runs, since Lloyd-trained cells on
     * clustered embeddings cut candidates harder than seeded hashes at
     * the same nProbe). Gated at FULL probe with q135's exact dials
     * (slice/k/outDim/pool), where the trained cell partition must be
@@ -916,14 +915,11 @@ object TrainingData {
   def q148ProjectedIvfTrained(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val emb = Tables.embeddings(s, dir)
-    val trained = graft.operators.Similarity.kmeansCentroids(
-      graft.operators.Similarity.randomProjection(emb, dim = 64,
-        outDim = 16),
-      nCells = 16, iters = 2, dim = 16, vecCol = "proj")
-    graft.operators.Similarity.projectedIvfTopK(
-        emb.filter($"vec_id" >= 5 && $"vec_id" < 15), emb,
-        k = 8, dim = 64, outDim = 16, nCells = 16, nProbe = 16,
-        pool = 200, centroids = Some(trained))
+    val index = graft.operators.AnnIndex.build(emb, dim = 64, outDim = 16)
+    val trained = graft.operators.Similarity.kmeansCentroids(index.features,
+      nCells = 16, iters = 2, dim = 16, idCol = "n_id", vecCol = "n_proj")
+    index.withCells(trained)
+      .search(emb.filter($"vec_id" >= 5 && $"vec_id" < 15), k = 8, pool = 200)
       .orderBy($"q_id", $"rank")
   }
 

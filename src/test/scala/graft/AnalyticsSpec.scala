@@ -187,7 +187,7 @@ class AnalyticsSpec extends SparkSpec {
 
   test("pqTopK: full pool is EXACTLY brute force; codebooks train " +
       "deterministically under repartitioning") {
-    import graft.operators.Similarity
+    import graft.operators.{AnnIndex, Similarity}
     val emb = Tables.embeddings(spark, sf)
     val n = emb.count().toInt
     val books = Similarity.pqCodebooks(emb, dim = 64, m = 8, nCent = 16,
@@ -198,7 +198,8 @@ class AnalyticsSpec extends SparkSpec {
       m = 8, nCent = 16, iters = 2)
     assert(books === books2)
     val q = emb.filter($"vec_id" < 3)
-    val pq = Similarity.pqTopK(q, emb, k = 5, dim = 64, books, pool = n)
+    val pq = AnnIndex.build(emb, dim = 64).withCodes(books)
+      .search(q, k = 5, pool = n)
       .orderBy($"q_id", $"rank")
       .as[(Long, Long, Long, Double)].collect().toSeq
     val bf = Similarity.bruteForceTopK(q, emb, k = 5)
@@ -209,32 +210,32 @@ class AnalyticsSpec extends SparkSpec {
 
   test("pqTopK: a planted duplicate vector is retrieved at rank 1 " +
       "through a SMALL candidate pool") {
-    import graft.operators.Similarity
+    import graft.operators.{AnnIndex, Similarity}
     val emb = Tables.embeddings(spark, sf)
     // plant an exact copy of vector 7 under a fresh id
     val dup = emb.filter($"vec_id" === 7)
       .withColumn("vec_id", lit(900000L))
     val corpus = emb.unionByName(dup)
     val books = Similarity.pqCodebooks(emb, 64, 8, 16, iters = 1)
-    val got = Similarity.pqTopK(emb.filter($"vec_id" === 7), corpus,
-        k = 1, dim = 64, books, pool = 16)
+    val got = AnnIndex.build(corpus, dim = 64).withCodes(books)
+      .search(emb.filter($"vec_id" === 7), k = 1, pool = 16)
       .select($"n_id", $"score").as[(Long, Double)].collect()
     assert(got.toSeq === Seq((900000L, 1.0)))
   }
 
   test("pqTopK/pqCodebooks: shape guards fire") {
-    import graft.operators.Similarity
+    import graft.operators.{AnnIndex, Similarity}
     val emb = Tables.embeddings(spark, sf)
     intercept[IllegalArgumentException] {
       Similarity.pqCodebooks(emb, dim = 64, m = 7, nCent = 4, iters = 1)
     }
+    val index = AnnIndex.build(emb, dim = 64)
+      .withCodes(Seq.fill(8)(Seq.fill(4)(Seq.fill(8)(0.0))))
     intercept[IllegalArgumentException] {
-      Similarity.pqTopK(emb.limit(1), emb, k = 50, dim = 64,
-        Seq.fill(8)(Seq.fill(4)(Seq.fill(8)(0.0))), pool = 10)
+      index.search(emb.limit(1), k = 50, pool = 10)
     }
     intercept[IllegalArgumentException] {
-      Similarity.pqTopK(emb.limit(1), emb, k = 0, dim = 64,
-        Seq.fill(8)(Seq.fill(4)(Seq.fill(8)(0.0))), pool = 0)
+      index.search(emb.limit(1), k = 0, pool = 0)
     }
   }
 

@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.{Dedup, Graph, Hydration, Similarity}
+import graft.operators.{AnnIndex, Dedup, Graph, Hydration, Similarity}
 import graft.streaming.Jobs
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
@@ -80,18 +80,25 @@ class CacheLifecycleSpec extends SparkSpec {
         (i.toLong, Seq.tabulate(8)(d => math.sin(i * 1.7 + d * 0.9))))
       .toDF("vec_id", "embedding")
     val qs = vecs.filter($"vec_id" < 3)
-    assertNoPin("projectedTopK")(Similarity.projectedTopK(qs, vecs, k = 2,
-      dim = 8, outDim = 4, pool = 5).count())
-    assertNoPin("projectedIvfTopK")(Similarity.projectedIvfTopK(qs, vecs,
-      k = 2, dim = 8, outDim = 4, nCells = 3, nProbe = 2, pool = 5).count())
     val books = assertNoPin("pqCodebooks")(
       Similarity.pqCodebooks(vecs, dim = 8, m = 2, nCent = 4, iters = 2))
-    assertNoPin("pqTopK")(
-      Similarity.pqTopK(qs, vecs, k = 2, dim = 8, books, pool = 5).count())
     val cents = assertNoPin("kmeansCentroids")(
       Similarity.kmeansCentroids(vecs, nCells = 3, iters = 2, dim = 8))
-    assertNoPin("ivfPqTopK")(Similarity.ivfPqTopK(qs, vecs, k = 2, dim = 8,
-      cents, books, nProbe = 2, pool = 5).count())
+    // an index pins its features once, at build; each search releases
+    // its own pins, and the caller's scope releases the index's
+    assertNoPin("AnnIndex build + search")(Hydration.scoped {
+      val raw = AnnIndex.build(vecs, dim = 8)
+      val projected = AnnIndex.build(vecs, dim = 8, outDim = 4)
+      val built = cached
+      val trained = Similarity.kmeansCentroids(projected.features,
+        nCells = 3, iters = 2, dim = 4, idCol = "n_id", vecCol = "n_proj")
+      for (index <- Seq(raw.withCells(cents), projected,
+          projected.withCells(trained), raw.withCodes(books),
+          raw.withCells(cents).withCodes(books))) {
+        index.search(qs, k = 2, nProbe = 2, pool = 5).count()
+        assert(cached === built, "a search left a pin behind")
+      }
+    })
     assertNoPin("mmrSelect")(
       Similarity.mmrSelect(vecs, queryId = 0L, k = 3).count())
 

@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.Similarity
+import graft.operators.{AnnIndex, Similarity}
 import org.apache.spark.sql.functions._
 
 /** Distributed spherical k-means (the IVF codebook trainer): run-to-run
@@ -101,9 +101,8 @@ class KMeansSpec extends SparkSpec {
   test("trained IVF at full probe equals exact brute force") {
     val emb = Tables.embeddings(spark, sf)
     val centroids = Similarity.kmeansCentroids(emb, nCells = 10, iters = 3, dim = 64)
-    val trained = Similarity.ivfTopKTrained(
-        emb.filter($"vec_id" < 5), emb, k = 3, dim = 64,
-        centroids = centroids, nProbe = 10)
+    val trained = AnnIndex.build(emb, dim = 64).withCells(centroids)
+      .search(emb.filter($"vec_id" < 5), k = 3, nProbe = 10)
       .orderBy($"q_id", $"rank").collect().toSeq
     val exact = Similarity.bruteForceTopK(
         emb.filter($"vec_id" < 5), emb, k = 3)
@@ -120,9 +119,9 @@ class KMeansSpec extends SparkSpec {
     val books = Similarity.pqCodebooks(emb, dim = 64, m = 8, nCent = 8,
       iters = 1)
     val n = emb.count().toInt
-    val full = Similarity.ivfPqTopK(
-        emb.filter($"vec_id" < 5), emb, k = 3, dim = 64, cents, books,
-        nProbe = 4, pool = n)
+    val index = AnnIndex.build(emb, dim = 64)
+    val full = index.withCells(cents).withCodes(books)
+      .search(emb.filter($"vec_id" < 5), k = 3, nProbe = 4, pool = n)
       .orderBy($"q_id", $"rank").collect().toSeq
     val exact = Similarity.bruteForceTopK(
         emb.filter($"vec_id" < 5), emb, k = 3)
@@ -132,9 +131,8 @@ class KMeansSpec extends SparkSpec {
     // at these dials), and a pruned/quantized candidate stage can only
     // surface equal-or-worse exact scores at each rank — a BETTER
     // score would mean the re-rank invented a neighbor
-    val part = Similarity.ivfPqTopK(
-        emb.filter($"vec_id" < 5), emb, k = 3, dim = 64, cents, books,
-        nProbe = 2, pool = 50)
+    val part = index.withCells(cents).withCodes(books)
+      .search(emb.filter($"vec_id" < 5), k = 3, nProbe = 2, pool = 50)
       .orderBy($"q_id", $"rank").collect().toSeq
     assert(part.size === exact.size)
     val exactScore = exact.map(r =>
@@ -147,8 +145,8 @@ class KMeansSpec extends SparkSpec {
     // a projected-space (narrow) codebook must die on the geometry
     // check, not prefix-truncate into a plausible wrong assignment
     val e = intercept[IllegalArgumentException] {
-      Similarity.ivfPqTopK(emb.filter($"vec_id" < 5), emb, k = 3,
-        dim = 64, cents.map(_.take(8)), books, nProbe = 2, pool = 50)
+      index.withCells(cents.map(_.take(8))).withCodes(books)
+        .search(emb.filter($"vec_id" < 5), k = 3, nProbe = 2, pool = 50)
     }
     assert(e.getMessage.contains("RAW"), e.getMessage)
   }
@@ -161,41 +159,34 @@ class KMeansSpec extends SparkSpec {
     val cents = Similarity.kmeansCentroids(
       Similarity.randomProjection(emb, dim = 64, outDim = 8),
       nCells = 4, iters = 1, dim = 8, vecCol = "proj")
-    val ivf = Similarity.projectedIvfTopK(
-        emb.filter($"vec_id" < 5), emb, k = 3, dim = 64, outDim = 8,
-        nCells = 4, nProbe = 4, pool = 50, centroids = Some(cents))
+    val projected = AnnIndex.build(emb, dim = 64, outDim = 8)
+    val ivf = projected.withCells(cents)
+      .search(emb.filter($"vec_id" < 5), k = 3, nProbe = 4, pool = 50)
       .orderBy($"q_id", $"rank").collect().toSeq
-    val flat = Similarity.projectedTopK(
-        emb.filter($"vec_id" < 5), emb, k = 3, dim = 64, outDim = 8,
-        pool = 50)
+    val flat = projected
+      .search(emb.filter($"vec_id" < 5), k = 3, pool = 50)
       .orderBy($"q_id", $"rank").collect().toSeq
     assert(ivf === flat)
     // a RAW-space (64-dim) codebook selects FULL-WIDTH routing (r18
     // verdict task #2): cells assigned on exact 64-dim center
     // distances, scan still projected. At full probe the cell
     // partition is result-invisible in EITHER routing space — same
-    // projectedTopK equivalence
+    // equivalence with the flat projected index
     val rawSpace = Similarity.kmeansCentroids(emb, nCells = 4,
       iters = 0, dim = 64)
-    val wideRouted = Similarity.projectedIvfTopK(
-        emb.filter($"vec_id" < 5), emb, k = 3, dim = 64, outDim = 8,
-        nCells = 4, nProbe = 4, pool = 50, centroids = Some(rawSpace))
+    val wideRouted = projected.withCells(rawSpace)
+      .search(emb.filter($"vec_id" < 5), k = 3, nProbe = 4, pool = 50)
       .orderBy($"q_id", $"rank").collect().toSeq
     assert(wideRouted === flat)
     // a codebook matching NEITHER space must die on the geometry
     // check, not prefix-truncate into a plausible wrong assignment
     val e = intercept[IllegalArgumentException] {
-      Similarity.projectedIvfTopK(
-        emb.filter($"vec_id" < 5), emb, k = 3, dim = 64, outDim = 8,
-        nCells = 4, nProbe = 4, pool = 50,
-        centroids = Some(rawSpace.map(_.take(12))))
+      projected.withCells(rawSpace.map(_.take(12)))
     }
     assert(e.getMessage.contains("full-width"), e.getMessage)
     intercept[IllegalArgumentException] {
-      Similarity.projectedIvfTopK(
-        emb.filter($"vec_id" < 5), emb, k = 3, dim = 64, outDim = 8,
-        nCells = 4, nProbe = 4, pool = 50,
-        centroids = Some(cents.take(3)))
+      projected.withCells(cents.take(3))
+        .search(emb.filter($"vec_id" < 5), k = 3, nProbe = 4, pool = 50)
     }
   }
 }

@@ -1,7 +1,7 @@
 package graft
 
 import graft.functions.TextFunctions
-import graft.operators.{Dedup, HotBuckets, Hydration, Similarity}
+import graft.operators.{AnnIndex, Dedup, HotBuckets, Hydration, Similarity}
 import graft.sources.Multimodal
 import org.apache.spark.sql.functions._
 
@@ -454,15 +454,6 @@ class DedupSpec extends SparkSpec {
         Seq(0L, 1L, 10L))
     } finally
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
-  }
-
-  test("simhash portable (md5/48-bit): same planted-fixture behavior as the fast path") {
-    val pairs = Dedup.simHashDupPairs(docs, maxHamming = 10)
-      .as[(Long, Long, Long)].collect()
-      .map(p => (p._1, p._2) -> p._3).toMap
-    assert(pairs((0L, 4L)) === 0L) // identical text → identical signature
-    assert(!pairs.keys.exists(p => p._1 == 3L || p._2 == 3L))
-    assert(pairs.values.forall(_ <= 10L))
   }
 
   test("simhash banding: planted hamming-5 pair straddling all four legacy chunks is FOUND") {
@@ -1226,10 +1217,11 @@ class SimilaritySpec extends SparkSpec {
     assert(!fbNodes.contains("bnl") && fbNodes.contains("cartesian"), fbNodes)
     assert(fb.collect().toSet === normal.collect().toSet)
     // IVF: the cell equi-join degrades to a shuffle hash join
-    val ivfN = Similarity.ivfTopK(vectors.filter($"vec_id" === 0L), vectors,
-      2, dim = 4, nCells = 2, nProbe = 2)
-    val ivfF = Similarity.ivfTopK(vectors.filter($"vec_id" === 0L), vectors,
-      2, dim = 4, nCells = 2, nProbe = 2, broadcastLimit = 1)
+    val ivf = AnnIndex.build(vectors, dim = 4)
+      .withCells(Similarity.hashCentroids(4, 2))
+    val ivfN = ivf.search(vectors.filter($"vec_id" === 0L), 2, nProbe = 2)
+    val ivfF = ivf.search(vectors.filter($"vec_id" === 0L), 2, nProbe = 2,
+      broadcastLimit = 1)
     assert(collectNodes(ivfN).contains("bhj"))
     val ivfNodes = collectNodes(ivfF)
     assert(!ivfNodes.contains("bhj") && ivfNodes.contains("shj"), ivfNodes)
@@ -1308,8 +1300,9 @@ class SimilaritySpec extends SparkSpec {
       Similarity.mmrSelect(emb, 2L, k = 2)
     }
     // ivf paths: the degenerate vectors never reach a rank window
-    val ivf = Similarity.ivfTopK(emb, emb, k = 1, dim = 4, nCells = 2,
-      nProbe = 2).as[(Long, Long, Long, Double)].collect().toSeq
+    val ivf = AnnIndex.build(emb, dim = 4)
+      .withCells(Similarity.hashCentroids(4, 2)).search(emb, k = 1, nProbe = 2)
+      .as[(Long, Long, Long, Double)].collect().toSeq
     assert(ivf.map(_._1).toSet === Set(0L, 1L), ivf.toString)
     assert(ivf.map(_._3).toSet.intersect(Set(2L, 3L)).isEmpty)
   }
@@ -1331,6 +1324,83 @@ class SimilaritySpec extends SparkSpec {
     assert(msgsOf(e2).contains("!= declared dim"), msgsOf(e2))
     intercept[IllegalArgumentException] {
       Similarity.hyperplaneBucket(col("embedding"), dim = 2, bits = 64)
+    }
+  }
+
+  /** Every AnnIndex configuration over an 8-dim corpus: exact (flat
+    * and celled), projected (flat, projected cells, full-width cells),
+    * PQ and IVF-PQ. */
+  private def everyIndex(corpus: org.apache.spark.sql.DataFrame) = {
+    val raw = AnnIndex.build(corpus, dim = 8)
+    val projected = AnnIndex.build(corpus, dim = 8, outDim = 4)
+    val books = Seq.fill(2)(Seq(Seq.fill(4)(0.5), Seq.fill(4)(-0.5)))
+    Seq("exact" -> raw,
+      "exact ivf" -> raw.withCells(Similarity.hashCentroids(8, 2)),
+      "projected" -> projected,
+      "projected ivf" -> projected.withCells(Similarity.hashCentroids(4, 2)),
+      "projected ivf, full-width cells" ->
+        projected.withCells(Similarity.hashCentroids(8, 2)),
+      "pq" -> raw.withCodes(books),
+      "ivf-pq" -> raw.withCells(Similarity.hashCentroids(8, 2)).withCodes(books))
+  }
+
+  test("AnnIndex: one dim contract — a wrong-dim query or corpus vector " +
+      "raises on every index configuration") {
+    def msgsOf(t: Throwable): String =
+      Iterator.iterate(t)(_.getCause).takeWhile(_ != null)
+        .map(x => Option(x.getMessage).getOrElse("")).mkString(" | ")
+    val corpus = (0L until 6L).map(i =>
+      (i, Array.tabulate(8)(d => math.sin(i * 1.3 + d).toFloat)))
+      .toDF("vec_id", "embedding")
+    val shortQuery = Seq((100L, vec(1, 2, 3, 4))).toDF("vec_id", "embedding")
+    for ((name, index) <- everyIndex(corpus)) {
+      val e = intercept[Throwable] {
+        index.search(shortQuery, k = 1, pool = 3).collect()
+      }
+      assert(msgsOf(e).contains("!= declared dim 8"), s"$name: ${msgsOf(e)}")
+    }
+    // read back from parquet: over a local relation the optimizer
+    // already folds the dim check at build, before any search
+    val dir = java.nio.file.Files.createTempDirectory("graft-ann-dim").toString
+    corpus.union(Seq((7L, vec(1, 2, 3, 4))).toDF("vec_id", "embedding"))
+      .write.mode("overwrite").parquet(dir)
+    try {
+      for ((name, index) <- everyIndex(spark.read.parquet(dir))) {
+        val e = intercept[Throwable] {
+          index.search(corpus.limit(1), k = 1, pool = 3).collect()
+        }
+        assert(msgsOf(e).contains("!= declared dim 8"), s"$name: ${msgsOf(e)}")
+      }
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+  }
+
+  test("AnnIndex: centroid count and width are checked once, for every " +
+      "configuration") {
+    val corpus = Seq((0L, vec(1, 0, 0, 0, 0, 0, 0, 0)))
+      .toDF("vec_id", "embedding")
+    val raw = AnnIndex.build(corpus, dim = 8)
+    val projected = AnnIndex.build(corpus, dim = 8, outDim = 4)
+    val books = Seq.fill(2)(Seq(Seq.fill(4)(0.5)))
+    // a 4-wide codebook at dim = 8 without a projection is a prefix
+    // truncation waiting to happen — rejected with and without codes
+    for (index <- Seq(raw, raw.withCodes(books))) {
+      val e = intercept[IllegalArgumentException] {
+        index.withCells(Similarity.hashCentroids(4, 2))
+      }
+      assert(e.getMessage.contains("dim=8"), e.getMessage)
+    }
+    // projected: outDim-wide or dim-wide, nothing else
+    projected.withCells(Similarity.hashCentroids(4, 2))
+    projected.withCells(Similarity.hashCentroids(8, 2))
+    intercept[IllegalArgumentException] {
+      projected.withCells(Similarity.hashCentroids(6, 2))
+    }
+    intercept[IllegalArgumentException] {
+      projected.withCells(Similarity.hashCentroids(4, 2) :+ Seq.fill(8)(0.0))
+    }
+    intercept[IllegalArgumentException](raw.withCells(Nil))
+    intercept[IllegalArgumentException] {
+      raw.withCodes(Seq.fill(3)(Seq(Seq.fill(4)(0.5))))
     }
   }
 
@@ -1374,14 +1444,13 @@ class SimilaritySpec extends SparkSpec {
     val planted = (99L, base(7)._2.map(x => x + 0.01f * rnd.nextGaussian().toFloat))
     val emb = (base :+ planted).toDF("vec_id", "embedding")
     val q = emb.filter(col("vec_id") === 99L)
-    val full = Similarity.projectedTopK(q, emb, k = 5, dim = 64,
-        outDim = 16, pool = 40)
+    val index = AnnIndex.build(emb, dim = 64, outDim = 16)
+    val full = index.search(q, k = 5, pool = 40)
       .as[(Long, Long, Long, Double)].collect().toSeq.sortBy(_._2)
     val brute = Similarity.bruteForceTopK(q, emb, k = 5)
       .as[(Long, Long, Long, Double)].collect().toSeq.sortBy(_._2)
     assert(full === brute, s"$full vs $brute") // pool ≥ corpus ⇒ exact
-    val small = Similarity.projectedTopK(q, emb, k = 1, dim = 64,
-        outDim = 16, pool = 5)
+    val small = index.search(q, k = 1, pool = 5)
       .as[(Long, Long, Long, Double)].collect().toSeq
     assert(small.head._3 === 7L, small.toString)
   }
@@ -1398,25 +1467,25 @@ class SimilaritySpec extends SparkSpec {
     val q = emb.filter(col("vec_id") === 99L)
     // nProbe = nCells ⇒ every corpus row is a candidate; pool ≥
     // corpus ⇒ the re-rank IS brute force (the q65 full-probe stance)
-    val full = Similarity.projectedIvfTopK(q, emb, k = 5, dim = 64,
-        outDim = 16, nCells = 8, nProbe = 8, pool = 40)
+    val index = AnnIndex.build(emb, dim = 64, outDim = 16)
+    val full = index.withCells(Similarity.hashCentroids(16, 8))
+      .search(q, k = 5, nProbe = 8, pool = 40)
       .as[(Long, Long, Long, Double)].collect().toSeq.sortBy(_._2)
     val brute = Similarity.bruteForceTopK(q, emb, k = 5)
       .as[(Long, Long, Long, Double)].collect().toSeq.sortBy(_._2)
     assert(full === brute, s"$full vs $brute")
     // realistic dials: the planted twin projects near its original,
     // so they share a cell and a 5-pool recovers it
-    val small = Similarity.projectedIvfTopK(q, emb, k = 1, dim = 64,
-        outDim = 16, nCells = 4, nProbe = 2, pool = 5)
+    val small = index.withCells(Similarity.hashCentroids(16, 4))
+      .search(q, k = 1, nProbe = 2, pool = 5)
       .as[(Long, Long, Long, Double)].collect().toSeq
     assert(small.head._3 === 7L, small.toString)
     intercept[IllegalArgumentException] {
-      Similarity.projectedIvfTopK(q, emb, k = 5, dim = 64, outDim = 16,
-        nCells = 4, nProbe = 5, pool = 40)
+      index.withCells(Similarity.hashCentroids(16, 4))
+        .search(q, k = 5, nProbe = 5, pool = 40)
     }
     intercept[IllegalArgumentException] {
-      Similarity.projectedIvfTopK(q, emb, k = 5, dim = 64, outDim = 65,
-        nCells = 4, nProbe = 2, pool = 40)
+      AnnIndex.build(emb, dim = 64, outDim = 65)
     }
   }
 

@@ -125,14 +125,14 @@ class UtilitySpec extends SparkSpec {
     val queries = emb.filter($"vec_id" < 5)
     val exact = Similarity.bruteForceTopK(queries, emb, 10)
       .select($"q_id", $"n_id").as[(Long, Long)].collect().toSet
-    val ivf = Similarity.ivfTopK(queries, emb, 10, dim = 64,
-      nCells = 8, nProbe = 4)
+    val index = graft.operators.AnnIndex.build(emb, dim = 64)
+      .withCells(Similarity.hashCentroids(64, 8))
+    val ivf = index.search(queries, 10, nProbe = 4)
       .select($"q_id", $"n_id").as[(Long, Long)].collect().toSet
     val recall = (exact & ivf).size.toDouble / exact.size
     assert(recall >= 0.3, s"recall $recall") // probing half the cells
     // full probe = exact
-    val full = Similarity.ivfTopK(queries, emb, 10, dim = 64,
-      nCells = 8, nProbe = 8)
+    val full = index.search(queries, 10, nProbe = 8)
       .select($"q_id", $"n_id").as[(Long, Long)].collect().toSet
     assert(full === exact)
   }
