@@ -160,8 +160,4 @@ object OracleMath {
 
   /** Exact decimal sum of a double column, returned as double. */
   def dsum(c: Column): Column = sum(c.cast(Dec)).cast(DoubleType)
-
-  /** Exact decimal sum of a per-row product, returned as double. */
-  def dsumProd(a: Column, b: Column): Column =
-    sum(a.cast(Dec) * b.cast(Dec)).cast(DoubleType)
 }

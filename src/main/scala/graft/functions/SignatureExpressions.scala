@@ -48,29 +48,6 @@ object SignatureKernels {
     new GenericArrayData(sig)
   }
 
-  /** SimHash-64 signature over a string array (±1 bit votes). */
-  def simHash(arr: ArrayData): Long = {
-    val votes = new Array[Int](64)
-    val n = arr.numElements()
-    var i = 0
-    while (i < n) {
-      val h = hash(arr.getUTF8String(i), 42L)
-      var b = 0
-      while (b < 64) {
-        if (((h >>> b) & 1L) == 1L) votes(b) += 1 else votes(b) -= 1
-        b += 1
-      }
-      i += 1
-    }
-    var sig = 0L
-    var b = 0
-    while (b < 64) {
-      if (votes(b) > 0) sig |= (1L << b)
-      b += 1
-    }
-    sig
-  }
-
   /** The SHARED md5→48-bit-word layout (little-endian uint64 of digest
     * bytes [part·8, part·8+8) masked to 48 bits — DuckDB's
     * `md5_number_upper/lower & (2^48-1)`). Both [[simHash48]] and the
@@ -90,15 +67,16 @@ object SignatureKernels {
     * `md5_number_upper(s) & (2^48-1)` (same construction as
     * `Sampling.portableHash48`), part 1 is `md5_number_lower(s) &
     * (2^48-1)` (byte-order identities verified against DuckDB) — then
-    * ±1 bit votes over the 48 bits. Same structure as [[simHash]],
-    * but replayable in any engine with md5 + bit ops, so the driver
-    * query using it is oracle-gated instead of rows-only. The two
+    * ±1 bit votes over the 48 bits. Replayable in any engine with md5
+    * + bit ops, so the driver query using it is oracle-gated instead
+    * of rows-only. The reference kernel of [[simHash96]]'s bit-identity
+    * spec; no expression calls it. The two
     * parts concatenate into a 96-bit portable signature whose
     * `maxHamming + 1` pigeonhole chunks stay ≥ 12 bits wide up to
     * maxHamming 7 — a single 48-bit word at maxHamming 6 left only
     * 6-7-bit chunks (64-128 buckets per band), a quadratic candidate
     * blowup at scale. */
-  def simHash48(arr: ArrayData, part: Int): Long = {
+  private[graft] def simHash48(arr: ArrayData, part: Int): Long = {
     val votes = new Array[Int](48)
     val md = java.security.MessageDigest.getInstance("MD5")
     val n = arr.numElements()
@@ -152,35 +130,6 @@ object SignatureKernels {
     var b = 0
     while (b < 96) {
       if (votes(b) > 0) words(b / 48) |= (1L << (b % 48))
-      b += 1
-    }
-    new GenericArrayData(words)
-  }
-
-  /** 128-bit SimHash via xxhash64 double-hashing — the production fast
-    * path's wide twin: word 0 votes on h = xxh64(s, 42) (bit-identical
-    * to [[simHash]]), word 1 on xxh64_long(h, 1). At maxHamming 6 the
-    * 7 pigeonhole chunks are 18-19 bits wide (256k+ buckets per band)
-    * where a single 64-bit word left 9-10 bits. Returns [w0, w1]. */
-  def simHash128(arr: ArrayData): ArrayData = {
-    val votes = new Array[Int](128)
-    val n = arr.numElements()
-    var i = 0
-    while (i < n) {
-      val h = hash(arr.getUTF8String(i), 42L)
-      val h2 = XXH64.hashLong(h, 1L)
-      var b = 0
-      while (b < 64) {
-        if (((h >>> b) & 1L) == 1L) votes(b) += 1 else votes(b) -= 1
-        if (((h2 >>> b) & 1L) == 1L) votes(b + 64) += 1 else votes(b + 64) -= 1
-        b += 1
-      }
-      i += 1
-    }
-    val words = new Array[Long](2)
-    var b = 0
-    while (b < 128) {
-      if (votes(b) > 0) words(b >>> 6) |= (1L << (b & 63))
       b += 1
     }
     new GenericArrayData(words)
@@ -249,37 +198,6 @@ case class MinHashSig(child: Expression, k: Int) extends UnaryExpression {
     copy(child = newChild)
 }
 
-case class SimHash64(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = LongType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "simhash64"
-  override def nullSafeEval(input: Any): Any =
-    SignatureKernels.simHash(input.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.SignatureKernels$$.MODULE$$.simHash($c);")
-  override protected def withNewChildInternal(newChild: Expression): SimHash64 =
-    copy(child = newChild)
-}
-
-case class SimHash48Portable(child: Expression, part: Int = 0)
-    extends UnaryExpression {
-  // fail fast at expression BUILD: an out-of-range part would read
-  // past the 16-byte md5 digest as a per-row execution-time error
-  require(part == 0 || part == 1,
-    s"simhash48_portable part must be 0 (md5 upper) or 1 (lower), got $part")
-  override def dataType: DataType = LongType
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "simhash48_portable"
-  override def nullSafeEval(input: Any): Any =
-    SignatureKernels.simHash48(input.asInstanceOf[ArrayData], part)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.SignatureKernels$$.MODULE$$.simHash48($c, $part);")
-  override protected def withNewChildInternal(newChild: Expression): SimHash48Portable =
-    copy(child = newChild)
-}
-
 case class SimHash96Portable(child: Expression) extends UnaryExpression {
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
   override def nullIntolerant: Boolean = true
@@ -290,19 +208,6 @@ case class SimHash96Portable(child: Expression) extends UnaryExpression {
     nullSafeCodeGen(ctx, ev, c =>
       s"${ev.value} = graft.functions.SignatureKernels$$.MODULE$$.simHash96($c);")
   override protected def withNewChildInternal(newChild: Expression): SimHash96Portable =
-    copy(child = newChild)
-}
-
-case class SimHash128(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-  override def prettyName: String = "simhash128"
-  override def nullSafeEval(input: Any): Any =
-    SignatureKernels.simHash128(input.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.SignatureKernels$$.MODULE$$.simHash128($c);")
-  override protected def withNewChildInternal(newChild: Expression): SimHash128 =
     copy(child = newChild)
 }
 
@@ -341,12 +246,6 @@ object SignatureExpressions {
   import org.apache.spark.sql.GraftShims
   def minHashSig(shingles: Column, k: Int): Column =
     GraftShims.column(MinHashSig(GraftShims.expression(shingles), k))
-  def simHash64(shingles: Column): Column =
-    GraftShims.column(SimHash64(GraftShims.expression(shingles)))
-  def simHash128(shingles: Column): Column =
-    GraftShims.column(SimHash128(GraftShims.expression(shingles)))
-  def simHash48Portable(shingles: Column, part: Int = 0): Column =
-    GraftShims.column(SimHash48Portable(GraftShims.expression(shingles), part))
   def simHash96Portable(shingles: Column): Column =
     GraftShims.column(SimHash96Portable(GraftShims.expression(shingles)))
   def jaccardSim(a: Column, b: Column): Column =

@@ -95,20 +95,6 @@ object SqlRegistry {
         "shingle array",
       (args: Seq[Expression]) =>
         MinHashSig(args(0), intLit(args(1), "minhash_sig", 1))),
-    ("simhash64",
-      "simhash64(shingles) - 64-bit SimHash of a shingle array " +
-        "(xxhash64 domain)",
-      (args: Seq[Expression]) => SimHash64(args(0))),
-    ("simhash128",
-      "simhash128(shingles) - 128-bit SimHash as two 64-bit words " +
-        "(the fast wide-banding signature)",
-      (args: Seq[Expression]) => SimHash128(args(0))),
-    ("simhash48_portable",
-      "simhash48_portable(shingles[, part]) - 48-bit md5-domain SimHash " +
-        "word (DuckDB-replayable); part selects the digest half",
-      (args: Seq[Expression]) => SimHash48Portable(args(0),
-        if (args.length > 1) intLit(args(1), "simhash48_portable", 1)
-        else 0)),
     ("simhash96_portable",
       "simhash96_portable(shingles) - fused 96-bit portable SimHash " +
         "(both 48-bit words from ONE md5 digest per shingle)",

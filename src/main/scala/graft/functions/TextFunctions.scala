@@ -14,12 +14,6 @@ object TextFunctions {
   /** Whitespace tokenizer (trimmed, so no empty boundary tokens). */
   def tokens(text: Column): Column = split(trim(text), "\\s+")
 
-  /** BPE-ish subword-boundary tokenizer: splits on whitespace AND
-    * letter/digit/punct boundaries — a cheap proxy for byte-pair token
-    * counts (the real tokenizer is model-specific). */
-  def bpeishTokens(text: Column): Column =
-    split(trim(regexp_replace(text, "([a-zA-Z]+|[0-9]+|[^a-zA-Z0-9\\s]+)", "$1 ")), "\\s+")
-
   def tokenCount(text: Column): Column = size(tokens(text))
 
   /** Count of tokens belonging to a fixed (small) vocabulary. */
@@ -81,21 +75,13 @@ object TextFunctions {
   def fingerprint(text: Column): Column =
     md5(regexp_replace(lower(text), "[^a-z0-9]", ""))
 
-  /** 64-bit rolling document hash over tokens (rotate-XOR — pure
-    * bitwise ops, so no ANSI overflow, and still order-sensitive like
-    * a polynomial hash). Streaming-friendly: computable incrementally.
-    * Uses aggregate() so it stays a single codegen'd expression. */
-  def rollingHash(text: Column): Column =
-    aggregate(tokens(text), lit(1125899906842597L),
-      (acc, t) => shiftleft(acc, 5).bitwiseOR(shiftrightunsigned(acc, 59))
-        .bitwiseXOR(xxhash64(t)))
-
-  /** [[rollingHash]] variant in a 48-bit domain with md5-derived token
-    * hashes — same rotate-XOR structure, but reproducible outside
-    * Spark (any engine with md5 + bit ops), so the driver query can be
-    * oracle-gated (the q47 `hashSplitPortable` play). Values stay
-    * positive and < 2^48, sidestepping cross-engine signed-shift
-    * differences. */
+  /** Rolling document hash over tokens in a 48-bit domain with
+    * md5-derived token hashes: rotate-XOR (pure bitwise ops, so no ANSI
+    * overflow, and still order-sensitive like a polynomial hash),
+    * computable incrementally. Reproducible outside Spark (any engine
+    * with md5 + bit ops), so the driver query can be oracle-gated (the
+    * q47 `hashSplitPortable` play). Values stay positive and < 2^48,
+    * sidestepping cross-engine signed-shift differences. */
   def rollingHashPortable(text: Column): Column = {
     val mask = lit(281474976710655L) // 2^48 - 1
     aggregate(tokens(text), lit(281474976710597L),

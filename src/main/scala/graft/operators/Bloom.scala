@@ -38,7 +38,6 @@ object Bloom {
     * contract cannot tolerate, so the API makes it unrepresentable. */
   final case class Filter(words: Array[Long], numHashes: Int) {
     def numBits: Int = words.length * 64
-    def sizeBytes: Int = words.length * 8
   }
 
   /** The probe positions as Columns — shared with the per-file index

@@ -52,7 +52,6 @@ object CountMin {
   final case class Sketch(words: Array[Long], depth: Int, width: Int) {
     require(words.length == depth * width,
       s"sketch grid ${words.length} != depth $depth × width $width")
-    def sizeBytes: Int = words.length * 8
   }
 
   private def bucket(h1: Column, i: Int, width: Int): Column =

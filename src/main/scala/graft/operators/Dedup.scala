@@ -381,7 +381,7 @@ object Dedup {
     * shingles — [[simHashDupPairs]]' signature, and the one
     * [[graft.streaming.NearDup]] signs its stream with. The fused
     * kernel digests each shingle ONCE for both words — two
-    * SimHash48Portable calls would run the md5 loop twice per doc. */
+    * per-part 48-bit kernels would run the md5 loop twice per doc. */
   private[graft] def simHashSigs(docs: DataFrame, idCol: String,
       textCol: String, shingleSize: Int): DataFrame =
     shingled(docs, idCol, textCol, shingleSize)
@@ -701,28 +701,6 @@ object Dedup {
       .filter(col("jaccard") >= jaccardThreshold)
       .select(col("new_id").as(idCol)).distinct()
     afterExact.join(dupNewIds, Seq(idCol), "left_anti")
-  }
-
-  /** Append a batch's ACCEPTED survivors to an existing corpus index —
-    * the growth step of the multi-batch ingestion lifecycle
-    * ([[buildCorpusIndex]] once → per batch: [[dedupIncrementalIndexed]]
-    * then this). Only the `accepted` docs are shingled (O(batch));
-    * the index side passes through untouched, so across N ingestions
-    * the corpus is shingled exactly once — at its own ingestion.
-    *
-    * `shingleSize` must match the index's [[ShingleSizeMetaKey]] stamp
-    * (same fail-fast contract as [[dedupIncrementalIndexed]]: a
-    * mismatched append would poison the index with grams no future
-    * batch can match). The returned frame carries the stamp, so a
-    * union-then-rewrite lifecycle keeps the check alive; for an
-    * ON-DISK index prefer [[ingestBatch]], which appends only the new
-    * rows and never rewrites the corpus's files. */
-  def appendCorpusIndex(corpusIndex: DataFrame, accepted: DataFrame,
-      shingleSize: Int = 3, idCol: String = "doc_id",
-      textCol: String = "text"): DataFrame = {
-    requireShingleStamp(corpusIndex, "sh", shingleSize, "corpus index")
-    corpusIndex.unionByName(
-      buildCorpusIndex(accepted, shingleSize, idCol, textCol))
   }
 
   /** One complete ingestion step against a PERSISTED parquet corpus

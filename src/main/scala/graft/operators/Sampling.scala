@@ -13,15 +13,6 @@ import org.apache.spark.sql.functions._
   */
 object Sampling {
 
-  /** Deterministic percentage split: bucket = xxhash64(id, salt) mod
-    * 100. `train` = buckets [0, trainPct). Stable across partitioning,
-    * retries, and runs. */
-  def hashSplit(df: DataFrame, idCol: String, trainPct: Int,
-      salt: Int = 0): (DataFrame, DataFrame) = {
-    val bucket = pmod(xxhash64(col(idCol), lit(salt)), lit(100))
-    (df.filter(bucket < trainPct), df.filter(bucket >= trainPct))
-  }
-
   /** Cross-engine deterministic bucket in [0, n): the low 48 bits of
     * the little-endian uint64 of the first 8 md5 digest bytes, mod n.
     * Chosen because DuckDB exposes exactly this value as
@@ -68,20 +59,13 @@ object Sampling {
   def portableBucketSql(expr: String, n: Int): String =
     s"${portableHash48Sql(s"CAST($expr AS VARCHAR)")} % $n"
 
-  /** [[hashSplit]] variant gated on [[portableBucket]] — slower than
-    * xxhash64 but reproducible outside Spark (any engine with md5). */
+  /** Deterministic percentage split: `train` = [[portableBucket]]
+    * buckets [0, trainPct) of 100. Stable across partitioning, retries
+    * and runs, and reproducible outside Spark (any engine with md5). */
   def hashSplitPortable(df: DataFrame, idCol: String,
       trainPct: Int): (DataFrame, DataFrame) = {
     val bucket = portableBucket(col(idCol), 100)
     (df.filter(bucket < trainPct), df.filter(bucket >= trainPct))
-  }
-
-  /** Deterministic per-class downsampling to ~`fraction` of each
-    * stratum (hash-gated, not rand-gated). */
-  def stratifiedSample(df: DataFrame, idCol: String, classCol: String,
-      fraction: Double, salt: Int = 1): DataFrame = {
-    val gate = pmod(xxhash64(col(idCol), col(classCol), lit(salt)), lit(10000))
-    df.filter(gate < (fraction * 10000).toInt)
   }
 
   /** Deterministic per-key QUOTA cap — the domain-balancing primitive:

@@ -3,32 +3,15 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-/** Skew-handling utilities for 100 TB joins/aggregations.
+/** Skew handling for 100 TB aggregations.
   *
-  * AQE's skew-join handles sort-merge skew automatically; salting is
-  * the explicit fallback for (a) hash aggregations with hot keys and
-  * (b) joins where one key dominates so badly a single post-split
-  * partition still overflows.
+  * AQE's skew-join handles sort-merge join skew automatically; salting
+  * is the explicit fallback for hash aggregations with hot keys. The
+  * salt must be deterministic per row for retry safety — derived from
+  * a stable row expression, not rand() (a task retry with rand() would
+  * re-salt differently and drop/duplicate rows).
   */
 object Skew {
-
-  /** Salted inner equi-join: the skewed (big) side gets a random salt
-    * in [0, buckets); the small side is replicated `buckets`× with
-    * every salt value. The join key becomes (key, salt) — a hot key's
-    * rows now spread over `buckets` partitions.
-    *
-    * `spark.sql.files/shuffle` determinism note: the salt must be
-    * deterministic per-row for retry safety — derived from a stable
-    * row expression, not rand() (a task retry with rand() would
-    * re-salt differently and drop/duplicate rows). */
-  def saltedJoin(big: DataFrame, small: DataFrame, key: String,
-      buckets: Int, saltBy: Column): DataFrame = {
-    val salted = big.withColumn("__salt", pmod(xxhash64(saltBy), lit(buckets)))
-    val replicated = small.withColumn("__salt",
-      explode(sequence(lit(0), lit(buckets - 1)))) // cast matches pmod output
-      .withColumn("__salt", col("__salt").cast("long"))
-    salted.join(replicated, Seq(key, "__salt")).drop("__salt")
-  }
 
   /** Two-phase (salted) aggregation for hot grouping keys: partial
     * aggregate on (key, salt), then final aggregate on key. Works for

@@ -364,9 +364,7 @@ object TrainingData {
     * fingerprint (min doc_id) — the output corpus, not a pair report. */
   def q38DedupCorpusExact(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    Tables.documents(s, dir)
-      .withColumn("fp", TextFunctions.fingerprint($"text"))
-      .groupBy($"fp").agg(min($"doc_id").as("keep_id"))
+    Dedup.exactByFingerprint(Tables.documents(s, dir))
       .select($"keep_id")
       .orderBy($"keep_id")
   }
@@ -552,8 +550,7 @@ object TrainingData {
 
   /** Deterministic hash split + stratified sample accounting. Gated on
     * the md5-derived portable bucket so DuckDB can replay the exact
-    * split (the xxhash64 fast path stays in `Sampling.hashSplit`,
-    * covered rows-only by ScalaTest). */
+    * split. */
   def q47HashSplit(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val docs = Tables.documents(s, dir)
@@ -1913,10 +1910,9 @@ object TrainingData {
       |SELECT CAST(step AS BIGINT) AS step, id AS vec_id, score
       |FROM sel ORDER BY step""".stripMargin
 
-  /** Rolling-hash document fingerprints. The driver query uses the
-    * md5-derived portable variant so DuckDB can replay the exact fold
-    * (the q47 `hashSplitPortable` play); the xxhash64 fast path stays
-    * in [[TextFunctions.rollingHash]], covered by ScalaTest. */
+  /** Rolling-hash document fingerprints in the md5-derived portable
+    * domain, so DuckDB can replay the exact fold (the q47
+    * `hashSplitPortable` play). */
   def q30RollingFingerprint(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     Tables.documents(s, dir)

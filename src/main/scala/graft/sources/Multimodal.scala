@@ -334,14 +334,6 @@ object Multimodal {
     }(enc)
   }
 
-  /** "Frame sampling": emit every `stride`-th frame index as a row —
-    * the explode-shaped transform a video pipeline needs. Pure
-    * expressions; at scale this is a generator, not a shuffle. */
-  def sampleFrames(df: DataFrame, stride: Int): DataFrame =
-    df.withColumn("frame_idx",
-      explode(sequence(lit(0), col("media_meta.n_frames") - 1,
-        lit(stride))))
-
   /** Attach a feature embedding extracted from the binary column —
     * batched per partition, declared output schema; the result feeds
     * straight into [[graft.operators.Similarity]] ANN/dedup. */
@@ -425,7 +417,7 @@ object Multimodal {
     * an audio codec). Batched per partition like every codec
     * transform; null media emits no rows (nothing to fingerprint —
     * the near-dup consumers drop them anyway). `stride` samples every
-    * stride-th frame, the [[sampleFrames]] economics: at 100 TB the
+    * stride-th frame index in [0, n_frames): at 100 TB the
     * decode is the cost, and near-dup detection rarely needs every
     * frame of a 30 fps stream. */
   def withFrameHashes(df: DataFrame, stride: Int = 1,
@@ -569,17 +561,6 @@ object Multimodal {
       maxBucket: Int = graft.operators.HotBuckets.DefaultCap): DataFrame =
     sequenceNearDupPairs(df, "audio", maxHamming, majorityPct, stride,
       idCol, binaryCol, codec, maxFrames, maxBucket)
-
-  /** "Resize": recompute metadata for a target box preserving aspect
-    * ratio — pure column arithmetic over the decoded metadata (the
-    * pixel work happens in the decode kernel at materialization). */
-  def resizeMeta(df: DataFrame, maxW: Int, maxH: Int): DataFrame = {
-    val w = col("media_meta.width").cast(DoubleType)
-    val h = col("media_meta.height").cast(DoubleType)
-    val scale = least(lit(maxW) / w, lit(maxH) / h, lit(1.0))
-    df.withColumn("resized_w", floor(w * scale).cast(IntegerType))
-      .withColumn("resized_h", floor(h * scale).cast(IntegerType))
-  }
 
   /** Build a synthetic media column from text (UTF-8 bytes) — lets the
     * plumbing be exercised against the driver's documents table. */

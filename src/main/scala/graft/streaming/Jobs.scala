@@ -71,17 +71,6 @@ object Jobs {
       .withWatermark("event_ts", watermark)
       .dropDuplicatesWithinWatermark("eventID", "lastUpdateDate")
 
-  /** Keyed dedup for duplicates that re-arrive with a DIFFERENT event
-    * time (the reference's overlapping re-polls re-stamp rows, so
-    * key+timestamp dedup would keep them): drops any later row with a
-    * seen key inside the watermark delay, state bounded by the
-    * watermark without folding event time into the key. */
-  def dedupStreamWithinWatermark(events: DataFrame,
-      watermark: String = "8 days"): DataFrame =
-    events
-      .withWatermark("event_ts", watermark)
-      .dropDuplicatesWithinWatermark("eventID")
-
   /** Windowed region analytics on the stream: events per fault line
     * per tumbling day (replaces the reference's duplicate
     * `earthquakeRawWeek` topic + batch re-aggregation pattern). */

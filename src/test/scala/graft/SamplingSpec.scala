@@ -9,25 +9,16 @@ class SamplingSpec extends SparkSpec {
   private lazy val docs = Tables.documents(spark, "/root/testdata/sf0.001")
 
   test("hashSplit: disjoint, exhaustive, and stable under repartitioning") {
-    val (train, test) = Sampling.hashSplit(docs, "doc_id", 90)
+    val (train, test) = Sampling.hashSplitPortable(docs, "doc_id", 90)
     val nTrain = train.count()
     val nTest = test.count()
     assert(nTrain + nTest === docs.count())
     assert(train.join(test, "doc_id").count() === 0) // disjoint
     assert(math.abs(nTrain.toDouble / docs.count() - 0.9) < 0.05)
     // stability: same membership regardless of partition layout
-    val (train2, _) = Sampling.hashSplit(docs.repartition(13), "doc_id", 90)
+    val (train2, _) = Sampling.hashSplitPortable(docs.repartition(13), "doc_id", 90)
     assert(train2.select("doc_id").as[Long].collect().sorted.toSeq ===
       train.select("doc_id").as[Long].collect().sorted.toSeq)
-  }
-
-  test("stratifiedSample: every stratum downsampled near the fraction") {
-    val sampled = Sampling.stratifiedSample(docs, "doc_id", "lang", 0.5)
-    val byLang = docs.groupBy($"lang").count()
-      .withColumnRenamed("count", "total")
-      .join(sampled.groupBy($"lang").count(), "lang")
-    val ratios = byLang.select(($"count" / $"total")).as[Double].collect()
-    assert(ratios.forall(r => r > 0.3 && r < 0.7), ratios.mkString(","))
   }
 
   test("quotaPerKey: caps every key at n, matches the row_number reference, " +

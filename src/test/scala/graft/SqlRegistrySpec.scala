@@ -43,13 +43,14 @@ class SqlRegistrySpec extends SparkSpec {
     val r = spark.sql(
       "SELECT word_shingles('a b c d', 2) AS sh, " +
         "jaccard_sim(array('1', '2', '3'), array('2', '3', '4')) AS j, " +
-        "simhash64(array('x', 'y')) AS s64, " +
+        "simhash96_portable(array('x', 'y')) AS s96, " +
         "minhash_sig(array('x', 'y'), 8) AS mh, " +
         "dot_product(array(CAST(1.0 AS FLOAT), CAST(2.0 AS FLOAT)), " +
         "            array(CAST(3.0 AS FLOAT), CAST(4.0 AS FLOAT))) AS d")
       .head()
     assert(r.getSeq[String](0) == Seq("a b", "b c", "c d"))
     assert(r.getDouble(1) == 0.5)
+    assert(r.getSeq[Long](2).length == 2)
     assert(r.getSeq[Long](3).length == 8)
     assert(r.getDouble(4) == 11.0)
   }

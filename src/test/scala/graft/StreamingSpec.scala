@@ -73,6 +73,31 @@ class StreamingSpec extends SparkSpec {
     } finally query.stop()
   }
 
+  test("keyed dedup restarted from its checkpoint drops a duplicate " +
+      "that crosses the restart") {
+    // the stop falls after batch 2; batch 3 re-polls event 31 under its
+    // (eventID, lastUpdateDate) key, so only the restored dedup state
+    // can drop it, and batch 4's update to event 31 must survive. The
+    // drain counts rows per key, so a kept duplicate shows as a 2.
+    val batches = Seq(
+      Seq(s"[${mkEvent(31, 10, 5.0)},${mkEvent(32, 11, 3.0)}]"),
+      Seq(s"[${mkEvent(33, 12, 4.0)}]"),
+      Seq(s"[${mkEvent(31, 10, 5.0)}]"),
+      Seq(s"[${mkEvent(31, 10, 5.1, "2023-02-06T06:00:00")}]"))
+    assertRestartDrains(batches, stopAfter = 2) { (input, dir) =>
+      Jobs.dedupStream(Jobs.eventsPipeline(
+          input.selectExpr("cast(value as binary) as value")))
+        .writeStream.format("parquet")
+        .option("path", dir.resolve("out").toString)
+        .option("checkpointLocation", dir.resolve("cp").toString)
+        .outputMode("append").start()
+    } { dir =>
+      spark.read.parquet(dir.resolve("out").toString)
+        .groupBy($"eventID", $"lastUpdateDate").count()
+        .collect().toSet
+    }
+  }
+
   test("windowed region counts aggregate on the stream") {
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[String]
@@ -93,28 +118,6 @@ class StreamingSpec extends SparkSpec {
       val r = rows.select($"n", $"max_magnitude").head()
       assert(r.getLong(0) === 3L)
       assert(r.getDouble(1) === 6.0)
-    } finally query.stop()
-  }
-
-  test("dropDuplicatesWithinWatermark: re-stamped duplicate keys collapse") {
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[String]
-    val raw = input.toDF().selectExpr("cast(value as binary) as value")
-    val out = Jobs.dedupStreamWithinWatermark(Jobs.eventsPipeline(raw))
-    val query = out.writeStream
-      .format("memory").queryName("wmdedup_out")
-      .outputMode("append")
-      .start()
-    try {
-      // same eventID re-polled with a DIFFERENT lastUpdateDate — the
-      // keyed (eventID, lastUpdateDate) dedup keeps both; within-
-      // watermark key dedup must collapse them
-      input.addData(s"[${mkEvent(7, 10, 5.0)},${mkEvent(8, 11, 3.0)}]")
-      input.addData(s"[${mkEvent(7, 10, 5.0, "2023-02-06T06:00:00")}]")
-      query.processAllAvailable()
-      assert(spark.table("wmdedup_out").count() === 2)
-      assert(spark.table("wmdedup_out")
-        .filter($"eventID" === "7").count() === 1)
     } finally query.stop()
   }
 
@@ -426,5 +429,35 @@ class StreamingSpec extends SparkSpec {
       assert(lake.columns.contains("ingest_date")) // date-partitioned lake
       assert(new String(lake.select("value").head().getAs[Array[Byte]](0)) === "payload")
     } finally q.stop()
+  }
+
+  test("lakeSource streams the raw archive back: the value and timestamp " +
+      "rows rawToParquet wrote") {
+    implicit val sqlCtx = spark.sqlContext
+    val input = MemoryStream[(Array[Byte], Array[Byte], String, Int, Long, java.sql.Timestamp, Int)]
+    val raw = input.toDF().toDF("key", "value", "topic", "partition", "offset", "timestamp", "timestampType")
+    val dir = java.nio.file.Files.createTempDirectory("lake-src").toString
+    val cp = java.nio.file.Files.createTempDirectory("cp").toString
+    val sent = Seq("m1" -> "2023-02-06 04:17:00", "m2" -> "2023-02-07 09:30:00",
+      "m3" -> "2023-02-07 10:00:00").map { case (v, ts) =>
+        (v, java.sql.Timestamp.valueOf(ts)) }
+    val archive = Jobs.rawToParquet(raw, dir, cp).start()
+    try {
+      input.addData(sent.zipWithIndex.map { case ((v, ts), i) =>
+        (Array(i.toByte), v.getBytes("UTF-8"), "earthquakeRaw", 0, i.toLong, ts, 0)
+      })
+      archive.processAllAvailable()
+    } finally archive.stop()
+    val back = Jobs.lakeSource(spark, dir).writeStream
+      .format("memory").queryName("lake_source_out")
+      .outputMode("append").start()
+    try {
+      back.processAllAvailable()
+      val got = spark.table("lake_source_out")
+        .select($"value", $"timestamp")
+        .as[(Array[Byte], java.sql.Timestamp)].collect()
+        .map { case (v, ts) => (new String(v, "UTF-8"), ts) }
+      assert(got.sortBy(_._1).toSeq === sent)
+    } finally back.stop()
   }
 }

@@ -62,13 +62,6 @@ class TextFunctionsSpec extends SparkSpec {
     assert(eq.toSeq === Seq(true, true))
   }
 
-  test("bpeishTokens splits subword boundaries") {
-    val df = Seq("hello42world!x", "plain words").toDF("text")
-    val got = df.select(TextFunctions.bpeishTokens($"text")).as[Seq[String]].collect()
-    assert(got(0) === Seq("hello", "42", "world", "!", "x"))
-    assert(got(1) === Seq("plain", "words"))
-  }
-
   test("dot_product is SQL-registered and matches the Column API") {
     graft.functions.VectorExpressions.register(spark)
     val df = Seq((Array(1.0, 2.0, 3.0), Array(4.0, 5.0, 6.0))).toDF("a", "b")
@@ -85,68 +78,77 @@ class TextFunctionsSpec extends SparkSpec {
     df.createOrReplaceTempView("texts")
     val sql = spark.sql(
       """SELECT jaccard_sim(word_shingles(a, 2), word_shingles(b, 2)) AS j,
-        |  simhash64(word_shingles(a, 2)) AS sh,
-        |  simhash48_portable(word_shingles(a, 2)) AS shp,
-        |  simhash48_portable(word_shingles(a, 2), 1) AS shp1,
-        |  simhash128(word_shingles(a, 2)) AS sh128,
+        |  simhash96_portable(word_shingles(a, 2)) AS sh96,
         |  minhash_sig(word_shingles(a, 2), 16) AS mh FROM texts""".stripMargin)
       .head()
     val api = df.select(
       TextFunctions.jaccard(
         TextFunctions.shingles($"a", 2), TextFunctions.shingles($"b", 2)).as("j"),
-      graft.functions.SignatureExpressions.simHash64(
-        TextFunctions.shingles($"a", 2)).as("sh"),
-      graft.functions.SignatureExpressions.simHash48Portable(
-        TextFunctions.shingles($"a", 2)).as("shp"),
-      graft.functions.SignatureExpressions.simHash48Portable(
-        TextFunctions.shingles($"a", 2), 1).as("shp1"),
-      graft.functions.SignatureExpressions.simHash128(
-        TextFunctions.shingles($"a", 2)).as("sh128"),
+      graft.functions.SignatureExpressions.simHash96Portable(
+        TextFunctions.shingles($"a", 2)).as("sh96"),
       graft.functions.SignatureExpressions.minHashSig(
         TextFunctions.shingles($"a", 2), 16).as("mh"))
       .head()
     assert(sql.getDouble(0) === api.getDouble(0))
-    assert(sql.getLong(1) === api.getLong(1))
-    assert(sql.getLong(2) === api.getLong(2))
-    assert(sql.getLong(3) === api.getLong(3))
-    assert(sql.getSeq[Long](4) === api.getSeq[Long](4))
-    assert(sql.getSeq[Long](5) === api.getSeq[Long](5))
-    // the two md5 halves are independent lanes, word 0 of the 128-bit
-    // fast signature is exactly the 64-bit signature
-    assert(api.getLong(2) !== api.getLong(3))
-    assert(api.getSeq[Long](4).head === api.getLong(1))
+    assert(sql.getSeq[Long](1) === api.getSeq[Long](1))
+    assert(sql.getSeq[Long](2) === api.getSeq[Long](2))
+    // the two md5 halves are independent lanes
+    val words = api.getSeq[Long](1)
+    assert(words.length === 2)
+    assert(words(0) !== words(1))
   }
 
   test("fused simhash96 words are bit-identical to the per-part kernels") {
+    import graft.functions.{SignatureKernels, SimHash96Portable}
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.BoundReference
+    import org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeProjection
+    import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+    import org.apache.spark.sql.types.{ArrayType, StringType}
+    import org.apache.spark.unsafe.types.UTF8String
     graft.functions.SignatureExpressions.register(spark)
-    val df = Seq("the quick brown fox jumps over the lazy dog", "")
+    val df = Seq("the quick brown fox jumps over the lazy dog", "", null)
       .toDF("a")
-    val rows = df.select(
+    val rows = df.select(TextFunctions.shingles($"a", 2).as("sh"),
       graft.functions.SignatureExpressions.simHash96Portable(
-        TextFunctions.shingles($"a", 2)).as("fused"),
-      graft.functions.SignatureExpressions.simHash48Portable(
-        TextFunctions.shingles($"a", 2), 0).as("w0"),
-      graft.functions.SignatureExpressions.simHash48Portable(
-        TextFunctions.shingles($"a", 2), 1).as("w1")).collect()
-    rows.foreach { r =>
-      assert(r.getSeq[Long](0) === Seq(r.getLong(1), r.getLong(2)))
+        TextFunctions.shingles($"a", 2)).as("fused")).collect()
+    def fusedOf(r: org.apache.spark.sql.Row): Seq[Long] =
+      if (r.isNullAt(1)) null else r.getSeq[Long](1)
+    // the same expression through generated code and through eval
+    val fused = SimHash96Portable(
+      BoundReference(0, ArrayType(StringType), nullable = true))
+    val generated = GenerateUnsafeProjection.generate(Seq(fused))
+    def viaCodegen(in: InternalRow): Seq[Long] = {
+      val out = generated(in)
+      if (out.isNullAt(0)) null else out.getArray(0).toLongArray.toSeq
     }
+    def viaEval(in: InternalRow): Seq[Long] = fused.eval(in) match {
+      case null => null
+      case a: ArrayData => a.toLongArray.toSeq
+    }
+    rows.foreach { r =>
+      val arr = if (r.isNullAt(0)) null else new GenericArrayData(
+        r.getSeq[String](0).map(UTF8String.fromString).toArray[Any])
+      val expected = if (arr == null) null
+        else Seq(SignatureKernels.simHash48(arr, 0),
+          SignatureKernels.simHash48(arr, 1))
+      assert(fusedOf(r) === expected)
+      val in = InternalRow(arr)
+      assert(viaCodegen(in) === expected)
+      assert(viaEval(in) === expected)
+    }
+    assert(rows.count(_.isNullAt(1)) === 1, "the null text must sign to null")
     // SQL registration round-trips the fused kernel too
     df.createOrReplaceTempView("fused_texts")
     val viaSql = spark.sql(
       "SELECT simhash96_portable(word_shingles(a, 2)) FROM fused_texts")
-      .collect().map(_.getSeq[Long](0))
-    assert(viaSql.toSeq === rows.map(_.getSeq[Long](0)).toSeq)
-    // out-of-range part fails at expression build, not per-row at exec
-    intercept[IllegalArgumentException] {
-      graft.functions.SignatureExpressions.simHash48Portable(
-        TextFunctions.shingles($"a", 2), 2)
-    }
+      .collect().map(r => if (r.isNullAt(0)) null else r.getSeq[Long](0))
+    assert(viaSql.toSeq === rows.map(fusedOf).toSeq)
   }
 
   test("rollingHash is order-sensitive and deterministic") {
     val df = Seq("a b c", "c b a", "a b c").toDF("text")
-    val h = df.select(TextFunctions.rollingHash($"text")).as[Long].collect()
+    val h = df.select(TextFunctions.rollingHashPortable($"text")).as[Long].collect()
     assert(h(0) === h(2))
     assert(h(0) !== h(1))
   }
@@ -381,15 +383,6 @@ class DedupSpec extends SparkSpec {
         Dedup.ingestBatch(spark, dir, b2, shingleSize = 5)
       }
       assert(e.getMessage.contains("shingleSize"))
-      // the DataFrame-level append helper carries the same contract:
-      // stamp preserved through the union, mismatched dial rejected
-      val appended = Dedup.appendCorpusIndex(idx, b2)
-      assert(appended.schema.find(_.name == "sh").get.metadata
-        .getLong(Dedup.ShingleSizeMetaKey) === 3L)
-      assert(appended.count() === idx.count() + b2.count())
-      intercept[IllegalArgumentException] {
-        Dedup.appendCorpusIndex(idx, b2, shingleSize = 5)
-      }
       // compaction: same rows in fewer files, stamp intact, and the
       // lifecycle keeps working against the rewritten index
       val rowsBefore = spark.read.parquet(dir)
@@ -1575,22 +1568,11 @@ class MultimodalSpec extends SparkSpec {
     assert(vec === Seq(1.0f, 0.0f, 0.0f, 0.0f))
   }
 
-  test("resize meta preserves aspect ratio within the target box") {
-    val df = Seq((1L, "x" * 500)).toDF("doc_id", "text")
-    val meta = Multimodal.withMediaMeta(Multimodal.mediaFromText(df))
-    val r = Multimodal.resizeMeta(meta, 128, 128)
-      .select($"media_meta.width", $"media_meta.height", $"resized_w", $"resized_h")
-      .as[(Int, Int, Int, Int)].head()
-    assert(r._3 <= 128 && r._4 <= 128)
-    val (ar0, ar1) = (r._1.toDouble / r._2, r._3.toDouble / r._4)
-    assert(math.abs(ar0 - ar1) / ar0 < 0.05)
-  }
-
   test("frame sampling explodes stride-spaced indices") {
     val df = Seq((1L, "some media content here")).toDF("doc_id", "text")
     val withMeta = Multimodal.withMediaMeta(Multimodal.mediaFromText(df))
     val n = withMeta.select($"media_meta.n_frames").as[Int].head()
-    val frames = Multimodal.sampleFrames(withMeta, 2)
+    val frames = Multimodal.withFrameHashes(withMeta, stride = 2)
       .select($"frame_idx").as[Int].collect()
     assert(frames.toSeq === (0 until n by 2).toSeq)
   }
@@ -1659,8 +1641,8 @@ class MultimodalSpec extends SparkSpec {
       .as[(Int, String)].head()
     assert(meta === ((3, "gif")))
     // frame sampling now walks genuine frames
-    val frames = Multimodal.sampleFrames(
-      Multimodal.withMediaMeta(df, codec = graft.sources.ImageIoCodec), 1)
+    val frames = Multimodal.withFrameHashes(df,
+        codec = graft.sources.ImageIoCodec)
       .select($"frame_idx").as[Int].collect()
     assert(frames.toSeq === Seq(0, 1, 2))
   }
