@@ -1,39 +1,52 @@
 package graft
 
-/** Dev utility: print the formatted physical plan (and optionally run)
-  * selected queries. Usage:
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.util.QueryExecutionListener
+
+/** Dev utility: dump the executed plans of selected queries. Usage:
   *   runMain graft.Explain <sfDir> <queryName> [<queryName> ...]
-  * The plan and `time` cover only the returned frame; `build` times
-  * the query's construction, where eager queries (the pipeline
-  * family's checkpointed stages) already did their work.
+  * Records `QueryExecution.executedPlan` (the final adaptive plan) of
+  * EVERY action a query runs — its eager stages first (the pipeline
+  * family's checkpoints and probes run while the query is built), then
+  * the returned frame's `collect` — and prints them on stdout as one
+  * `===== <query> =====` block per query holding one
+  * `-- action=<name>` block per action: the dump
+  * `tools/compare_plans.py` reads. `build`/`rows`/`time` go to stderr,
+  * so two dumps of one tree can be compared as they are. Each query
+  * starts from an empty cache.
   */
 object Explain {
   def main(args: Array[String]): Unit = {
     val dir = args.head
     val spark = Harness.session()
     // back to Spark's uncapped default: composed plans run far past
-    // 32 KB, and the cap would cut the formatted plan and the
-    // reused-stage count below short
+    // 32 KB, and the cap would cut the dumped plans short
     spark.conf.unset("spark.sql.maxPlanStringLength")
+    val actions =
+      new java.util.concurrent.ConcurrentLinkedQueue[(String, QueryExecution)]
+    spark.listenerManager.register(new QueryExecutionListener {
+      override def onSuccess(action: String, qe: QueryExecution,
+          durationNs: Long): Unit = actions.add(action -> qe)
+      override def onFailure(action: String, qe: QueryExecution,
+          exception: Exception): Unit = ()
+    })
     for (name <- args.tail) {
+      spark.catalog.clearCache()
       val t0 = System.nanoTime()
       val df = SparkEntry.queries(name)(spark, dir)
       val build = (System.nanoTime() - t0) / 1e9
-      println(s"===== $name =====")
-      df.explain("formatted")
       val t1 = System.nanoTime()
-      val n = df.count()
-      println(f"build=$build%.2fs rows=$n " +
+      val n = df.collect().length
+      System.err.println(f"$name build=$build%.2fs rows=$n " +
         f"time=${(System.nanoTime() - t1) / 1e9}%.2fs")
-      // the finalized adaptive plan shows which duplicate subtrees AQE
-      // actually collapsed (ReusedExchange / ReusedQueryStage);
-      // foreach(noop) finalizes the identical plan without pulling the
-      // result onto the driver
-      df.foreach(_ => ())
-      val fin = df.queryExecution.executedPlan.toString
-      val reused = fin.linesIterator.count(l =>
-        l.contains("ReusedQueryStage") || l.contains("ReusedExchange"))
-      println(s"reused_stages=$reused")
+      // the listener runs on the bus thread: drain it before printing
+      org.apache.spark.sql.GraftShims.waitForListeners(spark)
+      println(s"===== $name =====")
+      while (!actions.isEmpty) {
+        val (action, qe) = actions.poll()
+        println(s"-- action=$action")
+        println(qe.executedPlan)
+      }
     }
     spark.stop()
   }

@@ -223,7 +223,7 @@ object ScaleBench {
     // winnow_fingerprints)
     private def cut(d: DataFrame): Long =
       decontCuts.getOrElseUpdate(sideLabel,
-        d.agg(max(col("doc_id"))).head().getLong(0) / 10 + 1)
+        Tables.heldOutCut(d, 10))
     private def pqArtifacts(side: String, d: DataFrame) =
       pqIndex.getOrElseUpdate(side,
         (Similarity.kmeansCentroids(d, nCells = 16, iters = 2, dim = 64),

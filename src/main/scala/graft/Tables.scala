@@ -141,6 +141,13 @@ object Tables {
     }
   def documents(s: SparkSession, d: String): DataFrame = table(s, d, "documents")
   def embeddings(s: SparkSession, d: String): DataFrame = table(s, d, "embeddings")
+
+  /** The held-out cut of a documents frame: `max(doc_id) / parts + 1`
+    * (one Spark job). Docs below it are the held-out slice of the
+    * queries that train on the rest — a tenth for the held-out and
+    * pipeline family, half for q64's corpus/batch split. */
+  private[graft] def heldOutCut(docs: DataFrame, parts: Int): Long =
+    docs.agg(max(col("doc_id"))).head().getLong(0) / parts + 1
 }
 
 /** Shared helpers for oracle-stable arithmetic.

@@ -2,6 +2,7 @@ package graft.operators
 
 import graft.functions.TextFunctions._
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -52,11 +53,9 @@ object Dedup {
   /** Exact dedup by canonical fingerprint: keeps the lexicographically
     * first doc per group (deterministic representative). */
   def exactByFingerprint(docs: DataFrame, textCol: String = "text",
-      idCol: String = "doc_id"): DataFrame = {
-    val keyed = docs.withColumn("__fp", fingerprint(col(textCol)))
-    keyed.groupBy(col("__fp"))
+      idCol: String = "doc_id"): DataFrame =
+    docs.withColumn("__fp", fingerprint(col(textCol))).groupBy(col("__fp"))
       .agg(min(col(idCol)).as("keep_id"), count(lit(1)).as("group_size"))
-  }
 
   /** MinHash signature Column — the native single-pass kernel
     * ([[graft.functions.MinHashSig]]): one tight loop per row, 3 full
@@ -118,17 +117,21 @@ object Dedup {
   private def resolveLsh(threshold: Double, k: Int, bands: Int): (Int, Int) =
     if (k > 0 && bands > 0) (k, bands) else lshParams(threshold)
 
-  /** Slim (id, band, bucket) fan-out from (id, sig): band hashes as
-    * `bands` STATIC expressions (driver-side unroll) — higher-order
-    * functions evaluate interpreted, measured 4-20× slower on this
-    * path. Shingle arrays must NOT ride through the fan-out (bands×
-    * data blowup through the shuffle); hydrate them per candidate. */
-  private def bandedOf(sig: DataFrame, bands: Int, r: Int): DataFrame = {
+  /** Slim (id, band, bucket) fan-out of `df`'s k-long MinHash
+    * signature `sig`, split into `bands` bands of k/bands rows: band
+    * hashes as `bands` STATIC expressions (driver-side unroll) —
+    * higher-order functions evaluate interpreted, measured 4-20× slower
+    * on this path. Shingle arrays must NOT ride through the fan-out
+    * (bands× data blowup through the shuffle); hydrate them per
+    * candidate. */
+  private def bandedOf(df: DataFrame, sig: Column, k: Int, bands: Int): DataFrame = {
+    require(k % bands == 0, "k must divide into bands")
+    val r = k / bands
     val bandHashes = array((0 until bands).map { b =>
       xxhash64(concat_ws("_",
         lit(b), concat_ws(",", slice(col("sig"), b * r + 1, r))))
     }: _*)
-    sig.select(col("id"), posexplode(bandHashes))
+    df.select(col("id"), sig.as("sig")).select(col("id"), posexplode(bandHashes))
       .withColumnRenamed("pos", "band")
       .withColumnRenamed("col", "bucket")
   }
@@ -140,41 +143,52 @@ object Dedup {
     docs.select(col(idCol).as("id"), shingles(col(textCol), shingleSize).as("sh"))
       .filter(size(col("sh")) > 0)
 
-  /** MinHash LSH banding: split the k-length signature into `bands`
-    * bands of k/bands rows each; a candidate pair shares ≥1 full band.
-    * Pass (k, bands) explicitly, or let the threshold-taking operators
-    * derive them via [[lshParams]]. The band-bucket self-join is
-    * hot-bucket bounded with a star fallback
-    * ([[HotBuckets.starSelfJoinCandidates]]): a bucket with B > cap
-    * members yields B-1 representative candidates instead of B² —
-    * bounded work AND a mega-cluster of true duplicates still
-    * collapses downstream.
-    *
-    * Returns the slim (id_a, id_b) pairs PLUS the shared
-    * hydration-persisted shingle projection, so callers verify without
-    * re-shingling. The heavy arrays never touch a pair row. */
-  private def lshCandidatePairs(docs: DataFrame, idCol: String,
-      textCol: String, shingleSize: Int, k: Int, bands: Int,
-      maxBucket: Int, strict: Boolean): (DataFrame, DataFrame) = {
-    require(k % bands == 0, "k must divide into bands")
-    val r = k / bands
-    // hydration persist: the shingle projection feeds the signature
-    // pass AND the verify-side lookups — 3 recomputes at level NONE
-    // (released by the caller's scope, else LRU-evicted after the
-    // query; a few GB per million docs at the default level — size or
-    // disable via `spark.sql.defaultCacheStorageLevel`, see [[Hydration]])
-    val proj = Hydration.persist(shingled(docs, idCol, textCol, shingleSize))
-    val sig = proj.select(col("id"), minHashSignature(col("sh"), k).as("sig"))
-    // bucket self-join on the slim (id, band, bucket) set => pair ids;
-    // oversized buckets degrade to star candidates vs the bucket-min
-    // (a genuine mega-cluster still collapses downstream — a plain
-    // drop-guard would silently keep every copy of it)
-    val pairs = HotBuckets.starSelfJoinCandidates(bandedOf(sig, bands, r),
-      Seq("band", "bucket"), "id", Nil, maxBucket, "minhash_lsh", strict)
-      .select(col("id_a"), col("id_b"))
-      .dropDuplicates("id_a", "id_b")
-    (pairs, proj)
+  /** Distinct candidate pairs of a banded frame `(id, keys…,
+    * payload…)`, one row per pair: `keys ++ (id_a, payload_a…, id_b,
+    * payload_b…)`. The band self-join is hot-bucket bounded with a star
+    * fallback ([[HotBuckets.starSelfJoinCandidates]]): a bucket with
+    * B > cap members yields B-1 candidates vs the bucket-min instead of
+    * B² — bounded work, and a mega-cluster of true duplicates still
+    * collapses downstream (a plain drop-guard would silently keep every
+    * copy of it). The one candidate tail of the MinHash, incremental
+    * and SimHash pair paths; each caller verifies its candidates. */
+  private def bandPairs(banded: DataFrame, keys: Seq[String], payload: Seq[String],
+      maxBucket: Int, what: String, strict: Boolean): DataFrame =
+    HotBuckets.starSelfJoinCandidates(banded, keys, "id", payload, maxBucket,
+      what, strict).dropDuplicates("id_a", "id_b")
+
+  /** MinHash LSH pairs of a pinned shingle projection `proj` (id, sh),
+    * verified with exact Jaccard ≥ `threshold`: the k-length signature
+    * (`proj`'s own `sig` column when it carries one, else signed here)
+    * splits into `bands` bands of k/bands rows each, and a candidate
+    * shares ≥1 full band. Pass (k, bands) explicitly, or ≤ 0 to derive
+    * them via [[lshParams]]. Verification hydrates HASHED gram arrays
+    * from `proj` ([[hashedGramJaccard]]) — the heavy arrays never touch
+    * a pair row. Output: (id_a, id_b, jaccard). */
+  private def minHashPairs(proj: DataFrame, threshold: Double, k: Int,
+      bands: Int, maxBucket: Int, what: String, strict: Boolean): DataFrame = {
+    val (kk, bb) = resolveLsh(threshold, k, bands)
+    val sig =
+      if (proj.columns.contains("sig")) col("sig") else minHashSignature(col("sh"), kk)
+    hashedGramJaccard(bandPairs(bandedOf(proj, sig, kk, bb), Seq("band", "bucket"), Nil,
+      maxBucket, what, strict), "id_a", "id_b", proj, proj, threshold)
   }
+
+  /** (id, comp): the near-dup cluster minimum of each doc in `proj` —
+    * the pinned shingle projection of EXACT-KEPT docs — through
+    * [[minHashPairs]] and [[connectedComponents]]. A doc in no verified
+    * pair is its own cluster and has no row. The one cluster core of
+    * [[dedupCorpus]], [[leakageSafeSplit]] and the within-batch pass of
+    * [[dedupIncrementalIndexed]]. */
+  private def clusterMins(proj: DataFrame, threshold: Double, k: Int, bands: Int,
+      maxBucket: Int, what: String, strict: Boolean): DataFrame =
+    connectedComponents(minHashPairs(proj, threshold, k, bands, maxBucket, what, strict))
+
+  /** The rows of `docs` whose id is the min of their exact group:
+    * `keyed` is `docs` with its `__fp` fingerprint column. */
+  private def exactKept(keyed: DataFrame, docs: DataFrame, idCol: String): DataFrame =
+    docs.join(keyed.groupBy(col("__fp")).agg(min(col(idCol)).as(idCol))
+      .select(idCol), Seq(idCol), "left_semi")
 
   /** Exact Jaccard for an already-generated candidate pair set from
     * slim HASHED gram arrays — keeps the 128×-octave heap fix (r18
@@ -204,9 +218,10 @@ object Dedup {
     * 64-bit in-doc collision can only nudge one pair's set sizes by
     * one, probability ≈ grams²/2⁶⁴ per doc); pair sets verified
     * identical to both prior shapes (tools/crosscheck_lsh.py).
-    * Output: (aCol, bCol, jaccard). */
+    * Output: (aCol, bCol, jaccard), the pairs with jaccard ≥
+    * `threshold`. */
   private def hashedGramJaccard(pairs: DataFrame, aCol: String, bCol: String,
-      shA: DataFrame, shB: DataFrame): DataFrame = {
+      shA: DataFrame, shB: DataFrame, threshold: Double): DataFrame = {
     // semi-probe build sides are DISTINCT ids (≤ docs, 8 bytes each) —
     // without the distinct the probe set is pair-multiplicity-sized
     // and a 128×-amplified corpus (pairs ~ factor²) turns the
@@ -230,6 +245,7 @@ object Dedup {
       .select(col(aCol), col(bCol),
         graft.functions.SignatureExpressions
           .jaccardSimLong(col("__ha"), col("__hb")).as("jaccard"))
+      .filter(col("jaccard") >= threshold)
   }
 
   /** MinHash+LSH near-duplicate pairs, verified with exact Jaccard ≥
@@ -241,14 +257,14 @@ object Dedup {
       idCol: String = "doc_id", textCol: String = "text",
       shingleSize: Int = 3, k: Int = -1, bands: Int = -1,
       maxBucket: Int = HotBuckets.DefaultCap,
-      strict: Boolean = false): DataFrame = {
-    val (kk, bb) = resolveLsh(threshold, k, bands)
-    val (pairs, proj) = lshCandidatePairs(docs, idCol, textCol,
-      shingleSize, kk, bb, maxBucket, strict)
-    hashedGramJaccard(pairs, "id_a", "id_b", proj, proj)
-      .filter(col("jaccard") >= threshold)
-      .select(col("id_a"), col("id_b"), col("jaccard"))
-  }
+      strict: Boolean = false): DataFrame =
+    // hydration persist: the shingle projection feeds the signature
+    // pass AND both verify-side lookups — 3 recomputes at level NONE
+    // (released by the caller's scope, else LRU-evicted after the
+    // query; a few GB per million docs at the default level — size or
+    // disable via `spark.sql.defaultCacheStorageLevel`, see [[Hydration]])
+    minHashPairs(Hydration.persist(shingled(docs, idCol, textCol, shingleSize)),
+      threshold, k, bands, maxBucket, "minhash_lsh", strict)
 
   /** Contiguous chunk layout whose pigeonhole guarantee COVERS
     * `maxHamming`: `maxHamming + 1` bands, widths as equal as possible
@@ -267,14 +283,14 @@ object Dedup {
     val bands = maxHamming + 1
     require(maxHamming >= 0 && bands <= sigBits,
       s"maxHamming=$maxHamming needs ${bands} bands but the signature has only $sigBits bits")
-    val base = sigBits / bands
-    val extra = sigBits % bands
+    val (base, extra) = (sigBits / bands, sigBits % bands)
     val widths = Seq.tabulate(bands)(i => if (i < extra) base + 1 else base)
     widths.scanLeft(0)(_ + _).zip(widths) // (offset, width) per band
   }
 
-  /** The spec'd bit slice `(off, w)` of a signature held as
-    * `wordBits`-bit words (word i = bits [i·wordBits, (i+1)·wordBits)).
+  /** The [[simHashBandSpec]] chunk columns of a signature held as
+    * `wordBits`-bit words (word i = bits [i·wordBits, (i+1)·wordBits)):
+    * the spec'd bit slice `(off, w)` per band.
     * A chunk that straddles a word boundary recombines from both words;
     * unsigned shifts + the width mask make full-64-bit words safe (and
     * `w == 64` — sigBits 64, maxHamming 0 — no longer overflows the
@@ -283,24 +299,17 @@ object Dedup {
     * O(n²) cross join this module forbids). ONE helper for the batch
     * operators and [[graft.streaming.NearDup]] — the layouts cannot
     * drift apart. */
-  private[graft] def sigChunkExpr(words: Seq[Column], wordBits: Int,
-      off: Int, w: Int): Column = {
-    require(w <= 64, s"chunk width $w exceeds a long")
-    val mask = if (w == 64) lit(-1L) else lit((1L << w) - 1)
-    val i = off / wordBits
-    val r = off % wordBits
-    val lo = shiftrightunsigned(words(i), r)
-    val chunk =
-      if (r + w <= wordBits) lo
-      else lo.bitwiseOR(shiftleft(words(i + 1), wordBits - r))
-    chunk.bitwiseAND(mask)
-  }
-
-  /** All [[simHashBandSpec]] chunk columns for a multi-word signature. */
   private[graft] def sigChunkExprs(words: Seq[Column], wordBits: Int,
       sigBits: Int, maxHamming: Int): Seq[Column] =
     simHashBandSpec(sigBits, maxHamming).map { case (off, w) =>
-      sigChunkExpr(words, wordBits, off, w)
+      require(w <= 64, s"chunk width $w exceeds a long")
+      val mask = if (w == 64) lit(-1L) else lit((1L << w) - 1)
+      val (i, r) = (off / wordBits, off % wordBits)
+      val lo = shiftrightunsigned(words(i), r)
+      val chunk =
+        if (r + w <= wordBits) lo
+        else lo.bitwiseOR(shiftleft(words(i + 1), wordBits - r))
+      chunk.bitwiseAND(mask)
     }
 
   /** Signature-level SimHash pairing over a MULTI-WORD signature
@@ -337,13 +346,10 @@ object Dedup {
     // oversized buckets degrade to star candidates vs the bucket-min
     // row (signature words ride the representative struct), so a
     // mega-cluster of true near-dups still collapses downstream
-    val hamming = wordCols
-      .map(c => bit_count(col(c + "_a").bitwiseXOR(col(c + "_b"))))
-      .reduce(_ + _)
-    HotBuckets.starSelfJoinCandidates(banded,
-      Seq("band", "chunk") ++ extraKeyCols, "id",
-      wordCols, maxBucket, "simhash")
-      .dropDuplicates("id_a", "id_b")
+    val hamming = wordCols.map(c =>
+      bit_count(col(c + "_a").bitwiseXOR(col(c + "_b")))).reduce(_ + _)
+    bandPairs(banded, Seq("band", "chunk") ++ extraKeyCols, wordCols,
+        maxBucket, "simhash", strict = false)
       .withColumn("hamming", hamming.cast("long"))
       .filter(col("hamming") <= maxHamming)
       .select(col("id_a"), col("id_b"), col("hamming"))
@@ -424,8 +430,8 @@ object Dedup {
         val (ra, rb) = (find(a), find(b))
         if (ra != rb) { if (ra < rb) parent(rb) = ra else parent(ra) = rb }
       }
-      val ids = collected.flatMap(t => Seq(t._1, t._2)).distinct
-      ids.toSeq.map(id => (id, find(id))).toDF("id", "comp")
+      collected.flatMap(t => Seq(t._1, t._2)).distinct.toSeq
+        .map(id => (id, find(id))).toDF("id", "comp")
     }
   }
 
@@ -479,16 +485,14 @@ object Dedup {
       val r = e.agg(count(lit(1)), bit_xor(xxhash64(col("u"), col("v")))).head()
       (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
     }
-    val seed = Hydration.persist(
+    var edges = Hydration.persist(
       p.select(col("id_a").as("u"), col("id_b").as("v"))
         .filter(col("u") =!= col("v"))
         .distinct())
-    var edges = seed
     var sumCur = summarize(edges)
     var converged = false
     var i = 0
     while (!converged && i < maxIter) {
-      val step = smallStarStep(largeStarStep(edges))
       // localCheckpoint EVERY round (r17). The previous shape
       // (checkpoint every 3rd round, plain cache between) let the
       // lineage nest ~3 generations of self-referencing star joins,
@@ -503,7 +507,7 @@ object Dedup {
       // superseded generation is unreferenced), and keeps every
       // round's plan at fixed depth — the convergence anti-join below
       // always compares two shallow checkpoint scans.
-      val next = step.localCheckpoint()
+      val next = smallStarStep(largeStarStep(edges)).localCheckpoint()
       val sumNext = summarize(next) // materializes the round
       converged = sumNext == sumCur &&
         next.join(edges, Seq("u", "v"), "left_anti").isEmpty
@@ -555,16 +559,12 @@ object Dedup {
       shingleSize: Int = 3, k: Int = -1, bands: Int = -1,
       maxBucket: Int = HotBuckets.DefaultCap,
       strict: Boolean = false): DataFrame = {
-    val fp = docs.withColumn("__fp", fingerprint(col(textCol)))
-    val keepExact = fp.groupBy(col("__fp")).agg(min(col(idCol)).as(idCol))
-      .select(idCol)
-    val exactKept = docs.join(keepExact, Seq(idCol), "left_semi")
-    val pairs = minHashDupPairs(exactKept, jaccardThreshold, idCol, textCol,
-      shingleSize, k, bands, maxBucket, strict)
-    val comps = connectedComponents(pairs)
-    val drop = comps.filter(col("id") =!= col("comp"))
-      .select(col("id").as(idCol))
-    exactKept.join(drop, Seq(idCol), "left_anti")
+    val kept = exactKept(docs.withColumn("__fp", fingerprint(col(textCol))),
+      docs, idCol)
+    val drop = clusterMins(Hydration.persist(shingled(kept, idCol, textCol,
+        shingleSize)), jaccardThreshold, k, bands, maxBucket, "minhash_lsh", strict)
+      .filter(col("id") =!= col("comp")).select(col("id").as(idCol))
+    kept.join(drop, Seq(idCol), "left_anti")
   }
 
   /** The (id, __fp, sh) corpus index [[dedupIncrementalIndexed]]
@@ -620,8 +620,6 @@ object Dedup {
       maxBucket: Int = HotBuckets.DefaultCap): DataFrame = {
     requireShingleStamp(corpusIndex, "sh", shingleSize, "corpus index")
     val (kk, bb) = resolveLsh(jaccardThreshold, k, bands)
-    val r = kk / bb
-    val corpusPrep = corpusIndex
     // 0b. fingerprint the batch ONCE and hydrate it: the md5-canonical
     //     fingerprint (lower + regex strip + md5 over full text) is the
     //     batch's most expensive per-row projection after shingling,
@@ -634,37 +632,25 @@ object Dedup {
     val fped = Hydration.persist(
       newDocs.withColumn("__fp", fingerprint(col(textCol))))
     // 1. exact within-batch collapse (min-id survivor)
-    val keepExact = fped
-      .groupBy(col("__fp")).agg(min(col(idCol)).as(idCol))
-      .select(idCol)
-    val exactKept = fped.join(keepExact, Seq(idCol), "left_semi")
+    val kept = exactKept(fped, fped, idCol)
     // 2. ONE shingle+signature projection of the exact-kept batch,
     //    cached: it feeds the within-batch banding, both hydration
     //    joins, AND the cross pass — the round-3 review flagged the
     //    previous shape for shingling + signing the batch twice
     //    (once inside dedupCorpus, again for the cross join)
-    val proj = Hydration.persist(shingled(exactKept, idCol, textCol, shingleSize)
+    val proj = Hydration.persist(shingled(kept, idCol, textCol, shingleSize)
       .withColumn("sig", minHashSignature(col("sh"), kk)))
-    val banded = bandedOf(proj.select(col("id"), col("sig")), bb, r)
-    // 3. within-batch near-dup: banded self-join (star fallback for
-    //    oversized buckets — a batch full of one templated page must
-    //    still collapse) → hydrate from proj → exact-Jaccard verify →
-    //    connected components → cluster-min
-    val selfCands = HotBuckets.starSelfJoinCandidates(banded,
-      Seq("band", "bucket"), "id", Nil, maxBucket, "incremental_batch")
-      .select(col("id_a"), col("id_b"))
-      .dropDuplicates("id_a", "id_b")
-    val selfPairs = hashedGramJaccard(selfCands, "id_a", "id_b", proj, proj)
-      .filter(col("jaccard") >= jaccardThreshold)
-      .select(col("id_a"), col("id_b"))
-    val comps = connectedComponents(selfPairs)
-    val dropWithin = comps.filter(col("id") =!= col("comp"))
-      .select(col("id").as(idCol))
-    val newKept = exactKept.join(dropWithin, Seq(idCol), "left_anti")
+    // 3. within-batch near-dup: the shared cluster core (star fallback
+    //    for oversized buckets — a batch full of one templated page
+    //    must still collapse) → cluster-min survivors
+    val drop = clusterMins(proj, jaccardThreshold, kk, bb, maxBucket,
+        "incremental_batch", strict = false)
+      .filter(col("id") =!= col("comp")).select(col("id").as(idCol))
+    val newKept = kept.join(drop, Seq(idCol), "left_anti")
     // 4. exact cross-dedup: fingerprint anti-join against the corpus —
     //    __fp carried from the step-0b projection, not recomputed
     val afterExact = newKept
-      .join(corpusPrep.select(col("__fp")).distinct(), Seq("__fp"), "left_anti")
+      .join(corpusIndex.select(col("__fp")).distinct(), Seq("__fp"), "left_anti")
       .drop("__fp")
     // 5. near cross-dedup: ASYMMETRIC banded join (new bands × corpus
     //    bands — the corpus contributes a slim banded projection,
@@ -680,25 +666,25 @@ object Dedup {
     //    is still verified against the cluster's representative, and
     //    the bucket's cross-product contribution stays O(cap). The
     //    rep-guard runs AFTER the survivor semi-join so the new side's
-    //    representative is itself a within-batch survivor.
-    val newBanded = HotBuckets.guardRep(banded.join(
-      afterExact.select(col(idCol).as("id")), Seq("id"), "left_semi"),
-      Seq("band", "bucket"), "id", maxBucket, "incremental_batch_cross")
-    val corpusShingled = corpusPrep.filter(size(col("sh")) > 0)
+    //    representative is itself a within-batch survivor. Both guarded
+    //    sides leave their windows hash-partitioned and sorted on
+    //    (band, bucket), so the join is merge-hinted and runs in place
+    //    — [[HotBuckets.starSelfJoinCandidates]]' stable band join.
+    def side(banded: DataFrame, what: String, id: String) = HotBuckets
+      .guardRep(banded, Seq("band", "bucket"), "id", maxBucket, what)
+      .select(col("band"), col("bucket"), col("id").as(id))
+    val corpusShingled = corpusIndex.filter(size(col("sh")) > 0)
       .select(col("id"), col("sh"))
-    val corpusBanded = HotBuckets.guardRep(bandedOf(
-      corpusShingled.select(col("id"),
-        minHashSignature(col("sh"), kk).as("sig")), bb, r),
-      Seq("band", "bucket"), "id", maxBucket, "incremental_corpus")
-    val candidates = newBanded
-      .select(col("band"), col("bucket"), col("id").as("new_id"))
-      .join(corpusBanded.select(col("band"), col("bucket"), col("id").as("old_id")),
-        Seq("band", "bucket"))
+    val candidates = side(bandedOf(proj, col("sig"), kk, bb)
+        .join(afterExact.select(col(idCol).as("id")), Seq("id"), "left_semi"),
+        "incremental_batch_cross", "new_id")
+      .hint("merge")
+      .join(side(bandedOf(corpusShingled, minHashSignature(col("sh"), kk), kk, bb),
+        "incremental_corpus", "old_id"), Seq("band", "bucket"))
       .select(col("new_id"), col("old_id"))
       .dropDuplicates("new_id", "old_id")
     val dupNewIds = hashedGramJaccard(candidates, "new_id", "old_id",
-        proj, corpusShingled)
-      .filter(col("jaccard") >= jaccardThreshold)
+        proj, corpusShingled, jaccardThreshold)
       .select(col("new_id").as(idCol)).distinct()
     afterExact.join(dupNewIds, Seq(idCol), "left_anti")
   }
@@ -826,9 +812,8 @@ object Dedup {
     val epochAfter = listingEpoch()
     if (epochAfter != epochBefore) {
       fs.delete(new org.apache.hadoop.fs.Path(scratch), true)
-      val changed = (epochAfter.keySet -- epochBefore.keySet) ++
-        (epochBefore.keySet -- epochAfter.keySet) ++
-        epochBefore.keySet.filter(k => epochAfter.get(k) != epochBefore.get(k))
+      val changed = (epochBefore.keySet ++ epochAfter.keySet)
+        .filter(k => epochAfter.get(k) != epochBefore.get(k))
       throw new java.util.ConcurrentModificationException(
         s"compactCorpusIndex: $indexPath changed during compaction " +
           s"(${changed.take(5).mkString(", ")}${if (changed.size > 5) ", …" else ""}) " +
@@ -1267,28 +1252,24 @@ object Dedup {
       s"trainPct=$trainPct must be in [1, 99] — 0 or 100 is not a split")
     val withFp = Hydration.persist(
       docs.withColumn("__fp", fingerprint(col(textCol))))
-    // hydrated: withFp feeds the rep aggregate AND both joinRep sides
+    // hydrated: withFp feeds the rep aggregate AND both uses of `repped`
     // (exactReps derivation + the final label join-back) — without the
     // pin the md5-canonical fingerprint ran over the full corpus
-    // twice-plus, and fpRep's aggregate twice (r20 optimization; the
+    // twice-plus, and the rep aggregate twice (r20 optimization; the
     // [[dedupCorpus]] multi-consumer discipline)
-    val fpRep = withFp.groupBy(col("__fp"))
-      .agg(min(col(idCol)).as("__rep0"))
+    val r = withFp.groupBy(col("__fp")).agg(min(col(idCol)).as("__rep0"))
+      .withColumnRenamed("__fp", "__fp_r")
     // null-safe rep join (NULL <=> NULL matches): still a plain
     // shuffled equi-join on the fingerprint, just with NULL as one
     // more key value instead of a dropped one
-    def joinRep(df: DataFrame): DataFrame = {
-      val r = fpRep.withColumnRenamed("__fp", "__fp_r")
-      df.join(r, df("__fp") <=> r("__fp_r")).drop("__fp_r")
-    }
-    val exactReps = joinRep(withFp)
-      .filter(col(idCol) === col("__rep0"))
+    val repped = withFp.join(r, withFp("__fp") <=> r("__fp_r")).drop("__fp_r")
+    val exactReps = repped.filter(col(idCol) === col("__rep0"))
       .drop("__fp", "__rep0")
-    val pairs = minHashDupPairs(exactReps, jaccardThreshold, idCol,
-      textCol, shingleSize, maxBucket = maxBucket, strict = strict)
-    val comps = connectedComponents(pairs)
+    val comps = clusterMins(Hydration.persist(shingled(exactReps, idCol,
+        textCol, shingleSize)), jaccardThreshold, -1, -1, maxBucket,
+        "minhash_lsh", strict)
       .withColumnRenamed("id", "__rep0")
-    joinRep(withFp)
+    repped
       .join(comps, Seq("__rep0"), "left")
       .withColumn("split_rep", coalesce(col("comp"), col("__rep0")))
       .withColumn("split",
@@ -1461,8 +1442,7 @@ object Dedup {
     val occ = duplicatedWindowOccurrences(docs, n, idCol, textCol,
         canonical = false, minCount)
       .select(col("__id"), col("p"))
-    val byDoc = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("__id")).orderBy(col("p"))
+    val byDoc = Window.partitionBy(col("__id")).orderBy(col("p"))
     // gaps-and-islands: a window extends the current span iff its
     // start is within the previous window's coverage + 1 (lag is NULL
     // on the first row → otherwise-branch → new island)
@@ -1471,9 +1451,7 @@ object Dedup {
         when(col("p") - lag(col("p"), 1).over(byDoc) <= n, lit(0L))
           .otherwise(lit(1L)))
       .withColumn("__island", sum(col("__brk")).over(
-        byDoc.rowsBetween(org.apache.spark.sql.expressions.Window
-          .unboundedPreceding, org.apache.spark.sql.expressions.Window
-          .currentRow)))
+        byDoc.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
       .groupBy(col("__id"), col("__island"))
       .agg(min(col("p")).as("span_start"),
         (max(col("p")) + lit(n - 1).cast("long")).as("span_end"),

@@ -82,24 +82,9 @@ object HotBuckets {
     * (the assert rides the filter condition, so column pruning cannot
     * eliminate it). */
   def guard(df: DataFrame, keys: Seq[String], cap: Int,
-      what: String, strict: Boolean = false): DataFrame = {
-    require(cap > 0, s"hot-bucket cap must be positive, got $cap")
-    requireTag(what)
-    ensureListener(df.sparkSession)
-    val w = Window.partitionBy(keys.map(col): _*)
-    val sized = df.withColumn("__bsz", count(lit(1)).over(w))
-      .observe(s"graft_hot_buckets/$what/${seq.incrementAndGet()}",
-        sum(when(col("__bsz") > cap, lit(1L)).otherwise(lit(0L)))
-          .as("dropped_rows"),
-        max(col("__bsz")).as("max_bucket"))
-    val kept =
-      if (strict) sized.filter(assert_true(col("__bsz") <= cap,
-        concat(lit(s"hot-bucket guard '$what' (strict): bucket of "),
-          col("__bsz"), lit(s" rows exceeds cap $cap on keys "),
-          lit(keys.mkString("(", ", ", ")")))).isNull)
-      else sized.filter(col("__bsz") <= cap)
-    kept.drop("__bsz")
-  }
+      what: String, strict: Boolean = false): DataFrame =
+    bounded(sized(df, keys, None, cap, what, ""), keys, None, cap, what,
+      "guard", strict).drop("__bsz")
 
   /** Drop-guard variant for ASYMMETRIC (cross) bucket joins: buckets
     * ≤ `cap` pass through untouched; oversized buckets are reduced to
@@ -113,30 +98,9 @@ object HotBuckets {
     * the first oversized bucket instead of degrading (same contract
     * as [[guard]]'s strict mode). */
   def guardRep(df: DataFrame, keys: Seq[String], idCol: String,
-      cap: Int, what: String, strict: Boolean = false): DataFrame = {
-    require(cap > 0, s"hot-bucket cap must be positive, got $cap")
-    requireTag(what)
-    ensureListener(df.sparkSession)
-    val w = Window.partitionBy(keys.map(col): _*)
-    // one projection → ONE Window operator for both aggregates (two
-    // withColumns leave two stacked Window nodes, a second pass over
-    // every sorted partition). The metric counts OVERSIZED rows, the
-    // kept representative included — rows degraded, not lost.
-    val sized = df
-      .select(col("*"), count(lit(1)).over(w).as("__bsz"),
-        min(col(idCol)).over(w).as("__bmin"))
-      .observe(s"graft_hot_buckets_rep/$what/${seq.incrementAndGet()}",
-        sum(when(col("__bsz") > cap, lit(1L)).otherwise(lit(0L)))
-          .as("oversized_rows"),
-        max(col("__bsz")).as("max_bucket"))
-    val kept =
-      if (strict) sized.filter(assert_true(col("__bsz") <= cap,
-        concat(lit(s"hot-bucket rep guard '$what' (strict): bucket of "),
-          col("__bsz"), lit(s" rows exceeds cap $cap on keys "),
-          lit(keys.mkString("(", ", ", ")")))).isNull)
-      else sized.filter(col("__bsz") <= cap || col(idCol) === col("__bmin"))
-    kept.drop("__bsz", "__bmin")
-  }
+      cap: Int, what: String, strict: Boolean = false): DataFrame =
+    bounded(sized(df, keys, Some(idCol), cap, what, "_rep"), keys,
+      Some(idCol), cap, what, "rep guard", strict).drop("__bsz", "__bmin")
 
   /** Bucket SELF-JOIN candidate pairs with a STAR fallback instead of
     * a drop: buckets ≤ `cap` self-join exactly as a guarded join would
@@ -168,47 +132,65 @@ object HotBuckets {
     * is computed ONCE: both join sides read the SAME windowed frame,
     * so they share one exchange (AQE reuses the materialized stage —
     * the signature kernel below it runs once; the q28 plan gate
-    * asserts this). The LEFT side filters oversized buckets down to
-    * their bucket-min row ([[guardRep]] semantics); the RIGHT side is
-    * unfiltered. A small bucket then self-joins fully (`id_a < id_b`
-    * halves it as usual); an oversized bucket's only left row is the
-    * min id, so the join emits exactly its B−1 star pairs — same
-    * output as an explicit small⋃star union at two window passes
-    * instead of three. The window rides the join's own shuffle key —
-    * no extra shuffle. */
+    * asserts this). The LEFT side is [[guardRep]] over that window
+    * (oversized buckets filtered down to their bucket-min row); the
+    * RIGHT side is unfiltered. A small bucket then self-joins fully
+    * (`id_a < id_b` halves it as usual); an oversized bucket's only
+    * left row is the min id, so the join emits exactly its B−1 star
+    * pairs — same output as an explicit small⋃star union at two window
+    * passes instead of three. The window rides the join's own shuffle
+    * key, and both sides leave it hash-partitioned AND sorted on the
+    * keys, so the join is merge-hinted: it runs in place, with no
+    * exchange of its own. Unhinted, AQE broadcast one side's window
+    * output, and which side depended on size estimates that changed
+    * with whether a pinned input was materialized yet — the plan
+    * differed from run to run. */
   def starSelfJoinCandidates(df: DataFrame, keys: Seq[String],
       idCol: String, payload: Seq[String], cap: Int,
       what: String, strict: Boolean = false): DataFrame = {
+    val all = sized(df, keys, Some(idCol), cap, what, "_star")
+    def side(s: DataFrame, tag: String) = s.select(keys.map(col) ++
+      (col(idCol).as("id_" + tag) +: payload.map(c => col(c).as(c + "_" + tag))): _*)
+    side(bounded(all, keys, Some(idCol), cap, what, "star guard", strict), "a")
+      .hint("merge")
+      .join(side(all, "b"), keys)
+      .filter(col("id_a") < col("id_b"))
+  }
+
+  /** The prelude every guard shares: ONE window over the bucket keys
+    * (one projection, so both aggregates share one Window operator)
+    * adds the bucket size `__bsz` — and, with `idCol`, the bucket-min
+    * id `__bmin` — and observes the oversized rows plus the largest
+    * bucket as `graft_hot_buckets<family>/<what>/<seq>`. The
+    * drop-guard counts the rows it DROPS; the other two count
+    * OVERSIZED rows, the kept representative included — rows
+    * degraded, not lost. */
+  private def sized(df: DataFrame, keys: Seq[String], idCol: Option[String],
+      cap: Int, what: String, family: String): DataFrame = {
     require(cap > 0, s"hot-bucket cap must be positive, got $cap")
     requireTag(what)
     ensureListener(df.sparkSession)
     val w = Window.partitionBy(keys.map(col): _*)
-    // metric counts OVERSIZED rows (degraded to star candidates, the
-    // representative included) — rows bounded, not lost
-    val sized = df
-      .select(col("*"), count(lit(1)).over(w).as("__bsz"),
-        min(col(idCol)).over(w).as("__bmin"))
-      .observe(s"graft_hot_buckets_star/$what/${seq.incrementAndGet()}",
+    df.select(col("*") +: count(lit(1)).over(w).as("__bsz") +:
+        idCol.map(c => min(col(c)).over(w).as("__bmin")).toSeq: _*)
+      .observe(s"graft_hot_buckets$family/$what/${seq.incrementAndGet()}",
         sum(when(col("__bsz") > cap, lit(1L)).otherwise(lit(0L)))
-          .as("oversized_rows"),
+          .as(if (family.isEmpty) "dropped_rows" else "oversized_rows"),
         max(col("__bsz")).as("max_bucket"))
-    // strict: no bucket may exceed the cap, so the left side keeps
-    // EVERY row (full enumeration) with the assert riding the filter
-    // condition — the first oversized-bucket row raises instead of
-    // degrading to the star
-    val left =
-      if (strict) sized.filter(assert_true(col("__bsz") <= cap,
-        concat(lit(s"hot-bucket star guard '$what' (strict): bucket of "),
-          col("__bsz"), lit(s" rows exceeds cap $cap on keys "),
-          lit(keys.mkString("(", ", ", ")")))).isNull)
-      else sized
-        .filter(col("__bsz") <= cap || col(idCol) === col("__bmin"))
-    def side(s: String) = col(idCol).as("id_" + s) +:
-      payload.map(c => col(c).as(c + "_" + s))
-    left.select(keys.map(col) ++ side("a"): _*)
-      .join(sized.select(keys.map(col) ++ side("b"): _*), keys)
-      .filter(col("id_a") < col("id_b"))
   }
+
+  /** Rows of [[sized]] buckets ≤ `cap`, plus each oversized bucket's
+    * min-id row when `idCol` is given. `strict`: every row is kept
+    * and the first oversized-bucket row raises instead. */
+  private def bounded(sized: DataFrame, keys: Seq[String],
+      idCol: Option[String], cap: Int, what: String, kind: String,
+      strict: Boolean): DataFrame =
+    if (strict) sized.filter(assert_true(col("__bsz") <= cap,
+      concat(lit(s"hot-bucket $kind '$what' (strict): bucket of "),
+        col("__bsz"), lit(s" rows exceeds cap $cap on keys "),
+        lit(keys.mkString("(", ", ", ")")))).isNull)
+    else sized.filter(idCol.foldLeft(col("__bsz") <= cap)(
+      (small, id) => small || col(id) === col("__bmin")))
 
   private def ensureListener(spark: SparkSession): Unit =
     registered.ensure(spark)(new QueryExecutionListener {
@@ -216,11 +198,9 @@ object HotBuckets {
             durationNs: Long): Unit =
           qe.observedMetrics.foreach { case (name, row) =>
             if (name.startsWith("graft_hot_buckets")) {
-              val degraded = name.startsWith("graft_hot_buckets_star") ||
-                name.startsWith("graft_hot_buckets_rep")
-              val hit = row.getAs[Long](
-                if (degraded) "oversized_rows" else "dropped_rows")
-              val top = row.getAs[Long]("max_bucket")
+              // (dropped or oversized rows, largest bucket); both
+              // read 0 when the guarded frame was empty
+              val (hit, top) = (row.getAs[Long](0), row.getAs[Long](1))
               // name is "<family>/<tag>/<seq>" — retention keys on the
               // tag so only a SAME-tag completion can supersede it
               observations.record(qe.sparkSession,

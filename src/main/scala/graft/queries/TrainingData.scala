@@ -277,7 +277,7 @@ object TrainingData {
       s"(CASE WHEN SUM(CASE WHEN (($h >> $j) & 1) = 1 THEN 1 ELSE -1 END) > 0" +
         s" THEN (CAST(1 AS BIGINT) << $j) ELSE 0 END)"
     }.mkString("\n      + ")
-    // the same word/straddle split as Dedup.sigChunkExpr, over the two
+    // the same word/straddle split as Dedup.sigChunkExprs, over the two
     // 48-bit portable words
     def chunkSql(off: Int, w: Int): String = {
       val mask = (1L << w) - 1
@@ -939,7 +939,7 @@ object TrainingData {
   def q143PipelineCurated(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val docs = Tables.documents(s, dir)
-    val cut = docs.agg(max($"doc_id")).head().getLong(0) / 10 + 1
+    val cut = Tables.heldOutCut(docs, 10)
     graft.TrainingPipeline.prepare(
         docs.filter($"doc_id" >= cut),
         budget = 2048L,
@@ -1216,7 +1216,7 @@ object TrainingData {
   def q147PipelineHeldoutBand(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val docs = Tables.documents(s, dir)
-    val cut = docs.agg(max($"doc_id")).head().getLong(0) / 10 + 1
+    val cut = Tables.heldOutCut(docs, 10)
     graft.TrainingPipeline.prepare(
         docs.filter($"doc_id" >= cut),
         budget = 2048L,
@@ -1294,7 +1294,7 @@ object TrainingData {
       dir: String): DataFrame = {
     import s.implicits._
     val docs = Tables.documents(s, dir)
-    val cut = docs.agg(max($"doc_id")).head().getLong(0) / 10 + 1
+    val cut = Tables.heldOutCut(docs, 10)
     graft.TrainingPipeline.prepare(
         docs.filter($"doc_id" >= cut),
         budget = 2048L,
@@ -1538,7 +1538,7 @@ object TrainingData {
   def q156NgramNovelty(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val docs = Tables.documents(s, dir)
-    val cut = docs.agg(max($"doc_id")).head().getLong(0) / 10 + 1
+    val cut = Tables.heldOutCut(docs, 10)
     graft.operators.CorpusStats.ngramNovelty(
         docs.filter($"doc_id" >= cut), docs.filter($"doc_id" < cut),
         n = 8)
@@ -1622,7 +1622,7 @@ object TrainingData {
   def q136WinnowDecontaminate(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val docs = Tables.documents(s, dir)
-    val cut = docs.agg(max($"doc_id")).head().getLong(0) / 10 + 1
+    val cut = Tables.heldOutCut(docs, 10)
     graft.operators.Winnowing.evalOverlap(
         docs.filter($"doc_id" >= cut), docs.filter($"doc_id" < cut),
         minShared = 2)
@@ -1715,7 +1715,7 @@ object TrainingData {
   def q138HeldoutSurprisal(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val docs = Tables.documents(s, dir)
-    val cut = docs.agg(max($"doc_id")).head().getLong(0) / 10 + 1
+    val cut = Tables.heldOutCut(docs, 10)
     graft.operators.LanguageModel.bigramSurprisalHeldOut(
         docs.filter($"doc_id" < cut), docs.filter($"doc_id" >= cut))
       .orderBy($"doc_id")
@@ -1778,7 +1778,7 @@ object TrainingData {
   def q140WinnowArtifact(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val docs = Tables.documents(s, dir)
-    val cut = docs.agg(max($"doc_id")).head().getLong(0) / 10 + 1
+    val cut = Tables.heldOutCut(docs, 10)
     graft.Scratch.withTempDir(s, "graft_q140_winnowidx") { base =>
       graft.operators.Winnowing.writeFingerprintIndex(
         docs.filter($"doc_id" < cut), s"$base/idx")
@@ -1800,7 +1800,7 @@ object TrainingData {
   def q145HeldoutBand(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val docs = Tables.documents(s, dir)
-    val cut = docs.agg(max($"doc_id")).head().getLong(0) / 10 + 1
+    val cut = Tables.heldOutCut(docs, 10)
     graft.operators.LanguageModel.surprisalBandFilterHeldOut(
         docs.filter($"doc_id" < cut), docs.filter($"doc_id" >= cut),
         groupCol = "lang")
@@ -1834,7 +1834,7 @@ object TrainingData {
   def q146HeldoutReweight(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val docs = Tables.documents(s, dir)
-    val cut = docs.agg(max($"doc_id")).head().getLong(0) / 10 + 1
+    val cut = Tables.heldOutCut(docs, 10)
     graft.operators.LanguageModel.domainReweightHeldOut(
         docs.filter($"doc_id" < cut), docs.filter($"doc_id" >= cut),
         groupCol = "source", budget = 100000L, scale = 10000L)
@@ -1940,7 +1940,7 @@ object TrainingData {
   def q64IncrementalDedup(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val docs = Tables.documents(s, dir)
-    val half = docs.agg(max($"doc_id")).head().getLong(0) / 2 + 1
+    val half = Tables.heldOutCut(docs, 2)
     Dedup.dedupIncrementalIndexed(docs.filter($"doc_id" >= half),
         Hydration.persist(Dedup.buildCorpusIndex(docs.filter($"doc_id" < half))),
         jaccardThreshold = 0.5)
@@ -2748,7 +2748,7 @@ object TrainingData {
     * bit_count(xor) hamming verify. */
   val q84Sql: String = {
     val bucket = graft.operators.Sampling.portableBucketSql("doc_id", 50)
-    // the same word/straddle split as Dedup.sigChunkExpr, over the two
+    // the same word/straddle split as Dedup.sigChunkExprs, over the two
     // 32-bit perceptual-hash words
     def chunkSql(off: Int, w: Int): String = {
       val mask = (1L << w) - 1
@@ -3152,7 +3152,7 @@ object TrainingData {
   }
 
   /** Shared oracle fragment for the sequence near-dup family: the
-    * [[graft.operators.Dedup.sigChunkExpr]] word/straddle split over
+    * [[graft.operators.Dedup.sigChunkExprs]] word/straddle split over
     * two 32-bit fingerprint words, generated from the SAME
     * [[Dedup.simHashBandSpec]] that drives the Spark banding (the
     * q84/q28 discipline — one spec, two engines, no drift). */

@@ -52,4 +52,9 @@ object GraftShims {
     * string form is not a number). */
   def advisoryPartitionBytes(spark: SparkSession): Long =
     conf(spark).getConf(internal.SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES)
+
+  /** Block until the listener bus has delivered every event posted so
+    * far (`SparkContext.listenerBus` is private[spark]). */
+  def waitForListeners(spark: SparkSession): Unit =
+    spark.sparkContext.listenerBus.waitUntilEmpty(60000)
 }

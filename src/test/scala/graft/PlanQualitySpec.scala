@@ -1,9 +1,12 @@
 package graft
 
-import org.apache.spark.sql.execution.FilterExec
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.{CollectMetricsExec, FilterExec, QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, AdaptiveSparkPlanHelper, QueryStageExec}
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
 import org.apache.spark.sql.execution.window.WindowExec
-import org.apache.spark.sql.execution.joins.{BaseJoinExec, BroadcastNestedLoopJoinExec, CartesianProductExec}
+import org.apache.spark.sql.execution.joins.{BaseJoinExec, BroadcastNestedLoopJoinExec, CartesianProductExec, SortMergeJoinExec}
+import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Global plan-quality gate over EVERY driver-contract query: the
   * physical plan must contain
@@ -62,6 +65,66 @@ class PlanQualitySpec extends SparkSpec {
     val reused = plan.linesIterator.count(l =>
       l.contains("ReusedQueryStage") || l.contains("ReusedExchange"))
     assert(reused >= 1, s"no reused stage in final q28 plan:\n$plan")
+  }
+
+  test("band self-joins of q27/q39/q64 join in place: sort-merge, no " +
+      "broadcast of a hot-bucket window, pin materialized or not") {
+    // every action a query runs, its eager stages included
+    def executedPlans(q: String): Seq[SparkPlan] = {
+      val seen = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]
+      val listener = new QueryExecutionListener {
+        override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+          seen.add(qe.executedPlan)
+        override def onFailure(f: String, qe: QueryExecution,
+            e: Exception): Unit = ()
+      }
+      spark.listenerManager.register(listener)
+      try {
+        SparkEntry.queries(q)(spark, sf).collect()
+        org.apache.spark.sql.GraftShims.waitForListeners(spark)
+      } finally spark.listenerManager.unregister(listener)
+      seen.toArray(Array.empty[SparkPlan]).toSeq
+    }
+    // into adaptive stages and into the plans that filled a pin
+    def kids(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+      case s: QueryStageExec => Seq(s.plan)
+      case m: InMemoryTableScanExec => Seq(m.relation.cachedPlan)
+      case o => o.children
+    }
+    // the join nearest above each star guard's metrics node
+    def starJoins(p: SparkPlan, above: Option[SparkPlan]): Seq[SparkPlan] =
+      p match {
+        case c: CollectMetricsExec
+            if c.name.startsWith("graft_hot_buckets_star/") => above.toSeq
+        case j: BaseJoinExec => kids(j).flatMap(starJoins(_, Some(j)))
+        case o => kids(o).flatMap(starJoins(_, above))
+      }
+    // a broadcast that reaches a hot-bucket window without a join
+    // between them ships that window's output
+    def windowBroadcast(p: SparkPlan, under: Boolean): Boolean = p match {
+      case w: WindowExec if w.windowExpression.exists(_.name == "__bsz") =>
+        under || kids(w).exists(windowBroadcast(_, under))
+      case b: BroadcastExchangeExec => kids(b).exists(windowBroadcast(_, true))
+      case j: BaseJoinExec => kids(j).exists(windowBroadcast(_, false))
+      case o => kids(o).exists(windowBroadcast(_, under))
+    }
+    spark.catalog.clearCache()
+    // the first pass plans over cold pins; the second re-plans the same
+    // queries over the pins the first pass materialized
+    for (pass <- Seq("cold pins", "materialized pins");
+        q <- Seq("q27_minhash_dedup", "q39_dedup_corpus_near",
+          "q64_incremental_dedup")) {
+      val plans = executedPlans(q)
+      val joins = plans.flatMap(starJoins(_, None))
+      assert(joins.nonEmpty, s"$q ($pass): no star band join found")
+      val other = joins.filterNot(_.isInstanceOf[SortMergeJoinExec])
+      assert(other.isEmpty, s"$q ($pass): star band join is not the " +
+        s"merge-hinted sort-merge join:\n${other.take(1).mkString}")
+      assert(!plans.exists(windowBroadcast(_, false)),
+        s"$q ($pass): a hot-bucket window's output is broadcast")
+    }
+    spark.catalog.clearCache()
   }
 
   test("decontamination probes: q68 verifies gram hashes with no Bloom " +

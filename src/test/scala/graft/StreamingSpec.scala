@@ -351,6 +351,33 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
+  test("streaming near-dup restarted from its checkpoint still pairs " +
+      "near-duplicates that cross the restart") {
+    // the stop falls after batch 2: docs 1 and 3 then live only in the
+    // restored bucket state, so only that state can pair batch 3's
+    // near-duplicate of doc 1 and batch 4's copies of docs 1 and 3
+    val base = "the quick brown fox jumps over the lazy dog and then " +
+      "runs far away into the deep dark forest tonight without looking back"
+    val other = "completely different words about catalyst optimizer " +
+      "plans whole stage code generation and adaptive query execution"
+    val batches = Seq(
+      Seq((1L, base), (2L, "a short unrelated note on parquet footers")),
+      Seq((3L, other)),
+      Seq((4L, base + " extra")),
+      Seq((5L, other), (6L, base)))
+    assertRestartDrains(batches, stopAfter = 2) { (input, dir) =>
+      graft.streaming.NearDup.pairs(input.toDF("doc_id", "text"),
+          maxHamming = 12)
+        .writeStream.format("parquet")
+        .option("path", dir.resolve("out").toString)
+        .option("checkpointLocation", dir.resolve("cp").toString)
+        .outputMode("append").start()
+    } { dir =>
+      graft.streaming.NearDup.distinctPairs(
+        spark.read.parquet(dir.resolve("out").toString)).collect().toSet
+    }
+  }
+
   test("built-in session_window aggregation on the stream") {
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[String]

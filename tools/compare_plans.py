@@ -11,21 +11,15 @@ AQE stage ids, codegen stage numbers, lambda and object hashes, temp
 checkpoint paths, run ids and batch timestamps — and each plan must
 then match its counterpart line for line.
 
-One runtime choice is canonicalized: the broadcast build side of an
-inner/semi/anti hash join (BuildLeft vs BuildRight, with its
-BroadcastExchange on that side). For the band self-joins of q64 and
-q83 it flips between runs of the SAME commit, because the two sides'
-size estimates come from a cached projection that may or may not be
-materialized when AQE re-plans. Tree prefixes are stripped so that the
-exchange moving sides does not shift the rest of the tree.
+Nothing else is canonicalized: a runtime choice that differs between
+two dumps (a join strategy, a build side, an exchange) is a difference.
+Dump a tree with `sbt "runMain graft.Explain <sfDir> <query> ..."`
+(stdout, minus sbt's own `[info]`/`[success]` lines).
 
 Exit 1 when any query's plans differ (or a query or plan is missing).
 """
 import re
 import sys
-
-BROADCAST = re.compile(r'^(BroadcastExchange HashedRelationBroadcastMode|'
-                       r'BroadcastQueryStage N$)')
 
 
 def normalize(text):
@@ -58,17 +52,11 @@ def queries(path):
             plans.append([line])
         elif plans:
             plans[-1].append(line)
+    for plans in out.values():
+        for plan in plans:
+            while plan and not plan[-1].strip():
+                plan.pop()
     return out
-
-
-def canonical(plan):
-    lines = []
-    for line in plan:
-        line = re.sub(r'^[\s:+\-]*', '', line)
-        if BROADCAST.match(line):
-            continue
-        lines.append(re.sub(r'\bBuild(Left|Right)\b', 'Build?', line))
-    return lines
 
 
 def main():
@@ -80,15 +68,12 @@ def main():
             print(f'DIFF {q}: {len(b)} plans before, {len(a)} after')
             ok = False
             continue
-        bad = [i for i, (x, y) in enumerate(zip(b, a))
-               if canonical(x) != canonical(y)]
-        exact = sum(x == y for x, y in zip(b, a))
+        bad = [i for i, (x, y) in enumerate(zip(b, a)) if x != y]
         if bad:
             print(f'DIFF {q}: plan(s) {bad} differ')
             ok = False
         else:
-            print(f'SAME {q}: {len(b)} plan(s), {exact} identical as '
-                  f'printed, {len(b) - exact} up to the build side')
+            print(f'SAME {q}: {len(b)} plan(s)')
     sys.exit(0 if ok else 1)
 
 
