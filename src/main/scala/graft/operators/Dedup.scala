@@ -2,7 +2,6 @@ package graft.operators
 
 import graft.functions.TextFunctions._
 import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -53,9 +52,11 @@ object Dedup {
   /** Exact dedup by canonical fingerprint: keeps the lexicographically
     * first doc per group (deterministic representative). */
   def exactByFingerprint(docs: DataFrame, textCol: String = "text",
-      idCol: String = "doc_id"): DataFrame =
-    docs.withColumn("__fp", fingerprint(col(textCol))).groupBy(col("__fp"))
+      idCol: String = "doc_id"): DataFrame = {
+    val keyed = docs.withColumn("__fp", fingerprint(col(textCol)))
+    keyed.groupBy(col("__fp"))
       .agg(min(col(idCol)).as("keep_id"), count(lit(1)).as("group_size"))
+  }
 
   /** MinHash signature Column — the native single-pass kernel
     * ([[graft.functions.MinHashSig]]): one tight loop per row, 3 full
@@ -158,21 +159,18 @@ object Dedup {
       what, strict).dropDuplicates("id_a", "id_b")
 
   /** MinHash LSH pairs of a pinned shingle projection `proj` (id, sh),
-    * verified with exact Jaccard ≥ `threshold`: the k-length signature
-    * (`proj`'s own `sig` column when it carries one, else signed here)
-    * splits into `bands` bands of k/bands rows each, and a candidate
-    * shares ≥1 full band. Pass (k, bands) explicitly, or ≤ 0 to derive
-    * them via [[lshParams]]. Verification hydrates HASHED gram arrays
-    * from `proj` ([[hashedGramJaccard]]) — the heavy arrays never touch
-    * a pair row. Output: (id_a, id_b, jaccard). */
-  private def minHashPairs(proj: DataFrame, threshold: Double, k: Int,
-      bands: Int, maxBucket: Int, what: String, strict: Boolean): DataFrame = {
-    val (kk, bb) = resolveLsh(threshold, k, bands)
-    val sig =
-      if (proj.columns.contains("sig")) col("sig") else minHashSignature(col("sh"), kk)
-    hashedGramJaccard(bandPairs(bandedOf(proj, sig, kk, bb), Seq("band", "bucket"), Nil,
+    * verified with exact Jaccard ≥ `threshold`: `sig`, a k-long MinHash
+    * signature over `proj`'s columns, splits into `bands` bands of
+    * k/bands rows each, and a candidate shares ≥1 full band. The
+    * caller resolves (k, bands) ([[resolveLsh]]) and signs with the
+    * same k. Verification hydrates HASHED gram arrays from `proj`
+    * ([[hashedGramJaccard]]) — the heavy arrays never touch a pair
+    * row. Output: (id_a, id_b, jaccard). */
+  private def minHashPairs(proj: DataFrame, sig: Column, threshold: Double,
+      k: Int, bands: Int, maxBucket: Int, what: String,
+      strict: Boolean): DataFrame =
+    hashedGramJaccard(bandPairs(bandedOf(proj, sig, k, bands), Seq("band", "bucket"), Nil,
       maxBucket, what, strict), "id_a", "id_b", proj, proj, threshold)
-  }
 
   /** (id, comp): the near-dup cluster minimum of each doc in `proj` —
     * the pinned shingle projection of EXACT-KEPT docs — through
@@ -180,9 +178,11 @@ object Dedup {
     * pair is its own cluster and has no row. The one cluster core of
     * [[dedupCorpus]], [[leakageSafeSplit]] and the within-batch pass of
     * [[dedupIncrementalIndexed]]. */
-  private def clusterMins(proj: DataFrame, threshold: Double, k: Int, bands: Int,
-      maxBucket: Int, what: String, strict: Boolean): DataFrame =
-    connectedComponents(minHashPairs(proj, threshold, k, bands, maxBucket, what, strict))
+  private def clusterMins(proj: DataFrame, sig: Column, threshold: Double,
+      k: Int, bands: Int, maxBucket: Int, what: String,
+      strict: Boolean): DataFrame =
+    connectedComponents(minHashPairs(proj, sig, threshold, k, bands,
+      maxBucket, what, strict))
 
   /** The rows of `docs` whose id is the min of their exact group:
     * `keyed` is `docs` with its `__fp` fingerprint column. */
@@ -257,14 +257,17 @@ object Dedup {
       idCol: String = "doc_id", textCol: String = "text",
       shingleSize: Int = 3, k: Int = -1, bands: Int = -1,
       maxBucket: Int = HotBuckets.DefaultCap,
-      strict: Boolean = false): DataFrame =
+      strict: Boolean = false): DataFrame = {
+    val (kk, bb) = resolveLsh(threshold, k, bands)
     // hydration persist: the shingle projection feeds the signature
     // pass AND both verify-side lookups — 3 recomputes at level NONE
     // (released by the caller's scope, else LRU-evicted after the
     // query; a few GB per million docs at the default level — size or
     // disable via `spark.sql.defaultCacheStorageLevel`, see [[Hydration]])
     minHashPairs(Hydration.persist(shingled(docs, idCol, textCol, shingleSize)),
-      threshold, k, bands, maxBucket, "minhash_lsh", strict)
+      minHashSignature(col("sh"), kk), threshold, kk, bb, maxBucket,
+      "minhash_lsh", strict)
+  }
 
   /** Contiguous chunk layout whose pigeonhole guarantee COVERS
     * `maxHamming`: `maxHamming + 1` bands, widths as equal as possible
@@ -283,14 +286,14 @@ object Dedup {
     val bands = maxHamming + 1
     require(maxHamming >= 0 && bands <= sigBits,
       s"maxHamming=$maxHamming needs ${bands} bands but the signature has only $sigBits bits")
-    val (base, extra) = (sigBits / bands, sigBits % bands)
+    val base = sigBits / bands
+    val extra = sigBits % bands
     val widths = Seq.tabulate(bands)(i => if (i < extra) base + 1 else base)
     widths.scanLeft(0)(_ + _).zip(widths) // (offset, width) per band
   }
 
-  /** The [[simHashBandSpec]] chunk columns of a signature held as
-    * `wordBits`-bit words (word i = bits [i·wordBits, (i+1)·wordBits)):
-    * the spec'd bit slice `(off, w)` per band.
+  /** The spec'd bit slice `(off, w)` of a signature held as
+    * `wordBits`-bit words (word i = bits [i·wordBits, (i+1)·wordBits)).
     * A chunk that straddles a word boundary recombines from both words;
     * unsigned shifts + the width mask make full-64-bit words safe (and
     * `w == 64` — sigBits 64, maxHamming 0 — no longer overflows the
@@ -299,17 +302,24 @@ object Dedup {
     * O(n²) cross join this module forbids). ONE helper for the batch
     * operators and [[graft.streaming.NearDup]] — the layouts cannot
     * drift apart. */
+  private[graft] def sigChunkExpr(words: Seq[Column], wordBits: Int,
+      off: Int, w: Int): Column = {
+    require(w <= 64, s"chunk width $w exceeds a long")
+    val mask = if (w == 64) lit(-1L) else lit((1L << w) - 1)
+    val i = off / wordBits
+    val r = off % wordBits
+    val lo = shiftrightunsigned(words(i), r)
+    val chunk =
+      if (r + w <= wordBits) lo
+      else lo.bitwiseOR(shiftleft(words(i + 1), wordBits - r))
+    chunk.bitwiseAND(mask)
+  }
+
+  /** All [[simHashBandSpec]] chunk columns for a multi-word signature. */
   private[graft] def sigChunkExprs(words: Seq[Column], wordBits: Int,
       sigBits: Int, maxHamming: Int): Seq[Column] =
     simHashBandSpec(sigBits, maxHamming).map { case (off, w) =>
-      require(w <= 64, s"chunk width $w exceeds a long")
-      val mask = if (w == 64) lit(-1L) else lit((1L << w) - 1)
-      val (i, r) = (off / wordBits, off % wordBits)
-      val lo = shiftrightunsigned(words(i), r)
-      val chunk =
-        if (r + w <= wordBits) lo
-        else lo.bitwiseOR(shiftleft(words(i + 1), wordBits - r))
-      chunk.bitwiseAND(mask)
+      sigChunkExpr(words, wordBits, off, w)
     }
 
   /** Signature-level SimHash pairing over a MULTI-WORD signature
@@ -346,8 +356,9 @@ object Dedup {
     // oversized buckets degrade to star candidates vs the bucket-min
     // row (signature words ride the representative struct), so a
     // mega-cluster of true near-dups still collapses downstream
-    val hamming = wordCols.map(c =>
-      bit_count(col(c + "_a").bitwiseXOR(col(c + "_b")))).reduce(_ + _)
+    val hamming = wordCols
+      .map(c => bit_count(col(c + "_a").bitwiseXOR(col(c + "_b"))))
+      .reduce(_ + _)
     bandPairs(banded, Seq("band", "chunk") ++ extraKeyCols, wordCols,
         maxBucket, "simhash", strict = false)
       .withColumn("hamming", hamming.cast("long"))
@@ -430,8 +441,8 @@ object Dedup {
         val (ra, rb) = (find(a), find(b))
         if (ra != rb) { if (ra < rb) parent(rb) = ra else parent(ra) = rb }
       }
-      collected.flatMap(t => Seq(t._1, t._2)).distinct.toSeq
-        .map(id => (id, find(id))).toDF("id", "comp")
+      val ids = collected.flatMap(t => Seq(t._1, t._2)).distinct
+      ids.toSeq.map(id => (id, find(id))).toDF("id", "comp")
     }
   }
 
@@ -485,14 +496,16 @@ object Dedup {
       val r = e.agg(count(lit(1)), bit_xor(xxhash64(col("u"), col("v")))).head()
       (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
     }
-    var edges = Hydration.persist(
+    val seed = Hydration.persist(
       p.select(col("id_a").as("u"), col("id_b").as("v"))
         .filter(col("u") =!= col("v"))
         .distinct())
+    var edges = seed
     var sumCur = summarize(edges)
     var converged = false
     var i = 0
     while (!converged && i < maxIter) {
+      val step = smallStarStep(largeStarStep(edges))
       // localCheckpoint EVERY round (r17). The previous shape
       // (checkpoint every 3rd round, plain cache between) let the
       // lineage nest ~3 generations of self-referencing star joins,
@@ -507,7 +520,7 @@ object Dedup {
       // superseded generation is unreferenced), and keeps every
       // round's plan at fixed depth — the convergence anti-join below
       // always compares two shallow checkpoint scans.
-      val next = smallStarStep(largeStarStep(edges)).localCheckpoint()
+      val next = step.localCheckpoint()
       val sumNext = summarize(next) // materializes the round
       converged = sumNext == sumCur &&
         next.join(edges, Seq("u", "v"), "left_anti").isEmpty
@@ -559,10 +572,12 @@ object Dedup {
       shingleSize: Int = 3, k: Int = -1, bands: Int = -1,
       maxBucket: Int = HotBuckets.DefaultCap,
       strict: Boolean = false): DataFrame = {
+    val (kk, bb) = resolveLsh(jaccardThreshold, k, bands)
     val kept = exactKept(docs.withColumn("__fp", fingerprint(col(textCol))),
       docs, idCol)
     val drop = clusterMins(Hydration.persist(shingled(kept, idCol, textCol,
-        shingleSize)), jaccardThreshold, k, bands, maxBucket, "minhash_lsh", strict)
+        shingleSize)), minHashSignature(col("sh"), kk), jaccardThreshold, kk, bb,
+        maxBucket, "minhash_lsh", strict)
       .filter(col("id") =!= col("comp")).select(col("id").as(idCol))
     kept.join(drop, Seq(idCol), "left_anti")
   }
@@ -643,8 +658,8 @@ object Dedup {
     // 3. within-batch near-dup: the shared cluster core (star fallback
     //    for oversized buckets — a batch full of one templated page
     //    must still collapse) → cluster-min survivors
-    val drop = clusterMins(proj, jaccardThreshold, kk, bb, maxBucket,
-        "incremental_batch", strict = false)
+    val drop = clusterMins(proj, col("sig"), jaccardThreshold, kk, bb,
+        maxBucket, "incremental_batch", strict = false)
       .filter(col("id") =!= col("comp")).select(col("id").as(idCol))
     val newKept = kept.join(drop, Seq(idCol), "left_anti")
     // 4. exact cross-dedup: fingerprint anti-join against the corpus —
@@ -812,8 +827,9 @@ object Dedup {
     val epochAfter = listingEpoch()
     if (epochAfter != epochBefore) {
       fs.delete(new org.apache.hadoop.fs.Path(scratch), true)
-      val changed = (epochBefore.keySet ++ epochAfter.keySet)
-        .filter(k => epochAfter.get(k) != epochBefore.get(k))
+      val changed = (epochAfter.keySet -- epochBefore.keySet) ++
+        (epochBefore.keySet -- epochAfter.keySet) ++
+        epochBefore.keySet.filter(k => epochAfter.get(k) != epochBefore.get(k))
       throw new java.util.ConcurrentModificationException(
         s"compactCorpusIndex: $indexPath changed during compaction " +
           s"(${changed.take(5).mkString(", ")}${if (changed.size > 5) ", …" else ""}) " +
@@ -1265,9 +1281,10 @@ object Dedup {
     val repped = withFp.join(r, withFp("__fp") <=> r("__fp_r")).drop("__fp_r")
     val exactReps = repped.filter(col(idCol) === col("__rep0"))
       .drop("__fp", "__rep0")
+    val (kk, bb) = lshParams(jaccardThreshold)
     val comps = clusterMins(Hydration.persist(shingled(exactReps, idCol,
-        textCol, shingleSize)), jaccardThreshold, -1, -1, maxBucket,
-        "minhash_lsh", strict)
+        textCol, shingleSize)), minHashSignature(col("sh"), kk),
+        jaccardThreshold, kk, bb, maxBucket, "minhash_lsh", strict)
       .withColumnRenamed("id", "__rep0")
     repped
       .join(comps, Seq("__rep0"), "left")
@@ -1442,7 +1459,8 @@ object Dedup {
     val occ = duplicatedWindowOccurrences(docs, n, idCol, textCol,
         canonical = false, minCount)
       .select(col("__id"), col("p"))
-    val byDoc = Window.partitionBy(col("__id")).orderBy(col("p"))
+    val byDoc = org.apache.spark.sql.expressions.Window
+      .partitionBy(col("__id")).orderBy(col("p"))
     // gaps-and-islands: a window extends the current span iff its
     // start is within the previous window's coverage + 1 (lag is NULL
     // on the first row → otherwise-branch → new island)
@@ -1451,7 +1469,9 @@ object Dedup {
         when(col("p") - lag(col("p"), 1).over(byDoc) <= n, lit(0L))
           .otherwise(lit(1L)))
       .withColumn("__island", sum(col("__brk")).over(
-        byDoc.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+        byDoc.rowsBetween(org.apache.spark.sql.expressions.Window
+          .unboundedPreceding, org.apache.spark.sql.expressions.Window
+          .currentRow)))
       .groupBy(col("__id"), col("__island"))
       .agg(min(col("p")).as("span_start"),
         (max(col("p")) + lit(n - 1).cast("long")).as("span_end"),

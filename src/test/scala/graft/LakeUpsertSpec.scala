@@ -3,13 +3,12 @@ package graft
 import graft.sources.Lake
 import graft.streaming.Jobs
 import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.command.DataWritingCommandExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.util.QueryExecutionListener
 import java.nio.file.Files
 import scala.jdk.CollectionConverters._
 
@@ -421,23 +420,11 @@ class LakeUpsertSpec extends SparkSpec {
   }
 
   /** The executed plans of the write commands `body` ran. */
-  private def writePlans(body: => Unit): Seq[SparkPlan] = {
-    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
-    val listener = new QueryExecutionListener {
-      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
-        plans.add(qe.executedPlan)
-      override def onFailure(f: String, qe: QueryExecution,
-          e: Exception): Unit = ()
-    }
+  private def writePlans(body: => Unit): Seq[SparkPlan] =
     // an earlier write's callback (the test's seed) may still be queued
-    // on the same bus: drain it first, or it lands in `plans` too
-    jobsOf(())
-    spark.listenerManager.register(listener)
-    // jobsOf's sentinel drains the listener queue the callbacks ride on
-    try jobsOf(body) finally spark.listenerManager.unregister(listener)
-    plans.asScala.toSeq.filter(p =>
+    // on the same bus: executedPlans drains it before it listens
+    Explain.executedPlans(spark)(body).map(_._2).filter(p =>
       planHelper.find(p)(_.isInstanceOf[DataWritingCommandExec]).isDefined)
-  }
 
   /** Walks plans through AQE's wrapper and query stages. */
   private val planHelper = new AdaptiveSparkPlanHelper {}

@@ -1,12 +1,11 @@
 package graft
 
-import org.apache.spark.sql.execution.{CollectMetricsExec, FilterExec, QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.{CollectMetricsExec, FilterExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, AdaptiveSparkPlanHelper, QueryStageExec}
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
 import org.apache.spark.sql.execution.window.WindowExec
 import org.apache.spark.sql.execution.joins.{BaseJoinExec, BroadcastNestedLoopJoinExec, CartesianProductExec, SortMergeJoinExec}
-import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Global plan-quality gate over EVERY driver-contract query: the
   * physical plan must contain
@@ -70,21 +69,9 @@ class PlanQualitySpec extends SparkSpec {
   test("band self-joins of q27/q39/q64 join in place: sort-merge, no " +
       "broadcast of a hot-bucket window, pin materialized or not") {
     // every action a query runs, its eager stages included
-    def executedPlans(q: String): Seq[SparkPlan] = {
-      val seen = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]
-      val listener = new QueryExecutionListener {
-        override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
-          seen.add(qe.executedPlan)
-        override def onFailure(f: String, qe: QueryExecution,
-            e: Exception): Unit = ()
-      }
-      spark.listenerManager.register(listener)
-      try {
-        SparkEntry.queries(q)(spark, sf).collect()
-        org.apache.spark.sql.GraftShims.waitForListeners(spark)
-      } finally spark.listenerManager.unregister(listener)
-      seen.toArray(Array.empty[SparkPlan]).toSeq
-    }
+    def executedPlans(q: String): Seq[SparkPlan] =
+      Explain.executedPlans(spark)(SparkEntry.queries(q)(spark, sf).collect())
+        .map(_._2)
     // into adaptive stages and into the plans that filled a pin
     def kids(p: SparkPlan): Seq[SparkPlan] = p match {
       case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
